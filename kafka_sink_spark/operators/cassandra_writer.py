@@ -30,6 +30,7 @@ from ``SinkConfig`` when the ``cassandra-driver`` package is available.
 
 from __future__ import annotations
 
+from collections import deque
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
@@ -196,6 +197,15 @@ def write_routed(
     ``execute_async(stmt, params) -> future`` (``future.result()`` awaited
     under the concurrency bound) — the cassandra-driver Session API.
 
+    Only the bound columns reach Python: before the shuffle the frame is
+    narrowed to the table's columns, the mapping targets and the route /
+    TTL / writetime columns, so record metadata (``_kafka_topic``,
+    ``_kafka_offset``, ...) is neither shuffled nor converted per row.
+
+    When a request fails, every other request still in flight in that task
+    is awaited before the failure propagates, so a retried batch never
+    overlaps a failed attempt's writes.
+
     Batch runs are detected on the PARTITION key (the Cassandra routing key):
     rows sharing a partition but differing in clustering columns co-batch,
     matching the reference's W8 routing-key batching. The sort adds the
@@ -216,13 +226,13 @@ def write_routed(
         session = session_factory()
         prepared = {kind: session.prepare(cql) for kind, cql in texts.items()}
         _apply_consistency(prepared, table_ref.consistency_level)
-        futures: list = []
+        futures: deque = deque()
 
         def throttle() -> None:
             """Bound in-flight requests: await the oldest future once the
             window is full (W9 maxConcurrentRequests)."""
             while len(futures) >= max_inflight:
-                futures.pop(0).result()
+                futures.popleft().result()
 
         size_hist: dict[int, int] = {}
         bytes_hist: dict[int, int] = {}
@@ -268,27 +278,42 @@ def write_routed(
         n_rows = n_batches = n_singles = 0
         run_key = object()
         run: list[tuple[str, dict]] = []
-        for r in rows:
-            row = r.asDict()
-            key = tuple(row[c] for c in pk)
-            if key != run_key and run:
+        try:
+            for r in rows:
+                row = r.asDict()
+                key = tuple(row[c] for c in pk)
+                if key != run_key and run:
+                    b, s = submit(run)
+                    n_batches += b
+                    n_singles += s
+                    run = []
+                run_key = key
+                run.append(_route_and_params(row, table_ref, schema_ref))
+                n_rows += 1
+            if run:
                 b, s = submit(run)
                 n_batches += b
                 n_singles += s
-                run = []
-            run_key = key
-            run.append(_route_and_params(row, table_ref, schema_ref))
-            n_rows += 1
-        if run:
-            b, s = submit(run)
-            n_batches += b
-            n_singles += s
-        for fut in futures:
-            fut.result()
+            while futures:
+                futures.popleft().result()
+        except Exception:
+            # A failed write fails the task and Spark retries the batch:
+            # await every request still in flight first, so none of this
+            # attempt's writes can land after (and overwrite) the retry's.
+            while futures:
+                try:
+                    futures.popleft().result()
+                except Exception:
+                    pass  # the first failure is the one re-raised
+            raise
         yield (n_rows, n_batches, n_singles, size_hist, bytes_hist, bytes_stats)
 
+    # the columns _route_and_params reads
+    bound = [c.name for c in schema.columns] + [e.column for e in table.mapping]
+    bound += [ROUTE_COL, TTL_COL, WRITETIME_COL]
     parts = (
-        routed.repartition(*[F.col(c) for c in pk])
+        routed.select(*[c for c in dict.fromkeys(bound) if c in routed.columns])
+        .repartition(*[F.col(c) for c in pk])
         .sortWithinPartitions(*[F.col(c) for c in sort_cols])
         .rdd.mapPartitions(write_partition)
         .collect()

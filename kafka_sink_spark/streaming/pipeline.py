@@ -18,19 +18,35 @@ Reference semantics mapped (SURVEY §2.8):
 - fail-fast startup: mappings validated against table schemas BEFORE the
   stream starts (reference: SimpleEndToEndSimulacronIT.java:286-315).
 
+Single pass per micro-batch (``process_micro_batch``): each trigger runs an
+incrementalized batch job, so every Spark job and every re-scan of the batch
+is paid per trigger. The batch therefore decodes each topic once, whatever
+the number of tables fanned out from it:
+
+    decode per topic → persist → one count job → dead letters → writes
+    → release
+
+One aggregate per topic counts its rows and every table's mapping errors
+and fills the cache; the dead-letter sink and the writer read decoded rows
+from it; under ignoreErrors=None/Driver the batch raises after the counts and
+before any write; the cache is released when the batch ends, on success or
+raise. The unknown-topic count is the one other count of the batch.
+
 Scale design: foreachBatch receives a distributed DataFrame; every stage here
 is declarative (the same compile_mapping/route_writes plans as batch mode), so
 a 1000-executor cluster runs the micro-batch exactly like a batch job — no
-driver-side loops, no collect.
+driver-side loops, no collect of record data.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_sink_spark.config import SinkConfig, TableConfig, TableSchema
@@ -140,13 +156,11 @@ class SinkMetrics:
         }
 
 
-def split_mapping_errors(
-    decoded: DataFrame, table: TableConfig
-) -> tuple[DataFrame, DataFrame | None]:
-    """Separate records whose key or value failed the typed decode from the
-    healthy stream — the reference's per-record mapping error
-    (CassandraSinkTask.java:128-141: mapping errors are rewound under
-    None/Driver, skipped+counted under All).
+def mapping_error_condition(decoded: DataFrame, table: TableConfig) -> Column | None:
+    """The one definition of a mapping error: a record whose key or value
+    failed the typed decode (the reference's per-record mapping error,
+    CassandraSinkTask.java:128-141: rewound under None/Driver, skipped and
+    counted under All). ``None`` when ``table`` cannot hit one.
 
     A record errors on a side (key/value) only when the mapping addresses
     typed ``<side>.<field>`` paths AND has no whole-``<side>`` entry AND that
@@ -154,7 +168,8 @@ def split_mapping_errors(
     that projects the whole side (P4 shape, e.g. ``raw=value, kcol=value.k``)
     accepts literal mode — the literal IS the raw column's data and the
     typed fields bind as absent, matching reference mode-3 semantics
-    (MetadataCreatorTest.java:104-116).
+    (MetadataCreatorTest.java:104-116). A permissive Avro decode's corrupt
+    flag (``AVRO_CORRUPT``) is a mapping error for every table on the topic.
     """
     from kafka_sink_spark.operators.records import (
         KEY_LITERAL,
@@ -177,17 +192,48 @@ def split_mapping_errors(
 
     conds = [
         c
-        for c in (errors_on("value", VALUE_LITERAL), errors_on("key", KEY_LITERAL))
+        for c in (
+            F.col(AVRO_CORRUPT) if AVRO_CORRUPT in decoded.columns else None,
+            errors_on("value", VALUE_LITERAL),
+            errors_on("key", KEY_LITERAL),
+        )
         if c is not None
     ]
-    if not conds:
+    return functools.reduce(operator.or_, conds) if conds else None
+
+
+def split_mapping_errors(
+    decoded: DataFrame, table: TableConfig
+) -> tuple[DataFrame, DataFrame | None]:
+    """Separate the records :func:`mapping_error_condition` flags from the
+    healthy stream: ``(good, bad)``, with ``bad`` None when ``table`` cannot
+    hit a mapping error."""
+    bad_cond = mapping_error_condition(decoded, table)
+    if bad_cond is None:
         return decoded, None
-    bad_cond = conds[0]
-    for c in conds[1:]:
-        bad_cond = bad_cond | c
-    good = decoded.filter(~bad_cond)
-    bad = decoded.filter(bad_cond)
+    good = decoded.filter(~bad_cond).drop(AVRO_CORRUPT)
+    bad = decoded.filter(bad_cond).drop(AVRO_CORRUPT)
     return good, bad
+
+
+def _decode_topic(
+    records: DataFrame, config: SinkConfig, vs: object, ks: object
+) -> DataFrame:
+    """Decode one topic's records: an Avro schema JSON string selects
+    Struct/Avro mode (S1), anything else the JSON-with-literal-fallback or
+    raw decode of ``decode_records``."""
+    if isinstance(vs, str):
+        from kafka_sink_spark.sources.avro import decode_avro_records
+
+        permissive = config.ignore_errors == "All"
+        return decode_avro_records(
+            records,
+            vs,
+            key_avro_schema=ks if isinstance(ks, str) else None,
+            options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
+            corrupt_col=AVRO_CORRUPT if permissive else None,
+        )
+    return decode_records(records, value_schema=vs, key_schema=ks)
 
 
 def process_micro_batch(
@@ -200,117 +246,119 @@ def process_micro_batch(
     metrics: SinkMetrics | None = None,
     error_sink: Callable[[DataFrame, TableConfig], None] | None = None,
 ) -> dict[str, DataFrame]:
-    """One micro-batch through the full sink pipeline.
+    """One micro-batch through the full sink pipeline, in a single pass.
 
     Routes records by topic to each configured table (S3/S4 fan-in/fan-out),
     applies decode → mapping → ttl/writetime → route, then hands each table's
     routed frame to ``writer`` (or returns them keyed 'ks.table' when no
-    writer is given — the test/oracle path).
+    writer is given — the test/oracle path). The order:
 
-    Unknown-topic records are counted, not written
-    (SimpleEndToEndSimulacronIT.java:740-755). Records that fail the typed
-    decode are mapping errors: under ignoreErrors=All they are diverted to
-    ``error_sink`` (the dead-letter channel) and counted; under None/Driver
-    they fail the batch so Spark's retry rewinds the offsets — the
-    reference's failure-offset behavior (SURVEY §2.8).
+    1. unknown-topic records are counted, not written
+       (SimpleEndToEndSimulacronIT.java:740-755) — one topic-only count;
+    2. decode per topic: tables on one topic share its value/key schema, so
+       they share one decoded frame;
+    3. persist each topic's decoded frame;
+    4. one count job per topic: a single aggregate computes the topic's row
+       count and every table's mapping-error count
+       (:func:`mapping_error_condition`) and fills the cache. Under
+       ignoreErrors=None/Driver any mapping error raises here, before any
+       table is written, so Spark's retry rewinds the offsets with nothing
+       half-written — the reference's failure-offset behavior (SURVEY §2.8);
+    5. dead letters: under ignoreErrors=All each table's mapping errors are
+       counted and diverted to ``error_sink``, read from the cache;
+    6. writes: each table's good rows, read from the cache;
+    7. release: every persisted frame is unpersisted when the batch ends,
+       on success or raise.
 
     ``value_schemas``/``key_schemas`` entries select the decode mode per
     topic: a StructType means JSON-with-literal-fallback; an Avro schema
     JSON **string** means Struct/Avro mode (S1) via decode_avro_records —
     PERMISSIVE + corrupt-flagging when ignoreErrors=All (corrupt records go
     to the dead-letter channel; null-value tombstones still route as
-    deletes), FAILFAST otherwise (a corrupt record fails the batch and
-    Spark's retry rewinds the offsets).
+    deletes), FAILFAST otherwise (a corrupt record fails the count job, so
+    the batch raises before any write and Spark's retry rewinds the
+    offsets).
     """
     metrics = metrics if metrics is not None else SinkMetrics()
     value_schemas = value_schemas or {}
     key_schemas = key_schemas or {}
-    configured_topics = {t.topic for t in config.tables}
+    tables = config.tables
+    by_topic: dict[str, list[int]] = {}
+    for i, table in enumerate(tables):
+        table.validate_against(schemas[(table.keyspace, table.table)])
+        by_topic.setdefault(table.topic, []).append(i)
+    keys = [f"{t.topic}|{t.keyspace}.{t.table}" for t in tables]
 
-    unknown = batch_df.filter(~F.col("topic").isin(list(configured_topics)))
+    unknown = batch_df.filter(~F.col("topic").isin(list(by_topic)))
     metrics.failed_with_unknown_topic += unknown.count()
 
-    out: dict[str, DataFrame] = {}
-    for table in config.tables:
-        schema = schemas[(table.keyspace, table.table)]
-        table.validate_against(schema)  # fail-fast, every batch start is cheap
-        topic_records = batch_df.filter(F.col("topic") == table.topic)
-        vs = value_schemas.get(table.topic)
-        ks = key_schemas.get(table.topic)
-        key = f"{table.topic}|{table.keyspace}.{table.table}"
-        if isinstance(vs, str):  # Avro Struct mode (schema JSON string)
-            from kafka_sink_spark.sources.avro import decode_avro_records
+    cached: list[DataFrame] = []
+    try:
+        # per table, in config order: (good, bad, n_good, n_bad)
+        splits: list[tuple] = [()] * len(tables)
+        for topic, idxs in by_topic.items():
+            decoded = _decode_topic(
+                batch_df.filter(F.col("topic") == topic),
+                config,
+                value_schemas.get(topic),
+                key_schemas.get(topic),
+            ).persist()
+            cached.append(decoded)
+            conds = [mapping_error_condition(decoded, tables[i]) for i in idxs]
+            n_rows, *n_bads = decoded.agg(
+                F.count(F.lit(1)),
+                *[F.count_if(F.lit(False) if c is None else c) for c in conds],
+            ).collect()[0]
+            for i, n_bad in zip(idxs, n_bads):
+                good, bad = split_mapping_errors(decoded, tables[i])
+                splits[i] = (good, bad, n_rows - n_bad, n_bad)
 
-            permissive = config.ignore_errors == "All"
-            dec = decode_avro_records(
-                topic_records,
-                vs,
-                key_avro_schema=ks if isinstance(ks, str) else None,
-                options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
-                corrupt_col=AVRO_CORRUPT if permissive else None,
-            )
-            if permissive:
-                decoded = dec.filter(~F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
-                bad = dec.filter(F.col(AVRO_CORRUPT)).drop(AVRO_CORRUPT)
-            else:
-                decoded, bad = dec, None
-        else:
-            decoded = decode_records(topic_records, value_schema=vs, key_schema=ks)
-            decoded, bad = split_mapping_errors(decoded, table)
-        cached = None
-        if bad is not None:
-            # The decode feeds up to three actions (error count, error sink,
-            # the write) — persist it once instead of re-parsing per action.
-            cached = decoded.persist()
-            n_bad = bad.count()
-            if n_bad:
-                if config.ignore_errors == "All":
-                    metrics.bump(key, n_bad, failed=True)
-                    if error_sink is not None:
-                        error_sink(bad, table)
-                else:
-                    cached.unpersist()
-                    raise RuntimeError(
-                        f"{n_bad} record(s) failed mapping for {key} "
-                        f"(ignoreErrors={config.ignore_errors} rewinds mapping errors)"
-                    )
-        mapped = compile_mapping(decoded, table, schema)
-        timed = add_ttl_writetime(mapped, table)
-        routed = route_writes(timed, table, schema)
-        if writer is not None:
+        for table, key, (_good, bad, _n_good, n_bad) in zip(tables, keys, splits):
+            if not n_bad:
+                continue
+            if config.ignore_errors != "All":
+                raise RuntimeError(
+                    f"{n_bad} record(s) failed mapping for {key} "
+                    f"(ignoreErrors={config.ignore_errors} rewinds mapping errors)"
+                )
+            metrics.bump(key, n_bad, failed=True)
+            if error_sink is not None:
+                error_sink(bad, table)
+
+        out: dict[str, DataFrame] = {}
+        for table, key, (good, _bad, n_good, _n_bad) in zip(tables, keys, splits):
+            schema = schemas[(table.keyspace, table.table)]
+            mapped = compile_mapping(good, table, schema)
+            routed = route_writes(add_ttl_writetime(mapped, table), table, schema)
+            out[f"{table.keyspace}.{table.table}"] = routed
+            if writer is None:
+                metrics.bump(key, n_good)
+                continue
             try:
                 stats = writer(routed, table, schema)
-                # A write_routed-shaped stats dict feeds the KAF-99 batch
-                # histograms; writers returning None keep the old contract.
-                if isinstance(stats, dict):
-                    metrics.observe_write(key, stats)
-                    # NB: don't use stats.get("rows", routed.count()) —
-                    # Python evaluates the default eagerly, re-running the
-                    # batch lineage as a full count job even when the
-                    # writer already returned the row count (ADVICE r7).
-                    n = stats["rows"] if "rows" in stats else routed.count()
-                    metrics.bump(key, n)
-                else:
-                    metrics.bump(key, routed.count())
             except Exception:
-                if config.ignore_errors in ("All", "Driver"):
-                    # Divert: count as failed, keep the batch alive.  The
-                    # reference's recordCounter increments at the MAPPING
-                    # stage, so driver-failed records appear in BOTH
-                    # counters (SimpleEndToEndSimulacronIT.java:555-564:
-                    # recordCounter=5 with 3 driver failures; :430-470:
-                    # recordCounter=4 excludes only the MAPPING failure).
-                    n_routed = routed.count()
-                    metrics.bump(key, n_routed)
-                    metrics.bump(key, n_routed, failed=True)
-                else:
+                if config.ignore_errors not in ("All", "Driver"):
                     raise  # None → batch fails → Spark retries (offset rewind)
-        else:
-            metrics.bump(key, routed.count())
-        if cached is not None:
-            cached.unpersist()
-        out[f"{table.keyspace}.{table.table}"] = routed
-    return out
+                # Divert: count as failed, keep the batch alive.  The
+                # reference's recordCounter increments at the MAPPING
+                # stage, so driver-failed records appear in BOTH
+                # counters (SimpleEndToEndSimulacronIT.java:555-564:
+                # recordCounter=5 with 3 driver failures; :430-470:
+                # recordCounter=4 excludes only the MAPPING failure).
+                metrics.bump(key, n_good)
+                metrics.bump(key, n_good, failed=True)
+                continue
+            # A write_routed-shaped stats dict feeds the KAF-99 batch
+            # histograms; writers returning None keep the old contract.
+            if isinstance(stats, dict):
+                metrics.observe_write(key, stats)
+                metrics.bump(key, stats.get("rows", n_good))
+            else:
+                metrics.bump(key, n_good)
+        return out
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def start_sink_stream(

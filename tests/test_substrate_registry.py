@@ -83,10 +83,14 @@ def test_clear_all_empties_every_registered_cache():
             return [f]
         return f
 
+    # Earlier tests in the session may have filled the caches for real, so
+    # clear_all() can drop more entries than the ones planted here; what
+    # must hold is that every cache ends empty and every planted frame was
+    # released exactly once.
     for i, (_, cache) in enumerate(_caches()):
         cache[("app", "key")] = make(i)
     assert len(sizes()) == len(SUBSTRATE_CACHES)
     n = clear_all()
-    assert n == len(SUBSTRATE_CACHES)
+    assert n >= len(SUBSTRATE_CACHES)
     assert sizes() == {}
     assert all(f.unpersisted == 1 for f in frames)
