@@ -50,10 +50,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # (kafka_sink_spark/substrates.py) mean the default min-of-reps numbers are
 # warm-only — the first consumer's first rep pays each substrate build and
 # the min drops it.  SPARK_GRAFT_BENCH_COLD=1 clears every substrate memo
-# before EVERY rep, so each published number is the honest cold
-# single-query cost (substrate builds included).  Cold runs are labeled
-# ("mode": "cold") and gate against BENCH_BASELINE_COLD.json, never the
-# warm pin.  Timing methodology (noop sink, min of reps) is unchanged.
+# and the session's cached frames before EVERY rep, so each published
+# number is the honest cold single-query cost (substrate builds
+# included).  Cold runs are labeled ("mode": "cold") and gate against
+# BENCH_BASELINE_COLD.json, never the warm pin.  Timing methodology (noop
+# sink, min of reps) is unchanged.
 BENCH_COLD = os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
 
 # Sidecar output (r14 verdict ask #2): round 13's one-line JSON outgrew the

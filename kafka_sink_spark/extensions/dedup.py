@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions.text import md5_long, shingles, tokens
 from kafka_sink_spark.session import spread_small_scan
 
@@ -218,9 +219,7 @@ def minhash_dedup_pairs(
     return sim.filter(F.col("jaccard") >= threshold)
 
 
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
+@substrates.memo
 def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Cluster near-dup pairs into groups: iterative min-label propagation
     (the HashMin connected-components algorithm).
@@ -235,17 +234,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     # The label table is the dedup family's shared substrate (survivors,
     # cluster sizes/histogram, survivor quality, the composed curation
     # pipelines all consume it): memoize the CHECKPOINTED result per
-    # (session, pairs plan) the way component_rows/_EDGE_CACHE do, so one
-    # session's consumers don't each re-run the iterative loop.
-    spark = pairs.sparkSession
-    cc_key = (
-        spark.sparkContext.applicationId,
-        pairs._jdf.queryExecution().analyzed().semanticHash(),
-        max_iter,
-    )
-    cached = _CC_CACHE.get(cc_key)
-    if cached is not None:
-        return cached
+    # (session, pairs plan) the way component_rows/_copurchase_edges do, so
+    # one session's consumers don't each re-run the iterative loop.
 
     # Checkpoint both frames CO-PARTITIONED on their per-round join keys
     # (edges by dst, labels by doc_id): the label-lookup join and the
@@ -308,9 +298,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             f"connected_components did not converge in {max_iter} iterations "
             f"(component diameter exceeds max_iter) — raise max_iter"
         )
-    out = labels.select(F.col("doc_id"), F.col("lbl").alias("cluster_id"))
-    _CC_CACHE[cc_key] = out
-    return out
+    return labels.select(F.col("doc_id"), F.col("lbl").alias("cluster_id"))
 
 
 # --- simhash ---------------------------------------------------------------

@@ -22,6 +22,7 @@ import struct as _struct
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.session import spread_small_scan
 
 
@@ -369,9 +370,7 @@ def _l2sq_fixed(a: Column, b: Column) -> Column:
 # once per (session, source plan, split) so the scan+posexplode subtree
 # doesn't re-execute per consumer; at 100 TB this is the difference between
 # one corpus pass and eight.
-_COMPONENT_CACHE: dict[tuple, DataFrame] = {}
-
-
+@substrates.memo
 def component_rows(
     embeddings: DataFrame,
     m_subspaces: int = 8,
@@ -381,22 +380,10 @@ def component_rows(
 ) -> DataFrame:
     """(vid, m, comp, x) fixed-point component rows: vector index split into
     subspace ``m`` and within-subspace offset ``comp``. Persisted + memoized
-    per (session, source, split) — see _COMPONENT_CACHE."""
+    per (session, source, split) — see the comment above."""
     from pyspark import StorageLevel
 
-    spark = embeddings.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        embeddings._jdf.queryExecution().analyzed().semanticHash(),
-        m_subspaces,
-        sub_len,
-        id_col,
-        vec_col,
-    )
-    cached = _COMPONENT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = (
+    return (
         embeddings.select(
             F.col(id_col).alias("vid"),
             F.posexplode(F.col(vec_col)).alias("i", "_x"),
@@ -418,8 +405,6 @@ def component_rows(
         .repartition("vid")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _COMPONENT_CACHE[key] = out
-    return out
 
 
 def _pq_distances(comp: DataFrame, cent: DataFrame) -> DataFrame:
@@ -451,11 +436,9 @@ def _pq_argmin(dists: DataFrame) -> DataFrame:
 # IVF-PQ index all train the identical (full-dim comp, K=8, 2-round) coarse
 # quantizer) — memoize per (session, component plan, K, iterations) so the
 # training rounds run once per session, the same substrate discipline as
-# _COMPONENT_CACHE/_IVFPQ_INDEX_CACHE. The fit is a pure function of its key
+# component_rows/_ivfpq_index. The fit is a pure function of its key
 # (seeded init, integer arithmetic), so sharing cannot change any result.
-_LLOYD_CACHE: dict[tuple, DataFrame] = {}
-
-
+@substrates.memo
 def lloyd_codebook(
     comp: DataFrame, k_codewords: int = 16, iterations: int = 2
 ) -> DataFrame:
@@ -472,19 +455,9 @@ def lloyd_codebook(
     composed index like IVF-PQ that reads it 4×) reuse the materialized
     rows instead of re-executing the whole training lineage per branch;
     the finished fit is additionally memoized per (session, comp plan,
-    K, iterations) — see _LLOYD_CACHE."""
+    K, iterations) — see the comment above."""
     from pyspark import StorageLevel
 
-    spark = comp.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        comp._jdf.queryExecution().analyzed().semanticHash(),
-        k_codewords,
-        iterations,
-    )
-    cached = _LLOYD_CACHE.get(key)
-    if cached is not None:
-        return cached
     cent = comp.filter(F.col("vid") < k_codewords).select(
         "m", F.col("vid").cast("int").alias("j"), "comp", F.col("x").alias("c")
     )
@@ -497,7 +470,6 @@ def lloyd_codebook(
             .select("m", "j", "comp", F.expr("s div cnt").alias("c"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-    _LLOYD_CACHE[key] = cent
     return cent
 
 
@@ -506,9 +478,7 @@ def lloyd_codebook(
 # RVQ stage-1 encode, SemDeDup's cell table — and each previously re-ran the
 # broadcast-join + partial-sum aggregation from the cached component rows.
 # Persist + memoize it next to the fit it belongs to (corpus × K rows).
-_TRAINED_DIST_CACHE: dict[tuple, DataFrame] = {}
-
-
+@substrates.memo
 def trained_distances(
     comp: DataFrame, k_codewords: int, iterations: int
 ) -> DataFrame:
@@ -518,20 +488,8 @@ def trained_distances(
     own memo. Same rows as _pq_distances(comp, lloyd_codebook(comp, ...))."""
     from pyspark import StorageLevel
 
-    spark = comp.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        comp._jdf.queryExecution().analyzed().semanticHash(),
-        k_codewords,
-        iterations,
-    )
-    cached = _TRAINED_DIST_CACHE.get(key)
-    if cached is not None:
-        return cached
     cent = lloyd_codebook(comp, k_codewords, iterations)
-    out = _pq_distances(comp, cent).persist(StorageLevel.MEMORY_AND_DISK)
-    _TRAINED_DIST_CACHE[key] = out
-    return out
+    return _pq_distances(comp, cent).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def knn_pq_trained(
@@ -742,9 +700,7 @@ def knn_pq(
 # hyperparameters): at 100 TB the index build is exactly what a production
 # deployment amortizes across every query batch against it (the claim the
 # docs_hybrid_rrf_indexed docstring already makes).
-_IVFPQ_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
+@substrates.memo
 def _ivfpq_index(
     embeddings: DataFrame,
     n_centroids: int,
@@ -762,21 +718,6 @@ def _ivfpq_index(
     ADC/ranking path (step 4) to the caller."""
     from pyspark import StorageLevel
 
-    spark = embeddings.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        embeddings._jdf.queryExecution().analyzed().semanticHash(),
-        n_centroids,
-        m_subspaces,
-        k_codewords,
-        dim,
-        coarse_iterations,
-        pq_iterations,
-        vec_col,
-    )
-    cached = _IVFPQ_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
     sub_len = dim // m_subspaces
     comp1 = component_rows(embeddings, 1, dim, vec_col=vec_col)
     coarse = lloyd_codebook(comp1, n_centroids, coarse_iterations)
@@ -820,9 +761,7 @@ def _ivfpq_index(
     codes = _pq_argmin(_pq_distances(res, pq_cent)).select(
         F.col("vid").alias("neighbor_id"), "m", F.col("j").alias("j")
     )
-    out = (comp1, coarse, cdists, cells, pq_cent, codes)
-    _IVFPQ_INDEX_CACHE[key] = out
-    return out
+    return (comp1, coarse, cdists, cells, pq_cent, codes)
 
 
 def knn_ivf_pq(

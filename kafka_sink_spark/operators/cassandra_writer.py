@@ -46,11 +46,18 @@ from kafka_sink_spark.operators.writes import (
     WRITETIME_COL,
 )
 
-# Driver UNSET sentinel: the real one when available, a stable stand-in
-# otherwise (fakes/tests compare identity).
+# The optional driver, looked up once: with it, BATCH frames are driver
+# BatchStatements and consistency levels driver enums; without it both go
+# to the session's hooks (the fake/test interface). UNSET is the driver's
+# sentinel when available, a stable stand-in otherwise (fakes/tests compare
+# identity).
 try:  # pragma: no cover - depends on optional package
+    from cassandra import ConsistencyLevel  # type: ignore
     from cassandra.query import UNSET_VALUE as UNSET  # type: ignore
+    from cassandra.query import BatchStatement, BatchType  # type: ignore
 except ImportError:  # pragma: no cover
+    ConsistencyLevel = BatchStatement = BatchType = None
+
     class _Unset:
         def __repr__(self) -> str:
             return "UNSET"
@@ -62,9 +69,8 @@ def statement_texts(table: TableConfig, schema: TableSchema) -> dict[str, str]:
     """The prepared-statement texts for each route (W1/W2/W4/W3/W5) —
     delegates to the single template builder in operators.writes so the
     executed statements can never drift from the oracle-verified ``cql``
-    column. Adds ``insert_plain`` (no USING TIMESTAMP) for records without a
-    writetime: binding null to a USING TIMESTAMP variable is a server error.
-    """
+    column (the ``insert_plain*`` variants for rows without a writetime
+    come from there too)."""
     from kafka_sink_spark.operators.writes import cql_templates
 
     return cql_templates(table, schema)
@@ -115,31 +121,26 @@ def _submit_batch(session, stmts: list, consistency_level: str, counter: bool):
     logged/unlogged batches). Uses the real driver's BatchStatement when the
     package is present; otherwise delegates to the session's
     ``execute_batch`` hook (the fake/test interface)."""
-    try:  # pragma: no cover - needs optional package
-        from cassandra import ConsistencyLevel  # type: ignore
-        from cassandra.query import BatchStatement, BatchType  # type: ignore
-
-        batch = BatchStatement(
-            batch_type=BatchType.COUNTER if counter else BatchType.UNLOGGED,
-            consistency_level=getattr(ConsistencyLevel, consistency_level),
-        )
-        for prep, params in stmts:
-            batch.add(prep, params)
-        return session.execute_async(batch)
-    except ImportError:
+    if BatchStatement is None:
         return session.execute_batch(stmts, consistency_level=consistency_level)
+    batch = BatchStatement(  # pragma: no cover - needs optional package
+        batch_type=BatchType.COUNTER if counter else BatchType.UNLOGGED,
+        consistency_level=getattr(ConsistencyLevel, consistency_level),
+    )
+    for prep, params in stmts:
+        batch.add(prep, params)
+    return session.execute_async(batch)
 
 
 def _apply_consistency(prepared: dict, consistency_level: str) -> None:
     """W7 for SINGLE executes: the driver applies a PreparedStatement's
     consistency_level to every statement bound from it. Guarded setattr —
     test fakes may return plain strings from prepare()."""
-    try:  # pragma: no cover - needs optional package
-        from cassandra import ConsistencyLevel  # type: ignore
-
-        cl = getattr(ConsistencyLevel, consistency_level)
-    except ImportError:
-        cl = consistency_level
+    cl = (
+        consistency_level
+        if ConsistencyLevel is None
+        else getattr(ConsistencyLevel, consistency_level)
+    )
     for stmt in prepared.values():
         try:
             stmt.consistency_level = cl

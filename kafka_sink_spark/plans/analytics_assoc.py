@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions.dedup import shingle_hashes
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.plans.stream_twin import finish_stream_twin
@@ -53,9 +54,8 @@ from kafka_sink_spark.session import load_tables
 
 _PP_T_PPM = 500_000  # Jaccard threshold 0.5
 
-_SH_CACHE: dict = {}
 
-
+@substrates.memo
 def _distinct_shingles(spark, sf_dir: str):
     """Distinct (doc_id, shingle-hash) postings, persisted and reused: the
     PPJoin plan consumes this table FOUR times (sizes, document
@@ -65,17 +65,12 @@ def _distinct_shingles(spark, sf_dir: str):
     the span-dup family (VERDICT r5)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     sh = (
         shingle_hashes(docs, "text")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SH_CACHE[key] = sh
     return sh
 
 

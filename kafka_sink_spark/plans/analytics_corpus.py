@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import dedup, similarity, text
 from kafka_sink_spark.plans.analytics_quality import _GOPHER, _GOPHER_ORACLE
 from kafka_sink_spark.plans.analytics_training import _ivf_pq_ctes
@@ -280,11 +281,9 @@ _BIGRAM_SQL = """
 
 # The bigram table feeds BOTH docs_dsir_weights and docs_lm_predictability
 # (and their composition in pipeline_curation_v2) — memoize the persisted
-# result per (session, source plan) like similarity._COMPONENT_CACHE, so a
+# result per (session, source plan) like similarity.component_rows, so a
 # composed run tokenizes the corpus once, not once per consumer.
-_BIGRAM_CACHE: dict = {}
-
-
+@substrates.memo
 def _doc_bigrams(docs):
     """(doc_id, w1, w2) — one row per adjacent whitespace-token pair,
     PERSISTED and memoized per (session, source plan). transform over the
@@ -292,14 +291,6 @@ def _doc_bigrams(docs):
     the only fan-out."""
     from pyspark import StorageLevel
 
-    spark = docs.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        docs._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    cached = _BIGRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
     t = text.tokens(F.col("text"))
     pairs = F.expr(
         "transform(sequence(1, size(_t) - 1), "
@@ -312,7 +303,6 @@ def _doc_bigrams(docs):
         .select("doc_id", F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BIGRAM_CACHE[key] = out
     return out
 
 
@@ -367,12 +357,10 @@ def _dsir_oracle(buckets: int = _DSIR_BUCKETS) -> str:
 
 # The (doc, feature) count table + the ≤_DSIR_BUCKETS-row ratio table are
 # the DSIR model fit — consumed by docs_dsir_weights, docs_dsir_ess and any
-# composition.  Memoized per (session, docs plan) like _BIGRAM_CACHE so the
+# composition.  Memoized per (session, docs plan) like _doc_bigrams so the
 # feature build + marginal/target aggregations run once per session; the
 # per-doc scoring join + aggregate stay live per call.
-_DSIR_CACHE: dict = {}
-
-
+@substrates.memo
 def _dsir_substrate(docs):
     """(per_doc, ratios) — PERSISTED and memoized per (session, docs plan).
 
@@ -382,14 +370,6 @@ def _dsir_substrate(docs):
     compute exactly once and score every shard against."""
     from pyspark import StorageLevel
 
-    spark = docs.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        docs._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    cached = _DSIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     per_doc = (
         _doc_bigrams(docs)
         .select(
@@ -428,7 +408,6 @@ def _dsir_substrate(docs):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _DSIR_CACHE[key] = (per_doc, ratios)
     return per_doc, ratios
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import curation, sketch, text
 from kafka_sink_spark.operators.ranges import range_join_bucketed
 from kafka_sink_spark.operators.temporal import asof_join
@@ -550,8 +551,9 @@ def contamination_overlap(spark, sf_dir):
 # web-pipeline funnel queries.  Before this cache each consumer re-ran the
 # explode+distinct from the raw scan (and each query's plan contained it
 # twice: once for the train/probe side, once for the bench side).  House
-# substrate discipline (cf. _EXCISION_CACHE, corpus._BIGRAM_CACHE): built
-# once per (session, sf_dir), persisted MEMORY_AND_DISK.
+# substrate discipline (cf. sanitize._excision_per_doc,
+# corpus._doc_bigrams): built once per (session, sf_dir), persisted
+# MEMORY_AND_DISK.
 #
 # Partitioning is deliberate (guide §2.4 — two operations keyed the same
 # way share one exchange): the explode output is hash-repartitioned by
@@ -560,16 +562,10 @@ def contamination_overlap(spark, sf_dir):
 # bench-side DF window (PARTITION BY shingle) and both chains' probe-side
 # join requirement on ``shingle`` — so the big corpus side crosses the wire
 # exactly once at substrate build and never again.
-_SHINGLE_CACHE: dict = {}
-
-
+@substrates.memo
 def _doc_shingles(spark, sf_dir):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     nm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     sh = (
@@ -588,7 +584,6 @@ def _doc_shingles(spark, sf_dir):
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SHINGLE_CACHE[key] = sh
     return sh
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions.similarity import as_double, cosine
 from kafka_sink_spark.plans.analytics import _dot_sql, _norm_sql
 from kafka_sink_spark.plans.queries import register
@@ -470,9 +471,7 @@ docs_hybrid_rrf.__doc__ = docs_hybrid_rrf.__doc__.format(
 # the rows that survive the posting explode (docs holding ≥1 query term)
 # are the inverted index's serving payload; re-deriving them per consumer
 # re-runs the corpus pass the index exists to amortize.
-_BM25_POSTING_CACHE: dict = {}
-
-
+@substrates.memo
 def _bm25_posting_scored(spark, sf_dir):
     """BM25 scores via the inverted-list access pattern: only documents
     holding at least one query term ever enter the scoring join (the
@@ -481,13 +480,9 @@ def _bm25_posting_scored(spark, sf_dir):
     1-row broadcast index metadata.  Values are identical to
     _bm25_scored rows with n_terms > 0 (same formula, same fixed-point
     ladder), which is what the shared ``sc`` oracle chain certifies.
-    Persisted + memoized per (session, sf_dir) — see _BM25_POSTING_CACHE."""
+    Persisted + memoized per (session, sf_dir) — see the comment above."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BM25_POSTING_CACHE.get(key)
-    if cached is not None:
-        return cached
     from kafka_sink_spark.extensions import text
     from kafka_sink_spark.plans.analytics_readability import _SPARK_LOG2
     from kafka_sink_spark.plans.analytics_retrieval import (
@@ -561,7 +556,6 @@ def _bm25_posting_scored(spark, sf_dir):
         .select("doc_id", F.expr(score).alias("score"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BM25_POSTING_CACHE[key] = out
     return out
 
 

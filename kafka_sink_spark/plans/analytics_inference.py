@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.plans.analytics_mining import _copurchase_edges
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.plans.stream_twin import finish_stream_twin
@@ -221,28 +222,17 @@ _LP_ITERS = 3
 # The 3-round LP label table is the community family's shared substrate
 # (parts_label_propagation's readout AND parts_modularity's three scoring
 # consumers): memoize the CHECKPOINTED result per (session, edge plan) the
-# way connected_components/_EDGE_CACHE do, so one session's consumers
+# way connected_components/_copurchase_edges do, so one session's consumers
 # don't each re-run the iterative loop (guide §1.2: remove repeated
 # passes before tuning inside one).
-_LP_CACHE: dict[tuple, object] = {}
-
-
+@substrates.memo
 def _lp_labels(e):
     """3-round deterministic synchronous label propagation over the
     directed-symmetric edge table ``e(src, dst)``: every node starts
     labeled with itself; each round adopts the most frequent neighbor
     label with min-label tie-break.  Shared by the community readout
     and the modularity scorer; checkpointed + memoized per (session,
-    edge plan) — see _LP_CACHE."""
-    spark = e.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        e._jdf.queryExecution().analyzed().semanticHash(),
-        _LP_ITERS,
-    )
-    cached = _LP_CACHE.get(key)
-    if cached is not None:
-        return cached
+    edge plan) — see the comment above."""
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -274,7 +264,6 @@ def _lp_labels(e):
     # O(nodes) rows: cut the 3-round lineage once so every consumer reads
     # the materialized label table instead of re-running the loop.
     labels = labels.localCheckpoint(eager=True)
-    _LP_CACHE[key] = labels
     return labels
 
 
@@ -405,7 +394,7 @@ def parts_modularity(spark, sf_dir):
     """
     e = _copurchase_edges(spark, sf_dir)
     # three consumers (degree rollup + both edge-endpoint joins) read the
-    # checkpointed shared label substrate (_LP_CACHE) — the loop runs once
+    # checkpointed shared label substrate (_lp_labels) — the loop runs once
     # per session, not once per consumer
     labels = _lp_labels(e)
     deg = e.groupBy(F.col("src").alias("node")).agg(

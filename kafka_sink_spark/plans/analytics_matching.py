@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.plans.analytics_mining import _copurchase_edges
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.session import load_tables
@@ -46,9 +47,8 @@ from kafka_sink_spark.session import load_tables
 # Triangle counting with degree-ordered orientation
 # --------------------------------------------------------------------------
 
-_ORIENT_CACHE: dict = {}
 
-
+@substrates.memo
 def _oriented_edges(spark, sf_dir: str):
     """Degree-ordered orientation of the co-purchase graph, persisted and
     reused: the triangle plan consumes it THREE times (both wedge sides
@@ -57,10 +57,6 @@ def _oriented_edges(spark, sf_dir: str):
     discipline the span-dup family uses (VERDICT r5)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ORIENT_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
     o = (
@@ -73,7 +69,6 @@ def _oriented_edges(spark, sf_dir: str):
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _ORIENT_CACHE[key] = o
     return o
 
 
@@ -82,21 +77,15 @@ def _oriented_edges(spark, sf_dir: str):
 # parts_graph_cohesion (the transitivity/avg-lcc rollup) both enumerate
 # the SAME wedge join + closure semi-join + 3-way explode.  Memoize the
 # persisted (part_key, tri) table per (session, sf_dir) — node-bounded
-# rows, same discipline as _ORIENT_CACHE — so the O(m^1.5) wedge pass
+# rows, same discipline as _oriented_edges — so the O(m^1.5) wedge pass
 # runs once per session instead of once per consumer (guide §1.2).
-_TRIANGLE_CACHE: dict = {}
-
-
+@substrates.memo
 def _node_triangles(spark, sf_dir: str):
     """(part_key, tri): exact per-node triangle incidence counts via the
     degree-ordered orientation (each triangle counted from its lowest
     (degree, id) vertex, exploded to all three corners)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRIANGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     o = _oriented_edges(spark, sf_dir)
     w = (
         o.alias("x")
@@ -118,7 +107,6 @@ def _node_triangles(spark, sf_dir: str):
         .agg(F.count("*").cast("long").alias("tri"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _TRIANGLE_CACHE[key] = pt
     return pt
 
 

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import text
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.session import load_tables
@@ -331,17 +332,11 @@ _PR_BASE = 150_000  # (1-d) * SCALE with d = 0.85
 # persist — the iteration's rank⋈edges join and deg's groupBy(src) both
 # reuse the cached src-partitioning (no edge-side Exchange per iteration;
 # only the small rank table and the map-side-combined sums move).  Same
-# shared-frontier discipline as the span-dup family's _SPAN_HASH_CACHE.
-_EDGE_CACHE: dict[tuple[str, str], "object"] = {}
-
-
+# shared-frontier discipline as the span-dup family's _span_doc_hashes.
+@substrates.memo
 def _copurchase_edges(spark, sf_dir: str):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"].select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     )
@@ -354,7 +349,6 @@ def _copurchase_edges(spark, sf_dir: str):
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _EDGE_CACHE[key] = e
     return e
 
 
@@ -419,19 +413,13 @@ def parts_copurchase_pagerank(spark, sf_dir):
 # each rank table (one row per node — O(nodes), the same class as the
 # edge substrate) makes branch k a join of two cached node-sized frames,
 # and lets the pagerank readout reuse the same build.  Keyed like
-# _EDGE_CACHE; arithmetic is unchanged, so the hash-pinned results are
+# _copurchase_edges; arithmetic is unchanged, so the hash-pinned results are
 # bit-identical.
-_RANK_CACHE: dict[tuple[str, str], list] = {}
-
-
+@substrates.memo
 def _pr_rank_ladder(spark, sf_dir: str) -> list:
     """[r0, r1, ..., r_PR_ITERS] — each a persisted (node, r) frame."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RANK_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = _copurchase_edges(spark, sf_dir)
     nodes = e.select(F.col("src").alias("node")).distinct().persist(
         StorageLevel.MEMORY_AND_DISK
@@ -460,5 +448,4 @@ def _pr_rank_ladder(spark, sf_dir: str) -> list:
             ).alias("r"),
         )
         ladder.append(nxt.persist(StorageLevel.MEMORY_AND_DISK))
-    _RANK_CACHE[key] = ladder
     return ladder

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.session import load_tables
 
@@ -128,7 +129,7 @@ def parts_graph_cohesion(spark, sf_dir):
 
     e = _copurchase_edges(spark, sf_dir)
     deg = e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
-    # shared persisted per-node triangle substrate (_TRIANGLE_CACHE):
+    # shared persisted per-node triangle substrate (_node_triangles):
     # the wedge+closure enumeration runs once per session, not per query
     pt = _node_triangles(spark, sf_dir)
     node_lcc = deg.join(
@@ -176,9 +177,8 @@ def parts_graph_cohesion(spark, sf_dir):
 _RA_TOPK = 50
 _RA_MIN_SUPPORT = 2
 
-_SUPPORT_CACHE: dict = {}
 
-
+@substrates.memo
 def _support_edges(spark, sf_dir: str, min_support: int = _RA_MIN_SUPPORT):
     """Support-pruned co-purchase edges (directed, both orientations),
     persisted and cached per session: pairs co-purchased >= min_support
@@ -188,10 +188,6 @@ def _support_edges(spark, sf_dir: str, min_support: int = _RA_MIN_SUPPORT):
     Shared by parts_link_prediction and parts_jaccard_similarity."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, min_support)
-    cached = _SUPPORT_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"].select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     )
@@ -206,7 +202,6 @@ def _support_edges(spark, sf_dir: str, min_support: int = _RA_MIN_SUPPORT):
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SUPPORT_CACHE[key] = e
     return e
 
 _RA_ORACLE = f"""

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import dedup, similarity, text
 from kafka_sink_spark.plans.analytics import _minhash_pairs_oracle
 from kafka_sink_spark.plans.queries import register
@@ -414,16 +415,10 @@ _SPAN_N = 8
 # consumer; at 100 TB that's the dominant cost run 4×. Persist it once per
 # (session, sf_dir) — MEMORY_AND_DISK so a huge frontier spills instead of
 # OOMing an executor.
-_SPAN_HASH_CACHE: dict[tuple[str, str, int], "DataFrame"] = {}
-
-
+@substrates.memo
 def _span_doc_hashes(spark, sf_dir: str, n: int = _SPAN_N):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    cached = _SPAN_HASH_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     staged = docs.select(F.col("doc_id"), text.tokens(F.col("text")).alias("_t"))
     spans = staged.select(
@@ -435,7 +430,6 @@ def _span_doc_hashes(spark, sf_dir: str, n: int = _SPAN_N):
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _SPAN_HASH_CACHE[key] = h
     return h
 
 

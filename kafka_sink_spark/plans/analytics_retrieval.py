@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import text
 from kafka_sink_spark.plans.analytics_readability import _DUCK_LOG2, _SPARK_LOG2
 from kafka_sink_spark.plans.queries import register
@@ -134,20 +135,14 @@ def _bm25_oracle() -> str:
 # three consumers, each of which would otherwise re-run the tokenize +
 # per-term tf corpus pass. Persist + memoize per (session, sf_dir), same
 # discipline as _kn_scored/_cls_scored.
-_BM25_SCORED_CACHE: dict = {}
-
-
+@substrates.memo
 def _bm25_scored(spark, sf_dir):
     """(doc_id, dl, score, n_terms) BM25 scores per document — the Spark
     twin of the ``_bm25_sc_ctes`` oracle chain, shared by the top-k query
     and the hybrid-RRF fusion.  Persisted + memoized per (session, sf_dir)
-    — see _BM25_SCORED_CACHE."""
+    — see the comment above."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BM25_SCORED_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     staged = docs.select("doc_id", text.tokens(F.col("text")).alias("_t"))
 
@@ -206,7 +201,6 @@ def _bm25_scored(spark, sf_dir):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BM25_SCORED_CACHE[key] = out
     return out
 
 

@@ -41,7 +41,8 @@ table).
 Scale shapes are all linear in Σ tokens: explode → 60-bit-hash shuffles →
 hash-keyed joins back; nothing all-pairs, nothing collected.  The per-doc
 excision frame is persisted once per (session, sf_dir) and shared by its
-two consumers (house substrate discipline, cf. ``_SPAN_HASH_CACHE``).
+two consumers (house substrate discipline, cf.
+``analytics_quality._span_doc_hashes``).
 
 Reference parity note: the reference sink (datastax/kafka-sink) has no
 analytics surface; this module is part of the training-data extension
@@ -53,6 +54,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import text
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.session import load_tables, spread_small_scan
@@ -85,18 +87,12 @@ _CLS_BIAS_MICRO = 1_000_000_000  # the -1000-weight center, in micro units
 # Shared per-doc excision frame: consumed by docs_span_excision and
 # docs_excision_length_dist.  Persisted once per (session, sf_dir) so the
 # tokenize→shingle→dup-join subplan runs once, not once per consumer.
-_EXCISION_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+@substrates.memo
 def _excision_per_doc(spark, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_tokens, n_removed_tokens, removed_chars,
     kept_chars) — one row per document with >= 1 token."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EXCISION_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     staged = docs.select(
         "doc_id", "source", text.tokens(F.col("text")).alias("_t")
@@ -171,7 +167,6 @@ def _excision_per_doc(spark, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _EXCISION_CACHE[key] = per
     return per
 
 
@@ -302,20 +297,14 @@ docs_excision_length_dist.__doc__ = docs_excision_length_dist.__doc__.format(
 
 
 # Shared per-doc line-dedup frame: consumed by docs_line_dedup and
-# docs_sanitize_pipeline (same substrate discipline as _EXCISION_CACHE).
-_LINE_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+# docs_sanitize_pipeline (same substrate discipline as _excision_per_doc).
+@substrates.memo
 def _line_per_doc(spark, sf_dir: str) -> DataFrame:
     """(doc_id, n_lines, n_removed_lines, kept_chars, removed_chars) under
     the first-occurrence-kept rule (see docs_line_dedup)."""
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LINE_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     staged = docs.select("doc_id", text.tokens(F.col("text")).alias("_t"))
     nseg = F.expr(f"CAST((size(_t) + {_LINE_W - 1}) div {_LINE_W} AS INT)")
@@ -358,7 +347,6 @@ def _line_per_doc(spark, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _LINE_CACHE[key] = per
     return per
 
 
@@ -470,19 +458,13 @@ _CLS_CTES = f"""
 # composed web-funnel queries — memoize the persisted per-doc scores per
 # (session, sf_dir) so the hashed-feature explode+rollup runs once per
 # session, not once per consumer (house substrate discipline, cf.
-# _EXCISION_CACHE/_LINE_CACHE above).
-_CLS_SCORED_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+# _excision_per_doc/_line_per_doc above).
+@substrates.memo
 def _cls_scored(spark, sf_dir) -> DataFrame:
     """(doc_id, source, n_feats, score_micro) — the classifier pass.
-    Persisted + memoized per (session, sf_dir) — see _CLS_SCORED_CACHE."""
+    Persisted + memoized per (session, sf_dir) — see the comment above."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLS_SCORED_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     staged = spread_small_scan(docs, spark).select(
         "doc_id", "source", text.tokens(F.col("text")).alias("_t")
@@ -515,7 +497,6 @@ def _cls_scored(spark, sf_dir) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _CLS_SCORED_CACHE[key] = scored
     return scored
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import text
 from kafka_sink_spark.plans.queries import register
 from kafka_sink_spark.session import load_tables
@@ -47,16 +48,10 @@ _PI_VSCALE = 1000  # rescaled eigenvector components live in [-1000, 1000]
 # iteration; build once per (session, sf_dir), pre-partitioned by vec_id so
 # the per-vector dot product reuses the cached partitioning and the w-step
 # join needs no x-side Exchange.
-_XQ_CACHE: dict[tuple[str, str], "object"] = {}
-
-
+@substrates.memo
 def _embedding_triples(spark, sf_dir: str):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _XQ_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     x = (
         emb.select(
@@ -72,7 +67,6 @@ def _embedding_triples(spark, sf_dir: str):
         .repartition("vec_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _XQ_CACHE[key] = x
     return x
 
 

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kafka_sink_spark import substrates
 from kafka_sink_spark.extensions import text
 from kafka_sink_spark.extensions.web import canonicalize_url
 from kafka_sink_spark.plans.analytics_corpus import _doc_bigrams
@@ -425,21 +426,15 @@ def _kn_nll_oracle() -> str:
 # order-gain comparison, the per-doc screen and both composed web-funnel
 # queries) each re-ran the KN train/score chain: memoize the persisted
 # per-doc scores per (session, sf_dir) — house substrate discipline, cf.
-# _DOC_TRIGRAM_CACHE below and corpus._BIGRAM_CACHE.
-_KN_SCORED_CACHE: dict = {}
-
-
+# _doc_trigrams below and corpus._doc_bigrams.
+@substrates.memo
 def _kn_scored(spark, sf_dir):
     """(doc_id, n_bg, nll_sum) over held-out docs — the Spark twin of the
     ``perdoc`` oracle CTE, shared by the per-source NLL report and the
     per-doc perplexity filter.  Persisted + memoized per (session,
-    sf_dir) — see _KN_SCORED_CACHE."""
+    sf_dir) — see the comment above."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KN_SCORED_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     bg = _doc_bigrams(docs)
     tr = (
@@ -475,7 +470,6 @@ def _kn_scored(spark, sf_dir):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _KN_SCORED_CACHE[key] = scored
     return scored
 
 
@@ -803,22 +797,12 @@ def _kn3_oracle() -> str:
     """
 
 
-_DOC_TRIGRAM_CACHE: dict = {}
-
-
+@substrates.memo
 def _doc_trigrams(docs):
     """(doc_id, w1, w2, w3) — adjacent token triples, persisted per
     (session, source plan) like _doc_bigrams."""
     from pyspark import StorageLevel
 
-    spark = docs.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        docs._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    cached = _DOC_TRIGRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
     t = text.tokens(F.col("text"))
     triples = F.expr(
         "transform(sequence(1, size(_t) - 2), "
@@ -837,7 +821,6 @@ def _doc_trigrams(docs):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _DOC_TRIGRAM_CACHE[key] = out
     return out
 
 

@@ -610,34 +610,28 @@ def sink_now_timeuuid_invariants(spark, sf_dir):
     columns of one row always differ (fresh per column per row), and all
     2·n generated values are globally unique. The oracle predicts each
     counter as the row count."""
-    from pyspark import StorageLevel
-
     from kafka_sink_spark.functions.timeuuid import is_timeuuid
 
-    # The Arrow timeuuid generation (the query's whole cost) feeds BOTH
-    # aggregation branches (per-row counters + the cross-column distinct);
-    # persist so the ArrowEvalPython pass executes once, not once per branch
-    # (guide §7.2 / r14 verdict ask #7).  Freshness invariants are
-    # per-materialization, so sharing one materialization cannot change the
-    # counters.
-    out = QUERIES["sink_now_timeuuid"](spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # One aggregate over the 2·n exploded values, so the Arrow timeuuid
+    # generation (the query's whole cost) runs once with nothing cached.
+    # The per-row flags ride through the explode; counting them on pos == 0
+    # only counts each row once.  Global uniqueness is a distinct count over
+    # BOTH columns (a per-column distinct would miss a cross-column,
+    # cross-row collision).
+    out = QUERIES["sink_now_timeuuid"](spark, sf_dir)
     both_v1 = is_timeuuid(F.col("loaded_at")) & is_timeuuid(F.col("loaded_at2"))
-    per_row = out.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(both_v1, 1).otherwise(0)).cast("bigint").alias("n_valid_v1"),
-        F.sum(F.when(F.col("loaded_at") != F.col("loaded_at2"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_fresh_per_column"),
+    vals = out.select(
+        both_v1.alias("_v1"),
+        (F.col("loaded_at") != F.col("loaded_at2")).alias("_fresh"),
+        F.posexplode(F.array("loaded_at", "loaded_at2")).alias("_pos", "u"),
     )
-    # Global uniqueness across BOTH columns (a per-column distinct count
-    # would miss a cross-column, cross-row collision).
-    uniq = (
-        out.select(F.explode(F.array("loaded_at", "loaded_at2")).alias("u"))
-        .agg(F.count_distinct("u").cast("bigint").alias("n_unique_total"))
+    first = F.col("_pos") == 0
+    return vals.agg(
+        F.count(F.when(first, 1)).alias("n_rows"),
+        F.count(F.when(first & F.col("_v1"), 1)).alias("n_valid_v1"),
+        F.count(F.when(first & F.col("_fresh"), 1)).alias("n_fresh_per_column"),
+        F.count_distinct("u").cast("bigint").alias("n_unique_total"),
     )
-    return per_row.crossJoin(uniq)
 
 
 @register(

@@ -1,82 +1,101 @@
-"""Central registry of the session-scoped substrate memo caches.
+"""Session-scoped memo for the catalog's shared substrates.
 
-Every entry is a module-level dict that memoizes a *materialized* shared
-substrate (persisted or checkpointed DataFrames, or tuples/lists of them)
-per (applicationId, input-plan, hyperparameters) key.  The memos exist so
-that K consumers of the same corpus pass pay for ONE build per session —
-the architecturally right shape at scale — but they also mean a
-min-of-reps benchmark only ever publishes *warm* per-query numbers (the
-first rep of the first consumer pays the build; the min drops it).
+A substrate is a materialized intermediate — a persisted or checkpointed
+DataFrame, or a tuple/list of them — that several queries of one session
+read: the BM25 scored table, the IVF-PQ index, the co-purchase edges, the
+connected-components labels.  Handing every consumer the frames the first
+one built means a composed run pays one corpus pass per substrate, not one
+per consumer.
 
-This registry makes that accounting auditable (r14 verdict ask #1):
+``@memo`` on the builder is the whole mechanism.  The key is the builder
+plus its bound arguments, defaults applied (so positional and keyword calls
+share one entry):
 
-- ``clear_all()`` drops every memo entry and unpersists the cached frames,
-  so ``SPARK_GRAFT_BENCH_COLD=1`` bench runs re-pay every substrate build
-  inside every rep — the honest cold single-query cost.
-- ``sizes()`` reports how many entries each cache holds, so a bench run
-  can publish which substrates were actually materialized.
+- a ``SparkSession`` stands for its ``applicationId``;
+- a ``DataFrame`` stands for its session's ``applicationId`` plus the
+  semantic hash of its analyzed plan;
+- any other argument stands for itself.
 
-The two non-substrate module caches are deliberately NOT listed:
-``session._RELATION_CACHE`` memoizes *unmaterialized* parquet relations
-(pure schema-inference driver roundtrips — nothing is computed or stored),
-and ``operators.cassandra_writer._BUNDLE_CACHE`` holds a config string.
+Module constants a builder reads are covered by the builder's identity.
+Keys carry the ``applicationId``, so nothing crosses Spark sessions.
 
-tests/test_substrate_registry.py scans the package source for
-``*_CACHE`` declarations and fails if a new substrate cache is added
-without registering it here.
+The memo adds no persistence policy: each builder body chooses
+``.persist`` or ``.localCheckpoint`` and says why.  What it adds is
+teardown and provenance:
+
+- ``clear_all()`` drops every entry, unpersists the memoized frames,
+  releases the RDDs a build left persistent (the blocks behind a
+  ``localCheckpoint``) and clears the active session's cache, so
+  ``SPARK_GRAFT_BENCH_COLD=1`` reps re-pay every build — inline
+  ``.persist`` calls in query builders included;
+- ``sizes()`` counts entries per builder (``module.builder``), so a bench
+  run can publish which substrates it materialized.
+
+``session._RELATION_CACHE`` (unmaterialized parquet relations) and
+``operators.cassandra_writer._BUNDLE_CACHE`` (a bundle path) hold nothing
+executor-side and stay plain dicts.
 """
 
 from __future__ import annotations
 
-import importlib
+import functools
+import inspect
 
-# (module, attribute) for every substrate memo cache in the package.
-SUBSTRATE_CACHES: list[tuple[str, str]] = [
-    ("kafka_sink_spark.extensions.dedup", "_CC_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_COMPONENT_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_LLOYD_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_TRAINED_DIST_CACHE"),
-    ("kafka_sink_spark.extensions.similarity", "_IVFPQ_INDEX_CACHE"),
-    ("kafka_sink_spark.plans.analytics_assoc", "_SH_CACHE"),
-    ("kafka_sink_spark.plans.analytics_corpus", "_BIGRAM_CACHE"),
-    ("kafka_sink_spark.plans.analytics_corpus", "_DSIR_CACHE"),
-    ("kafka_sink_spark.plans.analytics_curation", "_SHINGLE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_fusion", "_BM25_POSTING_CACHE"),
-    ("kafka_sink_spark.plans.analytics_inference", "_LP_CACHE"),
-    ("kafka_sink_spark.plans.analytics_matching", "_ORIENT_CACHE"),
-    ("kafka_sink_spark.plans.analytics_matching", "_TRIANGLE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_mining", "_EDGE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_mining", "_RANK_CACHE"),
-    ("kafka_sink_spark.plans.analytics_profiles", "_SUPPORT_CACHE"),
-    ("kafka_sink_spark.plans.analytics_quality", "_SPAN_HASH_CACHE"),
-    ("kafka_sink_spark.plans.analytics_retrieval", "_BM25_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_EXCISION_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_LINE_CACHE"),
-    ("kafka_sink_spark.plans.analytics_sanitize", "_CLS_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_stats", "_XQ_CACHE"),
-    ("kafka_sink_spark.plans.analytics_weblm", "_KN_SCORED_CACHE"),
-    ("kafka_sink_spark.plans.analytics_weblm", "_DOC_TRIGRAM_CACHE"),
-]
+from pyspark.sql import DataFrame, SparkSession
+
+# builder name -> {key: (value, SparkContext, ids of RDDs the build left
+# persistent)}
+_MEMOS: dict[str, dict[tuple, tuple]] = {}
 
 
-def _caches() -> list[tuple[str, dict]]:
-    out = []
-    for mod_name, attr in SUBSTRATE_CACHES:
-        mod = importlib.import_module(mod_name)
-        out.append((f"{mod_name.rsplit('.', 1)[-1]}.{attr}", getattr(mod, attr)))
-    return out
+def _persistent_rdd_ids(sc) -> set:
+    if sc is None or sc._jsc is None:  # no context, or it was stopped
+        return set()
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
+def memo(build):
+    """Memoize a substrate builder per (builder, bound arguments) — see the
+    module docstring for how arguments become the key."""
+    sig = inspect.signature(build)
+    entries = _MEMOS.setdefault(
+        f"{build.__module__.rsplit('.', 1)[-1]}.{build.__qualname__}", {}
+    )
+
+    @functools.wraps(build)
+    def memoized(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        key, sc = [], None
+        for arg in bound.arguments.values():
+            if isinstance(arg, SparkSession):
+                sc = arg.sparkContext
+                key.append(sc.applicationId)
+            elif isinstance(arg, DataFrame):
+                sc = arg.sparkSession.sparkContext
+                key.append(
+                    (
+                        sc.applicationId,
+                        arg._jdf.queryExecution().analyzed().semanticHash(),
+                    )
+                )
+            else:
+                key.append(arg)
+        key = tuple(key)
+        if key in entries:
+            return entries[key][0]
+        before = _persistent_rdd_ids(sc)
+        value = build(*args, **kwargs)
+        entries[key] = (value, sc, _persistent_rdd_ids(sc) - before)
+        return value
+
+    return memoized
 
 
 def _unpersist(value) -> None:
-    """Unpersist a cache value: a DataFrame, or a tuple/list/dict of them.
-    Checkpointed frames have no cached plan to unpersist — dropping the
-    reference is enough to force a rebuild."""
+    """Unpersist a memoized value: a DataFrame, or a tuple/list of them."""
     if isinstance(value, (tuple, list)):
         for v in value:
-            _unpersist(v)
-        return
-    if isinstance(value, dict):
-        for v in value.values():
             _unpersist(v)
         return
     unpersist = getattr(value, "unpersist", None)
@@ -84,21 +103,37 @@ def _unpersist(value) -> None:
         try:
             unpersist(False)
         except Exception:
-            pass  # session already stopped / never persisted
+            pass  # session already stopped
+
+
+def _release_rdds(sc, rdd_ids: set) -> None:
+    """Unpersist the RDDs a build left persistent that are still persistent
+    — checkpointed frames have no cached plan for ``_unpersist`` to drop."""
+    if not rdd_ids or sc is None or sc._jsc is None:
+        return
+    persistent = sc._jsc.getPersistentRDDs()
+    for rdd_id in rdd_ids:
+        rdd = persistent.get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist(False)
 
 
 def clear_all() -> int:
-    """Drop every substrate memo and unpersist its frames. Returns the
-    number of entries cleared."""
+    """Drop every memo entry, release what it materialized and clear the
+    active session's cache. Returns the number of entries dropped."""
     n = 0
-    for _, cache in _caches():
-        for value in cache.values():
+    for entries in _MEMOS.values():
+        for value, sc, rdd_ids in entries.values():
             _unpersist(value)
-        n += len(cache)
-        cache.clear()
+            _release_rdds(sc, rdd_ids)
+        n += len(entries)
+        entries.clear()
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.catalog.clearCache()
     return n
 
 
 def sizes() -> dict[str, int]:
-    """Entry count per cache (only non-empty ones) — bench provenance."""
-    return {name: len(c) for name, c in _caches() if c}
+    """Entry count per builder (only non-empty ones) — bench provenance."""
+    return {name: len(entries) for name, entries in _MEMOS.items() if entries}

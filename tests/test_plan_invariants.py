@@ -72,6 +72,24 @@ def test_replay_is_partial_agg_not_window(spark):
         assert "partial_max_by" in plan, name
 
 
+def test_timeuuid_invariants_cache_nothing(spark):
+    """The invariants query computes its four counters in ONE aggregate, so
+    the Arrow timeuuid pass runs once with nothing cached: forcing it leaves
+    the CacheManager empty, and the plain sink_now_timeuuid query (same
+    plan below the aggregate) is never served from a cached copy."""
+    from kafka_sink_spark import substrates
+
+    substrates.clear_all()
+    df = QUERIES["sink_now_timeuuid_invariants"](spark, SF_DIR)
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    plain = QUERIES["sink_now_timeuuid"](spark, SF_DIR)
+    optimized = plain._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in optimized
+
+
 def test_q6_filters_pushed_and_pruned(spark):
     fmt = _formatted(spark, "q6_forecast_revenue")
     assert "PushedFilters" in fmt

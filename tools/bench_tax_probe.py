@@ -9,8 +9,8 @@ SCALE.md r10.
 
 Modes (SPARK_GRAFT_TAX_MODE):
   control  — plain sweep, no hygiene (reproduces the tax if it exists)
-  hygiene  — every HYGIENE_EVERY queries: spark.catalog.clearCache() +
-             clear module substrate caches + JVM System.gc()
+  hygiene  — every HYGIENE_EVERY queries: substrates.clear_all() (memo
+             entries + the session cache) + JVM System.gc()
 Usage:
   SPARK_GRAFT_TAX_MODE=control python tools/bench_tax_probe.py
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 ... (default sf0.01)
@@ -32,38 +32,10 @@ PROBE_EVERY = 25
 HYGIENE_EVERY = 50
 
 
-def clear_substrate_caches() -> int:
-    """Unpersist + drop every module-level substrate cache (the *_CACHE
-    dicts holding persisted DataFrames keyed by (appId, sf_dir))."""
-    import kafka_sink_spark.extensions.similarity as sim
-    import kafka_sink_spark.plans.analytics_assoc as assoc
-    import kafka_sink_spark.plans.analytics_corpus as corpus
-    import kafka_sink_spark.plans.analytics_matching as matching
-    import kafka_sink_spark.plans.analytics_mining as mining
-    import kafka_sink_spark.plans.analytics_profiles as profiles
-    import kafka_sink_spark.plans.analytics_quality as quality
-    import kafka_sink_spark.plans.analytics_stats as stats
-
-    n = 0
-    for mod in (sim, assoc, corpus, matching, mining, profiles, quality, stats):
-        for attr in dir(mod):
-            if attr.endswith("_CACHE"):
-                cache = getattr(mod, attr)
-                if isinstance(cache, dict):
-                    for v in cache.values():
-                        try:
-                            v.unpersist()
-                        except Exception:
-                            pass
-                    n += len(cache)
-                    cache.clear()
-    return n
-
-
 def main() -> None:
     mode = os.environ.get("SPARK_GRAFT_TAX_MODE", "control")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    from kafka_sink_spark import get_spark
+    from kafka_sink_spark import get_spark, substrates
     from kafka_sink_spark.plans import QUERIES
 
     sys.path.insert(
@@ -94,8 +66,7 @@ def main() -> None:
     for i, name in enumerate(names, 1):
         force(name)
         if mode == "hygiene" and i % HYGIENE_EVERY == 0:
-            spark.catalog.clearCache()
-            clear_substrate_caches()
+            substrates.clear_all()
             spark.sparkContext._jvm.System.gc()
         if i % PROBE_EVERY == 0:
             canary.append([i, canary_time()])

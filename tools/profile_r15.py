@@ -1,7 +1,7 @@
 """Round-14 optimization profiler: per-query timing decomposition + plan dump.
 
-For each named query (or a default hot-list), measures with the bench's exact
-methodology (noop sink, min of N) and additionally decomposes:
+For each named query, measures with the bench's exact methodology (noop
+sink, min of N) and additionally decomposes:
 
   build_s  - Python DataFrame-construction time (driver-side lineage build)
   plan_s   - time for spark to produce the executedPlan (analysis+optimization)
@@ -10,7 +10,7 @@ methodology (noop sink, min of N) and additionally decomposes:
 and writes ``plans/r15/<query>_<tag>.txt`` with the formatted physical plan
 when --dump is given.  Usage:
 
-    python tools/profile_r15.py [--dump before|after] [query ...]
+    python tools/profile_r15.py [--dump before|after] query [query ...]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_BENCH_REPS=3 ...
 
 Prints one JSON line per query so runs are easy to diff.
@@ -35,6 +35,11 @@ def main() -> None:
     if args and args[0] == "--dump":
         tag = args[1]
         args = args[2:]
+    if not args:
+        sys.exit(
+            "usage: python tools/profile_r15.py [--dump before|after] "
+            "query [query ...]"
+        )
 
     from kafka_sink_spark import get_spark
     from kafka_sink_spark.plans import QUERIES
@@ -48,11 +53,10 @@ def main() -> None:
     # Warm JVM + parquet footers, same as bench.py.
     force(QUERIES["sink_json_map"](spark, SF_DIR))
 
-    names = args or []
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15")
     os.makedirs(outdir, exist_ok=True)
 
-    for name in names:
+    for name in args:
         sc.setJobDescription(f"r15-profile:{name}")
         best = {"build_s": float("inf"), "plan_s": float("inf"), "exec_s": float("inf")}
         for _ in range(REPS):
