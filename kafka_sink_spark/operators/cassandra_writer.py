@@ -30,6 +30,8 @@ from ``SinkConfig`` when the ``cassandra-driver`` package is available.
 
 from __future__ import annotations
 
+import atexit
+import json
 from collections import deque
 from typing import Callable, Iterable, Iterator
 
@@ -132,20 +134,18 @@ def _submit_batch(session, stmts: list, consistency_level: str, counter: bool):
     return session.execute_async(batch)
 
 
-def _apply_consistency(prepared: dict, consistency_level: str) -> None:
+def _apply_consistency(stmt, consistency_level: str) -> None:
     """W7 for SINGLE executes: the driver applies a PreparedStatement's
     consistency_level to every statement bound from it. Guarded setattr —
     test fakes may return plain strings from prepare()."""
-    cl = (
-        consistency_level
-        if ConsistencyLevel is None
-        else getattr(ConsistencyLevel, consistency_level)
-    )
-    for stmt in prepared.values():
-        try:
-            stmt.consistency_level = cl
-        except AttributeError:
-            pass
+    try:
+        stmt.consistency_level = (
+            consistency_level
+            if ConsistencyLevel is None
+            else getattr(ConsistencyLevel, consistency_level)
+        )
+    except AttributeError:
+        pass
 
 
 def _estimate_statement_bytes(params: dict) -> int:
@@ -193,10 +193,13 @@ def write_routed(
     {min, max, sum, n} of the exact per-statement estimates (the
     Dropwizard-snapshot signals the pow-2 buckets can't carry).
 
-    ``session_factory`` is called once per partition ON THE EXECUTOR and must
-    return an object with ``prepare(cql) -> stmt`` and
+    ``session_factory`` is called by every write task ON THE EXECUTOR and
+    must return an object with ``prepare(cql) -> stmt`` and
     ``execute_async(stmt, params) -> future`` (``future.result()`` awaited
     under the concurrency bound) — the cassandra-driver Session API.
+    ``cassandra_session_factory`` hands every task of a worker process the
+    same connected session. A task prepares a statement kind the first time
+    one of its rows needs it.
 
     Only the bound columns reach Python: before the shuffle the frame is
     narrowed to the table's columns, the mapping targets and the route /
@@ -225,8 +228,17 @@ def write_routed(
 
     def write_partition(rows: Iterable) -> Iterator[tuple[int, int, int]]:
         session = session_factory()
-        prepared = {kind: session.prepare(cql) for kind, cql in texts.items()}
-        _apply_consistency(prepared, table_ref.consistency_level)
+        prepared: dict = {}
+
+        def statement(kind: str):
+            """The prepared statement of one kind, prepared (and given the
+            table's consistency level) the first time a row needs it."""
+            stmt = prepared.get(kind)
+            if stmt is None:
+                stmt = prepared[kind] = session.prepare(texts[kind])
+                _apply_consistency(stmt, table_ref.consistency_level)
+            return stmt
+
         futures: deque = deque()
 
         def throttle() -> None:
@@ -252,12 +264,12 @@ def write_routed(
                 throttle()
                 if len(chunk) == 1:
                     kind, params = chunk[0]
-                    fut = session.execute_async(prepared[kind], params)
+                    fut = session.execute_async(statement(kind), params)
                     singles += 1
                 else:
                     fut = _submit_batch(
                         session,
-                        [(prepared[k], p) for k, p in chunk],
+                        [(statement(k), p) for k, p in chunk],
                         table_ref.consistency_level,
                         counter=bool(schema_ref.counters),
                     )
@@ -547,7 +559,6 @@ def _materialize_bundle(url: str) -> str:
     once per URL per process (CloudSniEndToEndIT.java:152-168 drives the
     URL form). The zip contains the client private key, so the temp file is
     created 0600 and registered for cleanup at exit."""
-    import atexit
     import os
     import tempfile
 
@@ -611,6 +622,28 @@ def _real_driver():  # pragma: no cover - needs optional package
     )
 
 
+# Connected sessions, one per worker process and resolved settings, as
+# (cluster, session). The factory runs in every write task, once per
+# partition per micro-batch; a Cluster is a connection pool with its own
+# threads, so it is built once and shut down at interpreter exit. A process
+# that leaves through os._exit (PySpark's daemon-forked workers do) skips
+# atexit hooks; its sockets close with the process.
+_SESSIONS: dict[str, tuple[object, object]] = {}
+
+
+def _shutdown_sessions() -> None:
+    """Shut down every cached session's cluster, once each."""
+    while _SESSIONS:
+        _key, (cluster, _session) = _SESSIONS.popitem()
+        try:
+            cluster.shutdown()
+        except Exception:
+            pass  # a failed shutdown must not keep the others open
+
+
+atexit.register(_shutdown_sessions)
+
+
 def cassandra_session_factory(
     config: SinkConfig,
     version: str = "unknown",
@@ -624,10 +657,18 @@ def cassandra_session_factory(
     provider classes); it defaults to the real ``cassandra-driver`` package
     at call time, and tests inject a fake to pin the exact constructor
     parameters without a live cluster (the LifeCycleManagerIT surface).
+
+    The factory connects once per worker process: later calls with the
+    same resolved settings (client id included, so one factory's) return
+    the cached session.
     """
     settings = build_session_settings(config, version, application_name)
+    key = json.dumps(settings, sort_keys=True, default=repr)
 
     def factory() -> object:
+        cached = _SESSIONS.get(key)
+        if cached is not None:
+            return cached[1]
         drv = driver if driver is not None else _real_driver()
         kwargs: dict = {"port": config.port}
         if "advanced.cloud.secure-connect-bundle" in settings:
@@ -682,6 +723,7 @@ def cassandra_session_factory(
         }
         cluster = drv.Cluster(**kwargs)
         session = cluster.connect()
+        _SESSIONS[key] = (cluster, session)
         return session
 
     return factory

@@ -11,8 +11,74 @@ sink/src/it/java/com/datastax/oss/kafka/sink/ccm/StructEndToEndCCMIT.java:611-66
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+
+def _read_zip_directories_once() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive's
+    directory only when the archive changed.
+
+    PySpark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``). Before Python
+    3.13 that makes every ``zipimporter`` re-read the whole central
+    directory of its archive, and a worker holds one importer per package it
+    imported from ``pyspark.zip``: about 16 reads of an unchanged file per
+    task. Here each archive's directory is read once and shared by all its
+    importers, and read again only when the archive's
+    ``(st_mtime_ns, st_size, st_ino)`` differs from the read before, so a
+    rewritten ``addPyFile`` archive is still picked up. Python 3.13 made the
+    stdlib method lazy; there nothing is replaced.
+
+    Runs when this module is imported, which is how a worker installs it:
+    unpickling any package function imports the package, and its
+    ``__init__`` imports this module.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    read = zipimport._read_directory
+    reread = zipimport.zipimporter.invalidate_caches
+    directories = zipimport._zip_directory_cache
+    stamps: dict[str, tuple[int, int, int] | None] = {}
+
+    def stamp(archive: str) -> tuple[int, int, int] | None:
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size, st.st_ino
+
+    def read_directory(archive: str) -> dict:
+        # Stat before reading: a rewrite racing the read shows up as a
+        # changed stamp at the next invalidation, never as a stale match.
+        before = stamp(archive)
+        files = read(archive)
+        stamps[archive] = before
+        return files
+
+    def invalidate_caches(self) -> None:
+        now = stamp(self.archive)
+        files = directories.get(self.archive)
+        if now is None or files is None or stamps.get(self.archive) != now:
+            reread(self)  # reads through read_directory, which stamps it
+        else:
+            self._files = files
+
+    zipimport._read_directory = read_directory
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    # Directories read before this ran carry no stamp: read each once now,
+    # so from here on an invalidation reads nothing until an archive changes.
+    for archive in list(directories):
+        try:
+            directories[archive] = read_directory(archive)
+        except zipimport.ZipImportError:
+            del directories[archive]
+
+
+_read_zip_directories_once()
 
 
 def get_spark(

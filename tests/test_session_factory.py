@@ -48,16 +48,19 @@ class _Recorder:
 
 
 class FakeSession:
-    pass
+    def __init__(self, cluster):
+        self.cluster = cluster
 
 
 class FakeCluster:
     def __init__(self, log, **kwargs):
         self.kwargs = kwargs
         log.append(("Cluster", kwargs))
-        self.session = FakeSession()
+        self.session = FakeSession(self)
+        self.connects = 0
 
     def connect(self):
+        self.connects += 1
         return self.session
 
 
@@ -81,6 +84,72 @@ def build(config, **kw):
     session = cassandra_session_factory(config, driver=fake_driver(log), **kw)()
     cluster_kwargs = next(kw for name, kw in log if name == "Cluster")
     return session, cluster_kwargs, log
+
+
+# ---------------------------------------------------------------------------
+# One connected session per worker process
+# ---------------------------------------------------------------------------
+
+
+def test_factory_connects_once_per_process():
+    log = []
+    factory = cassandra_session_factory(cfg(), driver=fake_driver(log))
+    first, second = factory(), factory()
+    assert first is second
+    assert [name for name, _ in log].count("Cluster") == 1
+    assert first.cluster.connects == 1
+
+
+def test_factories_with_different_settings_get_different_sessions():
+    log = []
+    drv = fake_driver(log)
+    a = cassandra_session_factory(cfg(), driver=drv)()
+    b = cassandra_session_factory(cfg({"port": "9044"}), driver=drv)()
+    assert a is not b
+    assert (a.cluster.kwargs["port"], b.cluster.kwargs["port"]) == (9043, 9044)
+
+
+_EXIT_SCRIPT = """
+import types
+from kafka_sink_spark.config import parse_sink_config
+from kafka_sink_spark.operators.cassandra_writer import cassandra_session_factory
+
+class Cluster:
+    def __init__(self, **kw):
+        self.port = kw["port"]
+    def connect(self):
+        return self
+    def shutdown(self):
+        print("shutdown", self.port, flush=True)
+
+drv = types.SimpleNamespace(
+    Cluster=Cluster, ExecutionProfile=lambda **kw: kw,
+    EXEC_PROFILE_DEFAULT="default", PlainTextAuthProvider=lambda **kw: kw,
+)
+for port in ("9043", "9044"):
+    factory = cassandra_session_factory(
+        parse_sink_config({"contactPoints": "h", "port": port,
+                           "topic.t.ks.tbl.mapping": "pk=key"}),
+        driver=drv,
+    )
+    factory()
+    factory()
+print("exit", flush=True)
+"""
+
+
+def test_exit_hook_shuts_each_cluster_down_once():
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT], cwd=root, capture_output=True,
+        text=True, timeout=120, check=True,
+    ).stdout.splitlines()
+    assert out[0] == "exit"
+    assert sorted(out[1:]) == ["shutdown 9043", "shutdown 9044"]
 
 
 # ---------------------------------------------------------------------------
