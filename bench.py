@@ -219,6 +219,17 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    from kafka_sink_spark import substrates
+
+    # Substrate builds, build seconds and hits over the whole run: cold reps
+    # fold report() in here before clear_all() resets it.
+    substrate_report: dict[str, dict] = {}
+
+    def fold_report() -> None:
+        for name, row in substrates.report().items():
+            total = substrate_report.setdefault(name, dict.fromkeys(row, 0))
+            for k, v in row.items():
+                total[k] += v
 
     def timed_min(make_df, n=reps, cold=False) -> float:
         best = float("inf")
@@ -226,8 +237,7 @@ def main() -> None:
             if cold:
                 # Teardown outside the timed region: the rebuild itself is
                 # what the cold rep must pay, not the unpersist bookkeeping.
-                from kafka_sink_spark import substrates
-
+                fold_report()
                 substrates.clear_all()
             t0 = time.perf_counter()
             force(make_df())
@@ -372,10 +382,11 @@ def main() -> None:
             out["cohort_vs_anchor"]["canary_normalized"] = bool(a_canary)
 
     # Substrate-memo provenance: which substrates were materialized this run
-    # (cold runs should show the same set being rebuilt per rep).
-    from kafka_sink_spark import substrates
-
+    # (cold runs should show the same set being rebuilt per rep), and each
+    # builder's builds, summed build seconds and hits.
     out["substrate_caches"] = substrates.sizes()
+    fold_report()
+    out["substrate_report"] = substrate_report
     if "regressions" in out:
         out["regressions_n"] = len(out["regressions"])
 

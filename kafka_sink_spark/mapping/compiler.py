@@ -35,7 +35,6 @@ def _namespace_expr(df: DataFrame, entry: MappingEntry) -> Column:
 
     ns = entry.namespace
     parsed = {"key": R.KEY_PARSED, "value": R.VALUE_PARSED}.get(ns)
-    literal = {"key": R.KEY_LITERAL, "value": R.VALUE_LITERAL}.get(ns)
 
     if ns == "header":
         if R.HEADERS_MAP not in cols:
@@ -67,7 +66,6 @@ def compile_mapping(
     df: DataFrame,
     table: TableConfig,
     schema: TableSchema | None = None,
-    keep_metadata: bool = True,
 ) -> DataFrame:
     """Apply a table's mapping to a decoded record DataFrame.
 
@@ -75,8 +73,8 @@ def compile_mapping(
     Spark type when ``schema`` is given (the codec layer's cast fast path —
     SURVEY §2.4 C1/C2). Special targets ``__ttl`` / ``__timestamp`` come out
     as ``_mapped_ttl`` / ``_mapped_timestamp`` raw (unit conversion happens in
-    operators.writes). With ``keep_metadata``, record metadata columns ride
-    along for the write stage (routing, record-timestamp writetime).
+    operators.writes). Record metadata columns ride along as ``_kafka_*``
+    for the write stage (routing, record-timestamp writetime).
     """
     if schema is not None:
         table.validate_against(schema)
@@ -119,16 +117,15 @@ def compile_mapping(
                         expr = _codecs.wkt_passthrough(
                             expr.cast("string"), _GEO_TARGETS[target]
                         )
-                elif _is_struct_target(col_spec.spark_type):
-                    expr = _struct_cast(expr, col_spec.spark_type)
                 else:
+                    # UDT/tuple targets too: Spark casts struct-to-struct by
+                    # field name, with per-field coercion (C11, C14).
                     expr = expr.cast(col_spec.spark_type)
         select.append(expr.alias(entry.column))
 
-    if keep_metadata:
-        for meta in ("topic", "partition", "offset", "timestamp"):
-            if meta in df.columns:
-                select.append(F.col(meta).alias(f"_kafka_{meta}"))
+    for meta in ("topic", "partition", "offset", "timestamp"):
+        if meta in cols:
+            select.append(F.col(meta).alias(f"_kafka_{meta}"))
     return df.select(*select)
 
 
@@ -145,8 +142,3 @@ _GEO_TARGETS = {
 def _is_struct_target(spark_type: str) -> bool:
     return spark_type.strip().lower().startswith("struct")
 
-
-def _struct_cast(expr: Column, spark_type: str) -> Column:
-    """UDT/tuple targets: cast struct-to-struct by name (C11) — Spark's cast
-    handles field-name matched struct casts including per-field coercion (C14)."""
-    return expr.cast(spark_type)

@@ -379,8 +379,11 @@ def start_sink_stream(
     ``records_stream`` is any streaming DataFrame with the canonical record
     columns (from sources.kafka.kafka_records_stream in production; a file
     stream in tests). Checkpointing replaces the reference's preCommit offset
-    bookkeeping wholesale.
+    bookkeeping wholesale. An invalid mapping raises ``ConfigError`` here,
+    before any query starts (fail-fast startup).
     """
+    for table in config.tables:
+        table.validate_against(schemas[(table.keyspace, table.table)])
     shared_metrics = metrics if metrics is not None else SinkMetrics()
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:

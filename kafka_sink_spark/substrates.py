@@ -29,7 +29,9 @@ teardown and provenance:
   ``SPARK_GRAFT_BENCH_COLD=1`` reps re-pay every build — inline
   ``.persist`` calls in query builders included;
 - ``sizes()`` counts entries per builder (``module.builder``), so a bench
-  run can publish which substrates it materialized.
+  run can publish which substrates it materialized;
+- ``report()`` adds builds, their summed seconds (the builder's own wall
+  time: a lazy ``.persist`` is paid by its first consumer) and hits.
 
 ``session._RELATION_CACHE`` (unmaterialized parquet relations) and
 ``operators.cassandra_writer._BUNDLE_CACHE`` (a bundle path) hold nothing
@@ -40,12 +42,15 @@ from __future__ import annotations
 
 import functools
 import inspect
+import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
 # builder name -> {key: (value, SparkContext, ids of RDDs the build left
-# persistent)}
+# persistent, build seconds)}
 _MEMOS: dict[str, dict[tuple, tuple]] = {}
+_HITS: Counter = Counter()  # builder name -> hits since the last clear_all()
 
 
 def _persistent_rdd_ids(sc) -> set:
@@ -58,9 +63,8 @@ def memo(build):
     """Memoize a substrate builder per (builder, bound arguments) — see the
     module docstring for how arguments become the key."""
     sig = inspect.signature(build)
-    entries = _MEMOS.setdefault(
-        f"{build.__module__.rsplit('.', 1)[-1]}.{build.__qualname__}", {}
-    )
+    name = f"{build.__module__.rsplit('.', 1)[-1]}.{build.__qualname__}"
+    entries = _MEMOS.setdefault(name, {})
 
     @functools.wraps(build)
     def memoized(*args, **kwargs):
@@ -83,10 +87,13 @@ def memo(build):
                 key.append(arg)
         key = tuple(key)
         if key in entries:
+            _HITS[name] += 1
             return entries[key][0]
         before = _persistent_rdd_ids(sc)
+        t0 = time.perf_counter()
         value = build(*args, **kwargs)
-        entries[key] = (value, sc, _persistent_rdd_ids(sc) - before)
+        build_s = time.perf_counter() - t0
+        entries[key] = (value, sc, _persistent_rdd_ids(sc) - before, build_s)
         return value
 
     return memoized
@@ -123,11 +130,12 @@ def clear_all() -> int:
     active session's cache. Returns the number of entries dropped."""
     n = 0
     for entries in _MEMOS.values():
-        for value, sc, rdd_ids in entries.values():
+        for value, sc, rdd_ids, _ in entries.values():
             _unpersist(value)
             _release_rdds(sc, rdd_ids)
         n += len(entries)
         entries.clear()
+    _HITS.clear()
     spark = SparkSession.getActiveSession()
     if spark is not None:
         spark.catalog.clearCache()
@@ -137,3 +145,13 @@ def clear_all() -> int:
 def sizes() -> dict[str, int]:
     """Entry count per builder (only non-empty ones) — bench provenance."""
     return {name: len(entries) for name, entries in _MEMOS.items() if entries}
+
+
+def report() -> dict[str, dict]:
+    """Per builder with an entry or a hit since the last ``clear_all()``:
+    ``{entries, builds, build_s, hits}`` — bench and profiler provenance."""
+    return {
+        name: {"entries": len(e), "builds": len(e), "hits": _HITS[name],
+               "build_s": sum(entry[3] for entry in e.values())}
+        for name, e in _MEMOS.items() if e or _HITS[name]
+    }

@@ -11,7 +11,13 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_sink_spark.config import ColumnSpec, SinkConfig, TableConfig, TableSchema
+from kafka_sink_spark.config import (
+    ColumnSpec,
+    ConfigError,
+    SinkConfig,
+    TableConfig,
+    TableSchema,
+)
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.session import load_tables
 from kafka_sink_spark.streaming.pipeline import SinkMetrics, start_sink_stream
@@ -219,6 +225,26 @@ def test_stream_error_policy_none_fails(spark, tmp_path):
         q.awaitTermination(120)
         if q.exception() is not None:
             raise RuntimeError(str(q.exception()))
+
+
+def test_invalid_mapping_fails_before_stream_starts(spark, tmp_path):
+    """Fail-fast startup (SimpleEndToEndSimulacronIT.java:286-315): a mapping
+    naming an unknown column raises from start_sink_stream itself, with no
+    input at all, and no query is left running."""
+    src = tmp_path / "records"
+    src.mkdir()
+    cfg, schemas, _ = _config()
+    cfg.tables[0] = TableConfig(
+        "events", "ks", "user_events", parse_mapping("pk=key, nosuch=value.k")
+    )
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ConfigError, match="nosuch"):
+        start_sink_stream(
+            spark, spark.readStream.schema(RECORD_SCHEMA).parquet(str(src)),
+            cfg, schemas, str(tmp_path / "ckpt"), lambda *a: None,
+            value_schemas={"events": V_SCHEMA},
+        )
+    assert {q.id for q in spark.streams.active} == active
 
 
 def test_avro_struct_mode_through_pipeline(spark):

@@ -2,7 +2,8 @@
 (builder, bound arguments), shared by positional and keyword calls, kept
 per Spark application and frame plan, and torn down by ``clear_all()`` —
 memoized frames unpersisted once, checkpoint blocks released — so the
-bench's cold mode (SPARK_GRAFT_BENCH_COLD=1) really re-pays every build."""
+bench's cold mode (SPARK_GRAFT_BENCH_COLD=1) really re-pays every build;
+``report()`` counts each builder's builds, build seconds and hits."""
 
 from __future__ import annotations
 
@@ -146,3 +147,20 @@ def test_clear_all_releases_checkpoint_blocks(spark):
     after = persistent()
     assert not after - before
     assert len(after) <= len(before)
+
+
+def test_report_counts_builds_seconds_and_hits():
+    s = _session("app-1")
+    _single(s, "/sf")
+    first = substrates.report()["test_substrate_registry._single"]
+    assert first["entries"] == first["builds"] == 1
+    assert first["hits"] == 0
+    assert first["build_s"] > 0
+
+    _single(s, sf_dir="/sf")  # same bound arguments: a hit, no build
+    second = substrates.report()["test_substrate_registry._single"]
+    assert second == {**first, "hits": 1}
+    assert CALLS == [("/sf", 2)]
+
+    substrates.clear_all()
+    assert substrates.report() == {}

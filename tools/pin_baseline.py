@@ -1,9 +1,12 @@
-"""Re-pin BENCH_BASELINE.json from a single fresh bench run.
+"""Re-pin BENCH_BASELINE.json (warm run) or BENCH_BASELINE_COLD.json (run
+with ``"mode": "cold"``) from a single fresh bench run.
 
 Usage::
 
     python bench.py > /tmp/bench_fresh.json          # idle machine, min-of-N
     python tools/pin_baseline.py /tmp/bench_fresh.json "round-8 idle min-of-5 run"
+    SPARK_GRAFT_BENCH_COLD=1 python bench.py > /tmp/bench_cold.json
+    python tools/pin_baseline.py /tmp/bench_cold.json "cold run, <host>"
 
 The r7 verdict flagged that element-wise min-merging new runs into old pins
 guarantees ratios >= 1 and turns the aggregate ratio into a noise floor
@@ -39,9 +42,11 @@ def main() -> None:
                     run = cand
         if run is None:
             sys.exit(f"no bench JSON line found in {src}")
+    # bench.py gates a cold run ("mode": "cold") against the cold pin only.
+    cold = run.get("mode") == "cold"
     base_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH_BASELINE.json",
+        "BENCH_BASELINE_COLD.json" if cold else "BENCH_BASELINE.json",
     )
     out = {
         "source": note,
