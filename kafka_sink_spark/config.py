@@ -222,6 +222,17 @@ class SinkConfig:
     # a defaulted one must not clobber an explicit prefixed setting).
     explicit_globals: frozenset[str] = field(default_factory=frozenset)
 
+    def __post_init__(self) -> None:
+        # The writer chunks key runs by the batch cap and bounds its
+        # in-flight window by the request cap: below 1 it would write
+        # nothing or fail on the executor.
+        for key, value in (
+            ("maxNumberOfRecordsInBatch", self.max_number_of_records_in_batch),
+            ("maxConcurrentRequests", self.max_concurrent_requests),
+        ):
+            if value < 1:
+                raise ConfigError(f"{key} must be at least 1, got {value}")
+
     def tables_for_topic(self, topic: str) -> list[TableConfig]:
         return [t for t in self.tables if t.topic == topic]
 

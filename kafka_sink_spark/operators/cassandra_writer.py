@@ -1,20 +1,21 @@
 """Executor-side Cassandra write path: the physical layer of W1-W11.
 
-``write_routed`` takes a routed DataFrame (output of ``run_sink_pipeline``)
-and executes it against Cassandra with the reference's write semantics
-(reference behaviors pinned in SURVEY §2.5):
+``write_routed`` takes a routed DataFrame (the mapped, ttl/writetime and
+route columns of ``run_sink_pipeline``) and executes it against Cassandra.
+It makes no statement decision of its own: each row's statement kind is
+the ``statement_kind`` column and its parameters are that kind's bind list,
+both from ``operators.writes.statements`` — the shapes ``cql_statement``
+verifies (W1-W6). What the writer owns is the execution (reference
+behaviors pinned in SURVEY §2.5):
 
-- per-route CQL: generated INSERT/DELETE/counter-UPDATE templates or the
-  user-provided query (W1-W5) — exactly the `cql_statement` shapes;
 - partition-key batching: same-routing-key statements grouped into unlogged
   batches capped at ``maxNumberOfRecordsInBatch`` (W8,
   reference: SimpleEndToEndSimulacronIT.java:776-875); distinct keys execute
   individually;
 - bounded concurrency: ≤ ``maxConcurrentRequests`` in-flight requests (W9,
   sample:35-36) via a sliding window over async executions;
-- nullToUnset: null bound values sent as driver UNSET (W6,
-  reference: RawDataEndToEndCCMIT.java:181-218);
-- per-table consistency level (W7).
+- per-table consistency level (W7);
+- the KAF-99 frame-size and statement-bytes histograms.
 
 Spark-first shape: the DataFrame is repartitioned ON the routing key and
 sorted within partitions, so (a) all statements for one Cassandra partition
@@ -33,88 +34,26 @@ from __future__ import annotations
 import atexit
 import json
 from collections import deque
+from dataclasses import dataclass, field
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_sink_spark.config import ConfigError, SinkConfig, TableConfig, TableSchema
-from kafka_sink_spark.operators.writes import (
-    ROUTE_COL,
-    ROUTE_COUNTER,
-    ROUTE_DELETE,
-    ROUTE_INSERT,
-    TTL_COL,
-    WRITETIME_COL,
+from kafka_sink_spark.operators.writes import UNSET, statement_kind, statements
+from kafka_sink_spark.operators.writes import (  # noqa: F401 - re-exported
+    cql_templates as statement_texts,
 )
 
 # The optional driver, looked up once: with it, BATCH frames are driver
 # BatchStatements and consistency levels driver enums; without it both go
-# to the session's hooks (the fake/test interface). UNSET is the driver's
-# sentinel when available, a stable stand-in otherwise (fakes/tests compare
-# identity).
+# to the session's hooks (the fake/test interface).
 try:  # pragma: no cover - depends on optional package
     from cassandra import ConsistencyLevel  # type: ignore
-    from cassandra.query import UNSET_VALUE as UNSET  # type: ignore
     from cassandra.query import BatchStatement, BatchType  # type: ignore
 except ImportError:  # pragma: no cover
     ConsistencyLevel = BatchStatement = BatchType = None
-
-    class _Unset:
-        def __repr__(self) -> str:
-            return "UNSET"
-
-    UNSET = _Unset()
-
-
-def statement_texts(table: TableConfig, schema: TableSchema) -> dict[str, str]:
-    """The prepared-statement texts for each route (W1/W2/W4/W3/W5) —
-    delegates to the single template builder in operators.writes so the
-    executed statements can never drift from the oracle-verified ``cql``
-    column (the ``insert_plain*`` variants for rows without a writetime
-    come from there too)."""
-    from kafka_sink_spark.operators.writes import cql_templates
-
-    return cql_templates(table, schema)
-
-
-def _route_and_params(
-    row: dict, table: TableConfig, schema: TableSchema
-) -> tuple[str, dict]:
-    """Pick the statement kind and bound parameters for one routed row."""
-    route = row[ROUTE_COL]
-    null_marker = UNSET if table.null_to_unset else None
-    if table.query is not None:
-        params = {
-            e.column: (row.get(e.column) if row.get(e.column) is not None else null_marker)
-            for e in table.mapping
-        }
-        return "provided", params
-    if route == ROUTE_DELETE:
-        return "delete", {c: row[c] for c in schema.primary_key}
-    if route == ROUTE_COUNTER:
-        params = {c: row[c] for c in schema.primary_key}
-        params.update({c: row.get(c) or 0 for c in schema.counters})
-        return "counter", params
-    assert route == ROUTE_INSERT
-    params = {
-        c.name: (row.get(c.name) if row.get(c.name) is not None else null_marker)
-        for c in schema.columns
-    }
-    wt = row.get(WRITETIME_COL)
-    ttl = row.get(TTL_COL)
-    if wt is None:
-        # No writetime → the timestamp-free templates (binding null to
-        # USING TIMESTAMP is a server error); a TTL must still apply.
-        if ttl is not None:
-            params["message_internal_ttl"] = ttl
-            return "insert_plain_ttl", params
-        return "insert_plain", params
-    params["message_internal_timestamp"] = wt
-    if ttl is not None:
-        params["message_internal_ttl"] = ttl
-        return "insert_ttl", params
-    return "insert", params
 
 
 def _submit_batch(session, stmts: list, consistency_level: str, counter: bool):
@@ -170,10 +109,41 @@ def _estimate_statement_bytes(params: dict) -> int:
     return total
 
 
-def _pow2_bucket(n: int) -> int:
-    """Smallest power of two ≥ n (0 stays 0) — bounds the bytes histogram
-    to ~60 buckets at any scale."""
-    return 0 if n <= 0 else 1 << (n - 1).bit_length()
+@dataclass
+class Histogram:
+    """One KAF-99 histogram: bucket counts plus the exact count, min, max
+    and sum of the observed values. A value is its own bucket, or with
+    ``pow2`` the smallest power of two ≥ it (0 stays 0), which bounds the
+    buckets to ~60 at any scale. Write tasks ``add``; the driver and
+    ``SinkMetrics`` ``merge``."""
+
+    pow2: bool = False
+    buckets: dict[int, int] = field(default_factory=dict)
+    n: int = 0
+    sum: int = 0
+    min: int | None = None
+    max: int | None = None
+
+    def add(self, v: int) -> None:
+        b = (0 if v <= 0 else 1 << (v - 1).bit_length()) if self.pow2 else v
+        self.buckets[b] = self.buckets.get(b, 0) + 1
+        self.n += 1
+        self.sum += v
+        if self.min is None or v < self.min:
+            self.min = v
+        if self.max is None or v > self.max:
+            self.max = v
+
+    def merge(self, other: Histogram) -> Histogram:
+        """Fold ``other`` into this histogram; returns self."""
+        for b, c in other.buckets.items():
+            self.buckets[b] = self.buckets.get(b, 0) + c
+        if other.n:
+            self.min = other.min if self.min is None else min(self.min, other.min)
+            self.max = other.max if self.max is None else max(self.max, other.max)
+        self.n += other.n
+        self.sum += other.sum
+        return self
 
 
 def write_routed(
@@ -182,16 +152,14 @@ def write_routed(
     schema: TableSchema,
     config: SinkConfig,
     session_factory: Callable[[], object],
-) -> dict[str, int]:
+) -> dict:
     """Execute a routed DataFrame against Cassandra. Returns aggregate stats
     {'rows', 'batches', 'singles'} (a batch = one unlogged BATCH frame;
-    a single = one standalone EXECUTE) plus the KAF-99 histogram inputs:
-    'batch_size_hist' {records_per_frame: n_frames} (bounded by
-    maxNumberOfRecordsInBatch), 'batch_bytes_hist' {power-of-two estimated
-    statement payload bytes: n_statements} (one update per statement, like
-    the reference's batchSizeInBytesHistogram), and 'bytes_stats'
-    {min, max, sum, n} of the exact per-statement estimates (the
-    Dropwizard-snapshot signals the pow-2 buckets can't carry).
+    a single = one standalone EXECUTE) plus the KAF-99 histograms:
+    'batch_size_hist' observes every frame's statement count (bounded by
+    maxNumberOfRecordsInBatch) and 'batch_bytes_hist' every statement's
+    estimated payload bytes in power-of-two buckets (one update per
+    statement, like the reference's batchSizeInBytesHistogram).
 
     ``session_factory`` is called by every write task ON THE EXECUTOR and
     must return an object with ``prepare(cql) -> stmt`` and
@@ -201,10 +169,11 @@ def write_routed(
     same connected session. A task prepares a statement kind the first time
     one of its rows needs it.
 
-    Only the bound columns reach Python: before the shuffle the frame is
-    narrowed to the table's columns, the mapping targets and the route /
-    TTL / writetime columns, so record metadata (``_kafka_topic``,
-    ``_kafka_offset``, ...) is neither shuffled nor converted per row.
+    Only what a statement binds reaches Python: before the shuffle the frame
+    is narrowed to the ``statement_kind`` column, the routing-key columns
+    and the source column of every bind (null when the frame lacks it), so
+    record metadata (``_kafka_topic``, ``_kafka_offset``, ...) is neither
+    shuffled nor converted per row.
 
     When a request fails, every other request still in flight in that task
     is awaited before the failure propagates, so a retried batch never
@@ -216,18 +185,26 @@ def write_routed(
     clustering columns so runs are contiguous and writes within a partition
     arrive in clustering order.
     """
-    pk = [c for c in schema.partition_key if c in routed.columns]
-    sort_cols = pk + [
-        c for c in schema.primary_key if c not in pk and c in routed.columns
-    ]
-    texts = statement_texts(table, schema)
+    present = set(routed.columns)
+    pk = [c for c in schema.partition_key if c in present]
+    sort_cols = pk + [c for c in schema.primary_key if c not in pk and c in present]
+    # Selected: kind, then the routing key (a row's run key is a slice),
+    # then every bind source; each bind reads its source by index.
+    kinds = statements(table, schema).values()
+    sources = [src for _text, binds in kinds for _name, src, _null in binds]
+    names = list(dict.fromkeys(sort_cols + sources))
+    index = {c: i for i, c in enumerate(names, start=1)}
+    key_end = 1 + len(pk)
     max_batch = config.max_number_of_records_in_batch
     max_inflight = config.max_concurrent_requests
-    table_ref = table
-    schema_ref = schema
 
-    def write_partition(rows: Iterable) -> Iterator[tuple[int, int, int]]:
+    def write_partition(rows: Iterable) -> Iterator[tuple[Histogram, Histogram]]:
         session = session_factory()
+        # Built here, in the executing process, so UNSET is its sentinel.
+        plan = {
+            kind: (text, [(name, index[src], null) for name, src, null in binds])
+            for kind, (text, binds) in statements(table, schema).items()
+        }
         prepared: dict = {}
 
         def statement(kind: str):
@@ -235,8 +212,8 @@ def write_routed(
             table's consistency level) the first time a row needs it."""
             stmt = prepared.get(kind)
             if stmt is None:
-                stmt = prepared[kind] = session.prepare(texts[kind])
-                _apply_consistency(stmt, table_ref.consistency_level)
+                stmt = prepared[kind] = session.prepare(plan[kind][0])
+                _apply_consistency(stmt, table.consistency_level)
             return stmt
 
         futures: deque = deque()
@@ -247,66 +224,47 @@ def write_routed(
             while len(futures) >= max_inflight:
                 futures.popleft().result()
 
-        size_hist: dict[int, int] = {}
-        bytes_hist: dict[int, int] = {}
-        bytes_stats = {"min": None, "max": None, "sum": 0, "n": 0}
+        frames, sizes = Histogram(), Histogram(pow2=True)
 
-        def submit(stmts: list[tuple[str, dict]]) -> tuple[int, int]:
+        def submit(stmts: list[tuple[str, dict]]) -> None:
             """One key-run → unlogged batch frames of ≤ max_batch; a chunk of
-            one goes as a standalone EXECUTE. Returns (batch_frames, singles)
-            and observes every frame into the bounded size histogram (KAF-99:
-            a single EXECUTE is a frame of size 1) and every statement into
-            the bytes histogram/stats.
-            """
-            batch_frames = singles = 0
+            one goes as a standalone EXECUTE. Observes every frame into the
+            frame-size histogram (KAF-99: a single EXECUTE is a frame of
+            size 1) and every statement into the bytes histogram."""
             for i in range(0, len(stmts), max_batch):
                 chunk = stmts[i : i + max_batch]
                 throttle()
                 if len(chunk) == 1:
                     kind, params = chunk[0]
                     fut = session.execute_async(statement(kind), params)
-                    singles += 1
                 else:
                     fut = _submit_batch(
                         session,
                         [(statement(k), p) for k, p in chunk],
-                        table_ref.consistency_level,
-                        counter=bool(schema_ref.counters),
+                        table.consistency_level,
+                        counter=bool(schema.counters),
                     )
-                    batch_frames += 1
-                size_hist[len(chunk)] = size_hist.get(len(chunk), 0) + 1
+                frames.add(len(chunk))
                 for _kind, params in chunk:
-                    nb = _estimate_statement_bytes(params)
-                    bb = _pow2_bucket(nb)
-                    bytes_hist[bb] = bytes_hist.get(bb, 0) + 1
-                    bytes_stats["n"] += 1
-                    bytes_stats["sum"] += nb
-                    if bytes_stats["min"] is None or nb < bytes_stats["min"]:
-                        bytes_stats["min"] = nb
-                    if bytes_stats["max"] is None or nb > bytes_stats["max"]:
-                        bytes_stats["max"] = nb
+                    sizes.add(_estimate_statement_bytes(params))
                 futures.append(fut)
-            return batch_frames, singles
 
-        n_rows = n_batches = n_singles = 0
         run_key = object()
         run: list[tuple[str, dict]] = []
         try:
-            for r in rows:
-                row = r.asDict()
-                key = tuple(row[c] for c in pk)
+            for row in rows:
+                r = tuple(row)  # Row.__getitem__ is a Python-level call
+                key = r[1:key_end]
                 if key != run_key and run:
-                    b, s = submit(run)
-                    n_batches += b
-                    n_singles += s
+                    submit(run)
                     run = []
                 run_key = key
-                run.append(_route_and_params(row, table_ref, schema_ref))
-                n_rows += 1
+                kind = r[0]
+                binds = plan[kind][1]
+                params = {n: (d if (v := r[i]) is None else v) for n, i, d in binds}
+                run.append((kind, params))
             if run:
-                b, s = submit(run)
-                n_batches += b
-                n_singles += s
+                submit(run)
             while futures:
                 futures.popleft().result()
         except Exception:
@@ -319,40 +277,29 @@ def write_routed(
                 except Exception:
                     pass  # the first failure is the one re-raised
             raise
-        yield (n_rows, n_batches, n_singles, size_hist, bytes_hist, bytes_stats)
+        yield frames, sizes
 
-    # the columns _route_and_params reads
-    bound = [c.name for c in schema.columns] + [e.column for e in table.mapping]
-    bound += [ROUTE_COL, TTL_COL, WRITETIME_COL]
     parts = (
-        routed.select(*[c for c in dict.fromkeys(bound) if c in routed.columns])
+        routed.select(
+            statement_kind(table, schema).alias("_statement_kind"),
+            *[c if c in present else F.lit(None).alias(c) for c in names],
+        )
         .repartition(*[F.col(c) for c in pk])
         .sortWithinPartitions(*[F.col(c) for c in sort_cols])
         .rdd.mapPartitions(write_partition)
         .collect()
     )
-
-    def _merge(idx: int) -> dict[int, int]:
-        merged: dict[int, int] = {}
-        for p in parts:
-            for bucket, n in p[idx].items():
-                merged[bucket] = merged.get(bucket, 0) + n
-        return merged
-
-    stats_parts = [p[5] for p in parts if p[5]["n"]]
-    bytes_stats = {
-        "min": min((p["min"] for p in stats_parts), default=None),
-        "max": max((p["max"] for p in stats_parts), default=None),
-        "sum": sum(p["sum"] for p in stats_parts),
-        "n": sum(p["n"] for p in stats_parts),
-    }
+    frames, sizes = Histogram(), Histogram(pow2=True)
+    for task_frames, task_sizes in parts:
+        frames.merge(task_frames)
+        sizes.merge(task_sizes)
+    singles = frames.buckets.get(1, 0)
     return {
-        "rows": sum(p[0] for p in parts),
-        "batches": sum(p[1] for p in parts),
-        "singles": sum(p[2] for p in parts),
-        "batch_size_hist": _merge(3),
-        "batch_bytes_hist": _merge(4),
-        "bytes_stats": bytes_stats,
+        "rows": frames.sum,
+        "batches": frames.n - singles,
+        "singles": singles,
+        "batch_size_hist": frames,
+        "batch_bytes_hist": sizes,
     }
 
 

@@ -21,6 +21,19 @@ ROUTE_INSERT = "INSERT"
 ROUTE_DELETE = "DELETE"
 ROUTE_COUNTER = "UPDATE_COUNTER"
 
+# The driver's UNSET sentinel when the optional package is present, a stable
+# stand-in otherwise. The driver compares it by identity, so a bind list
+# holding it must be built in the process that executes the statements.
+try:  # pragma: no cover - depends on optional package
+    from cassandra.query import UNSET_VALUE as UNSET  # type: ignore
+except ImportError:  # pragma: no cover
+
+    class _Unset:
+        def __repr__(self) -> str:
+            return "UNSET"
+
+    UNSET = _Unset()
+
 
 def add_ttl_writetime(mapped: DataFrame, table: TableConfig) -> DataFrame:
     """Attach ``_ttl`` (seconds, int) and ``_writetime`` (microseconds, long).
@@ -98,44 +111,78 @@ def route_writes(mapped: DataFrame, table: TableConfig, schema: TableSchema) -> 
     return mapped.withColumn(ROUTE_COL, route)
 
 
-def cql_templates(table: TableConfig, schema: TableSchema) -> dict[str, str]:
-    """The ONE source of CQL template shapes (W1/W2/W4/W3/W5) — used both by
-    ``cql_statement`` (the per-row oracle-verified column) and the physical
-    writer's statement preparation, so the executed CQL can never drift from
-    the verified shapes.
+def statements(
+    table: TableConfig, schema: TableSchema
+) -> dict[str, tuple[str, list[tuple[str, str, object]]]]:
+    """The ONE source of statement shapes (W1/W2/W4/W3/W5): statement kind →
+    (CQL template, binds). Each bind is ``(bind name, source column, value
+    bound when the source is null or absent)``; the name is one of the
+    template's ``:name`` placeholders. ``cql_statement`` (the per-row
+    oracle-verified column) and the physical writer both read it, so the
+    executed CQL and its parameters can never drift from the verified shapes.
 
-    Keys: provided | insert | insert_ttl | insert_plain | insert_plain_ttl |
+    Kinds: provided | insert | insert_ttl | insert_plain | insert_plain_ttl |
     delete | counter. ``insert_plain`` omits USING TIMESTAMP for rows without
     a writetime (binding null to a USING TIMESTAMP variable is a server
     error); ``insert_plain_ttl`` covers the TTL-but-no-writetime row (e.g. a
     static table TTL with no mapped __timestamp) — without it the TTL would
-    silently drop.
+    silently drop. A null value binds as UNSET under nullToUnset (W6,
+    reference: RawDataEndToEndCCMIT.java:181-218), as null otherwise; key
+    columns bind as they are and a null counter increment binds 0.
     """
+    unset = UNSET if table.null_to_unset else None
     if table.query is not None:
-        return {"provided": table.query}
+        provided = [(e.column, e.column, unset) for e in table.mapping]
+        return {"provided": (table.query, provided)}
     fq = f"{table.keyspace}.{table.table}"
     cols = [c.name for c in schema.columns]
+    values = [(c, c, unset) for c in cols]
+    keys = [(c, c, None) for c in schema.primary_key]
+    where = " WHERE " + " AND ".join(f"{c}=:{c}" for c in schema.primary_key)
+    wt = ("message_internal_timestamp", WRITETIME_COL, None)
+    ttl = ("message_internal_ttl", TTL_COL, None)
     insert_plain = (
         f"INSERT INTO {fq}({','.join(cols)}) VALUES "
         f"({','.join(':' + c for c in cols)})"
     )
     insert = insert_plain + " USING TIMESTAMP :message_internal_timestamp"
     out = {
-        "insert": insert,
-        "insert_ttl": insert + " AND TTL :message_internal_ttl",
-        "insert_plain": insert_plain,
-        "insert_plain_ttl": insert_plain + " USING TTL :message_internal_ttl",
-        "delete": f"DELETE FROM {fq} WHERE "
-        + " AND ".join(f"{c}=:{c}" for c in schema.primary_key),
+        "insert": (insert, values + [wt]),
+        "insert_ttl": (insert + " AND TTL :message_internal_ttl", values + [wt, ttl]),
+        "insert_plain": (insert_plain, values),
+        "insert_plain_ttl": (
+            insert_plain + " USING TTL :message_internal_ttl", values + [ttl]
+        ),
+        "delete": (f"DELETE FROM {fq}{where}", keys),
     }
     if schema.counters:
-        out["counter"] = (
-            f"UPDATE {fq} SET "
-            + ", ".join(f"{c} = {c} + :{c}" for c in schema.counters)
-            + " WHERE "
-            + " AND ".join(f"{c}=:{c}" for c in schema.primary_key)
-        )
+        sets = ", ".join(f"{c} = {c} + :{c}" for c in schema.counters)
+        increments = [(c, c, 0) for c in schema.counters]
+        out["counter"] = (f"UPDATE {fq} SET {sets}{where}", keys + increments)
     return out
+
+
+def cql_templates(table: TableConfig, schema: TableSchema) -> dict[str, str]:
+    """Statement kind → CQL template text, from :func:`statements`."""
+    return {kind: text for kind, (text, _binds) in statements(table, schema).items()}
+
+
+def statement_kind(table: TableConfig, schema: TableSchema) -> Column:
+    """The statement kind of each routed row — the one place it is decided:
+    the provided query (W5) for every row of a provided-query table, else
+    the delete / counter route, else the insert variant that the row's
+    writetime and TTL call for. One SQL CASE: a single call into the JVM
+    per write, where a ``F.when`` chain makes one per operator."""
+    if table.query is not None:
+        return F.lit("provided")
+    route, wt, ttl = ROUTE_COL, WRITETIME_COL, TTL_COL
+    counter = f"WHEN {route} = '{ROUTE_COUNTER}' THEN 'counter' " if schema.counters else ""
+    return F.expr(
+        f"CASE WHEN {route} = '{ROUTE_DELETE}' THEN 'delete' {counter}"
+        f"WHEN {wt} IS NULL AND {ttl} IS NOT NULL THEN 'insert_plain_ttl' "
+        f"WHEN {wt} IS NULL THEN 'insert_plain' "
+        f"WHEN {ttl} IS NOT NULL THEN 'insert_ttl' ELSE 'insert' END"
+    )
 
 
 def cql_statement(table: TableConfig, schema: TableSchema) -> Column:
@@ -151,23 +198,8 @@ def cql_statement(table: TableConfig, schema: TableSchema) -> Column:
     In provided-query mode (W5, reference: ProvidedQueryCCMIT.java:90-129) the
     user's CQL text is used verbatim — no generation, no validation.
     """
-    t = cql_templates(table, schema)
-    if table.query is not None:
-        return F.lit(t["provided"])
-    chain = (
-        F.when(F.col(ROUTE_COL) == ROUTE_DELETE, F.lit(t["delete"]))
-    )
-    if "counter" in t:
-        chain = chain.when(F.col(ROUTE_COL) == ROUTE_COUNTER, F.lit(t["counter"]))
-    return (
-        chain.when(
-            F.col(WRITETIME_COL).isNull() & F.col(TTL_COL).isNotNull(),
-            F.lit(t["insert_plain_ttl"]),
-        )
-        .when(F.col(WRITETIME_COL).isNull(), F.lit(t["insert_plain"]))
-        .when(F.col(TTL_COL).isNotNull(), F.lit(t["insert_ttl"]))
-        .otherwise(F.lit(t["insert"]))
-    )
+    texts = [F.lit(x) for kv in cql_templates(table, schema).items() for x in kv]
+    return F.create_map(*texts)[statement_kind(table, schema)]
 
 
 def partition_key_batches(

@@ -56,6 +56,7 @@ from kafka_sink_spark.operators.writes import (
     route_writes,
 )
 from kafka_sink_spark.mapping.compiler import compile_mapping
+from kafka_sink_spark.operators.cassandra_writer import Histogram
 from kafka_sink_spark.operators.records import decode_records
 
 # Flag column marking Avro records whose non-null payload failed to decode
@@ -70,16 +71,14 @@ class SinkMetrics:
 
     KAF-99 parity (reference: SimpleEndToEndSimulacronIT.java:859-874
     asserts batchSizeHistogram / batchSizeInBytesHistogram per
-    'topic|ks.table'): ``batch_size_histogram`` maps each key to
-    {records_per_wire_frame: n_frames} (a standalone EXECUTE is a frame of
-    size 1, capped at maxNumberOfRecordsInBatch so the dict is bounded);
-    ``batch_size_in_bytes_histogram`` maps each key to
-    {power-of-two byte bucket: n_statements} over the estimated
-    bound-value payload — one update PER STATEMENT, like the reference's
-    histogram (a 2-statement batch adds two observations);
-    ``batch_size_in_bytes_stats`` carries the exact {min,max,sum,n}
-    snapshot per key. All are fed from write_routed's accounting via
-    ``observe_write``.
+    'topic|ks.table'): ``batch_size_histogram`` maps each key to a
+    :class:`Histogram` of statements per wire frame (a standalone EXECUTE
+    is a frame of size 1; at most maxNumberOfRecordsInBatch, so the buckets
+    are bounded); ``batch_size_in_bytes_histogram`` to one of the
+    estimated bound-value payload per statement, in power-of-two buckets —
+    one update PER STATEMENT, like the reference's histogram (a 2-statement
+    batch adds two observations). Both carry exact count/min/max/sum and
+    are fed from write_routed's histograms via ``observe_write``.
 
     KAF-100 parity (changelog/README.md:16 "Add rates to
     failedRecordCount"): ``record_rate`` / ``failed_record_rate`` expose
@@ -91,11 +90,8 @@ class SinkMetrics:
     record_count: dict[str, int] = field(default_factory=dict)
     failed_record_count: dict[str, int] = field(default_factory=dict)
     failed_with_unknown_topic: int = 0
-    batch_size_histogram: dict[str, dict[int, int]] = field(default_factory=dict)
-    batch_size_in_bytes_histogram: dict[str, dict[int, int]] = field(
-        default_factory=dict
-    )
-    batch_size_in_bytes_stats: dict[str, dict] = field(default_factory=dict)
+    batch_size_histogram: dict[str, Histogram] = field(default_factory=dict)
+    batch_size_in_bytes_histogram: dict[str, Histogram] = field(default_factory=dict)
     started_at: float = field(default_factory=time.monotonic)
 
     def bump(self, key: str, n: int, failed: bool = False) -> None:
@@ -103,26 +99,15 @@ class SinkMetrics:
         d[key] = d.get(key, 0) + n
 
     def observe_write(self, key: str, stats: dict) -> None:
-        """Merge one write_routed stats dict (its batch_size_hist /
-        batch_bytes_hist components) into the per-key histograms."""
+        """Merge one write_routed stats dict's histograms (``batch_size_hist``
+        / ``batch_bytes_hist``) into the per-key ones."""
         for attr, part in (
-            ("batch_size_histogram", stats.get("batch_size_hist")),
-            ("batch_size_in_bytes_histogram", stats.get("batch_bytes_hist")),
+            ("batch_size_histogram", "batch_size_hist"),
+            ("batch_size_in_bytes_histogram", "batch_bytes_hist"),
         ):
-            if not part:
-                continue
-            hist = getattr(self, attr).setdefault(key, {})
-            for bucket, n in part.items():
-                hist[bucket] = hist.get(bucket, 0) + n
-        bs = stats.get("bytes_stats")
-        if bs and bs.get("n"):
-            cur = self.batch_size_in_bytes_stats.setdefault(
-                key, {"min": None, "max": None, "sum": 0, "n": 0}
-            )
-            cur["min"] = bs["min"] if cur["min"] is None else min(cur["min"], bs["min"])
-            cur["max"] = bs["max"] if cur["max"] is None else max(cur["max"], bs["max"])
-            cur["sum"] += bs["sum"]
-            cur["n"] += bs["n"]
+            h = stats.get(part)
+            if h is not None and h.n:
+                getattr(self, attr).setdefault(key, Histogram(h.pow2)).merge(h)
 
     def _rate(self, counts: dict[str, int], key: str) -> float:
         elapsed = max(time.monotonic() - self.started_at, 1e-9)
@@ -143,13 +128,12 @@ class SinkMetrics:
             "failed_record_count": dict(self.failed_record_count),
             "failed_with_unknown_topic": self.failed_with_unknown_topic,
             "batch_size_histogram": {
-                k: dict(v) for k, v in self.batch_size_histogram.items()
+                k: Histogram(h.pow2).merge(h)
+                for k, h in self.batch_size_histogram.items()
             },
             "batch_size_in_bytes_histogram": {
-                k: dict(v) for k, v in self.batch_size_in_bytes_histogram.items()
-            },
-            "batch_size_in_bytes_stats": {
-                k: dict(v) for k, v in self.batch_size_in_bytes_stats.items()
+                k: Histogram(h.pow2).merge(h)
+                for k, h in self.batch_size_in_bytes_histogram.items()
             },
             "record_rate": {k: self.record_rate(k) for k in keys},
             "failed_record_rate": {k: self.failed_record_rate(k) for k in keys},

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from kafka_sink_spark.operators.cassandra_writer import Histogram
+
 
 @dataclass(frozen=True)
 class HistogramView:
@@ -30,23 +32,15 @@ class HistogramView:
     buckets: dict[int, int]
 
 
-def _hist_view(buckets: dict[int, int], stats: dict | None = None) -> HistogramView:
-    # Exact stats (per-statement byte accounting) when available; bucket
-    # midpoint estimate otherwise.
-    if stats and stats.get("n"):
-        return HistogramView(
-            count=stats["n"],
-            min=stats["min"],
-            max=stats["max"],
-            mean=stats["sum"] / stats["n"],
-            buckets=dict(buckets),
-        )
-    n = sum(buckets.values())
-    if not n:
-        return HistogramView(count=0, min=None, max=None, mean=None, buckets={})
-    lo, hi = min(buckets), max(buckets)
-    mean = sum(b * c for b, c in buckets.items()) / n
-    return HistogramView(count=n, min=lo, max=hi, mean=mean, buckets=dict(buckets))
+def _hist_view(h: Histogram | None) -> HistogramView:
+    h = h or Histogram()
+    return HistogramView(
+        count=h.n,
+        min=h.min,
+        max=h.max,
+        mean=h.sum / h.n if h.n else None,
+        buckets=dict(h.buckets),
+    )
 
 
 class SinkMetricsRegistry:
@@ -84,16 +78,13 @@ class SinkMetricsRegistry:
 
     def get_batch_size_histogram(self, topic: str, ks_table: str) -> HistogramView:
         key = self._key(topic, ks_table)
-        return _hist_view(self.latest.get("batch_size_histogram", {}).get(key, {}))
+        return _hist_view(self.latest.get("batch_size_histogram", {}).get(key))
 
     def get_batch_size_in_bytes_histogram(
         self, topic: str, ks_table: str
     ) -> HistogramView:
         key = self._key(topic, ks_table)
-        return _hist_view(
-            self.latest.get("batch_size_in_bytes_histogram", {}).get(key, {}),
-            self.latest.get("batch_size_in_bytes_stats", {}).get(key),
-        )
+        return _hist_view(self.latest.get("batch_size_in_bytes_histogram", {}).get(key))
 
     def get_failed_with_unknown_topic(self) -> int:
         return self.latest.get("failed_with_unknown_topic", 0)

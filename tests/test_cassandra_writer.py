@@ -122,22 +122,158 @@ def test_statement_texts_match_reference_shapes():
     assert texts["delete"] == "DELETE FROM ks.t WHERE a=:a"
 
 
-def test_plain_ttl_route():
+def test_plain_ttl_route(spark, tmp_path):
     """A row with a TTL but no writetime routes to insert_plain_ttl and binds
     the TTL (previously it fell to insert_plain and silently dropped it)."""
-    from kafka_sink_spark.operators.cassandra_writer import _route_and_params
+    import json
+
     from kafka_sink_spark.operators.writes import ROUTE_COL, TTL_COL, WRITETIME_COL
 
+    log_dir = str(tmp_path / "log")
+    os.makedirs(log_dir)
     schema = TableSchema(
         "ks", "t",
         [ColumnSpec("a", "bigint", primary_key=True), ColumnSpec("b", "int")],
     )
     table = TableConfig("x", "ks", "t", parse_mapping("a=key, b=value.b"))
-    row = {ROUTE_COL: "INSERT", "a": 1, "b": 2, WRITETIME_COL: None, TTL_COL: 60}
-    kind, params = _route_and_params(row, table, schema)
+    routed = spark.createDataFrame(
+        [("INSERT", 1, 2, None, 60)],
+        f"{ROUTE_COL} string, a bigint, b int, {WRITETIME_COL} bigint, {TTL_COL} bigint",
+    )
+    cfg = SinkConfig(tables=[table])
+    write_routed(routed, table, schema, cfg, _param_factory(log_dir))
+    (line,) = _read_log(log_dir)
+    sent = json.loads(line.split("\t", 1)[1])
+    kind = {v: k for k, v in statement_texts(table, schema).items()}[sent["cql"]]
+    params = sent["params"]
     assert kind == "insert_plain_ttl"
     assert params["message_internal_ttl"] == 60
     assert "message_internal_timestamp" not in params
+
+
+def test_writer_agrees_with_cql_statement_row_by_row(spark, tmp_path):
+    """The statements the writer executes are, as a multiset, the
+    ``cql_statement`` column of the same routed rows: records hitting
+    insert, insert_ttl, insert_plain, insert_plain_ttl (a null record
+    timestamp gives no writetime) and delete, and a counter table."""
+    import json
+    from collections import Counter
+    from datetime import datetime
+
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from kafka_sink_spark.operators.writes import cql_statement
+
+    ts = datetime(2020, 1, 1)
+    records = spark.createDataFrame(
+        [
+            ("t", 0, 0, ts, "1", '{"v": 1}'),
+            ("t", 0, 1, None, "2", '{"v": 2}'),
+            ("t", 0, 2, ts, "3", '{"v": null}'),
+            ("t", 0, 3, ts, "3", '{"v": 4}'),
+        ],
+        "topic string, partition int, offset long, timestamp timestamp, "
+        "key string, value string",
+    )
+    vs = StructType([StructField("v", IntegerType())])
+    plain = TableSchema(
+        "ks", "t",
+        [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("v", "int")],
+    )
+    counter = TableSchema(
+        "ks", "n",
+        [
+            ColumnSpec("pk", "bigint", primary_key=True),
+            ColumnSpec("c", "bigint", counter=True),
+        ],
+    )
+    mapping = parse_mapping("pk=key, v=value.v")
+    cases = [
+        (TableConfig("t", "ks", "t", mapping), plain),
+        (TableConfig("t", "ks", "t", mapping, ttl=60), plain),
+        (TableConfig("t", "ks", "n", parse_mapping("pk=key, c=value.v")), counter),
+    ]
+    seen = set()
+    for n, (table, schema) in enumerate(cases):
+        log_dir = str(tmp_path / f"log{n}")
+        os.makedirs(log_dir)
+        routed = run_sink_pipeline(records, table, schema, value_schema=vs)
+        expected = Counter(
+            r[0] for r in routed.select(cql_statement(table, schema)).collect()
+        )
+        cfg = SinkConfig(tables=[table])
+        write_routed(routed, table, schema, cfg, _param_factory(log_dir))
+        sent = []
+        for line in _read_log(log_dir):
+            frame = json.loads(line.split("\t", 1)[1])
+            sent += frame.get("stmts", [frame])
+        assert Counter(s["cql"] for s in sent) == expected
+        kind_of = {v: k for k, v in statement_texts(table, schema).items()}
+        seen |= {kind_of[text] for text in expected}
+        if schema.counters:
+            # the key binds as it is, a null increment as 0
+            pairs = sorted((s["params"]["pk"], s["params"]["c"]) for s in sent)
+            assert pairs == [(1, 1), (2, 2), (3, 0), (3, 4)]
+    assert seen == {
+        "insert", "insert_ttl", "insert_plain", "insert_plain_ttl", "delete", "counter",
+    }
+
+
+def test_statement_binds_match_template_placeholders():
+    """Every statement kind's bind names are exactly its CQL text's
+    ``:name`` placeholders, for plain, static-TTL, clustering, counter and
+    provided-query tables."""
+    import re
+
+    from kafka_sink_spark.operators.writes import statements
+
+    plain = TableSchema(
+        "ks", "t",
+        [ColumnSpec("a", "bigint", primary_key=True), ColumnSpec("b", "int")],
+    )
+    clustering = TableSchema(
+        "ks", "c",
+        [
+            ColumnSpec("p", "bigint", primary_key=True),
+            ColumnSpec("s", "bigint", primary_key=True),
+            ColumnSpec("v", "string"),
+        ],
+    )
+    counter = TableSchema(
+        "ks", "n",
+        [
+            ColumnSpec("p", "bigint", primary_key=True),
+            ColumnSpec("c1", "bigint", counter=True),
+            ColumnSpec("c2", "bigint", counter=True),
+        ],
+    )
+    cases = [
+        (TableConfig("x", "ks", "t", parse_mapping("a=key, b=value.b")), plain),
+        (TableConfig("x", "ks", "t", parse_mapping("a=key"), ttl=60), plain),
+        (TableConfig("x", "ks", "c", parse_mapping("p=key, s=value.s, v=value.v")),
+         clustering),
+        (TableConfig("x", "ks", "n", parse_mapping("p=key, c1=value.a, c2=value.b")),
+         counter),
+        (
+            TableConfig(
+                "x", "ks", "t", parse_mapping("a=key, b=value.b"),
+                query="UPDATE ks.t SET l = l + [:b] WHERE a = :a",
+                deletes_enabled=False,
+            ),
+            plain,
+        ),
+    ]
+    kinds = set()
+    for table, schema in cases:
+        for kind, (text, binds) in statements(table, schema).items():
+            kinds.add(kind)
+            names = [name for name, _src, _null in binds]
+            assert len(names) == len(set(names)), (kind, names)
+            assert set(names) == set(re.findall(r":(\w+)", text)), (kind, text)
+    assert kinds == {
+        "insert", "insert_ttl", "insert_plain", "insert_plain_ttl",
+        "delete", "counter", "provided",
+    }
 
 
 def test_partition_key_defaults_and_validation():
@@ -515,24 +651,25 @@ def test_batch_histograms_accounting(spark, tmp_path):
     cfg = SinkConfig(tables=[table], max_number_of_records_in_batch=32)
     stats = write_routed(routed, table, schema, cfg, _factory_for(log_dir))
     # 3 keys x 70 rows -> frames of [32, 32, 6] per key
-    assert stats["batch_size_hist"] == {32: 6, 6: 3}
-    assert sum(sz * n for sz, n in stats["batch_size_hist"].items()) == stats["rows"]
-    assert sum(stats["batch_size_hist"].values()) == (
+    size_hist = stats["batch_size_hist"].buckets
+    assert size_hist == {32: 6, 6: 3}
+    assert sum(sz * n for sz, n in size_hist.items()) == stats["rows"]
+    assert sum(size_hist.values()) == (
         stats["batches"] + stats["singles"]
     )
-    bytes_hist = stats["batch_bytes_hist"]
+    bytes_hist = stats["batch_bytes_hist"].buckets
     assert sum(bytes_hist.values()) == stats["rows"]  # one update per statement
     assert all(b == 0 or (b & (b - 1)) == 0 for b in bytes_hist)  # powers of two
     assert any(b > 0 for b in bytes_hist)  # statements carry actual payload
-    bs = stats["bytes_stats"]
-    assert bs["n"] == stats["rows"] and 0 < bs["min"] <= bs["max"]
+    bs = stats["batch_bytes_hist"]
+    assert bs.n == stats["rows"] and 0 < bs.min <= bs.max
 
     # singles path: cap 1 -> every row is a frame of size 1
     log2 = str(tmp_path / "log2")
     os.makedirs(log2)
     cfg1 = SinkConfig(tables=[table], max_number_of_records_in_batch=1)
     stats1 = write_routed(routed, table, schema, cfg1, _factory_for(log2))
-    assert stats1["batch_size_hist"] == {1: 210}
+    assert stats1["batch_size_hist"].buckets == {1: 210}
     assert stats1["singles"] == 210 and stats1["batches"] == 0
 
 
@@ -650,10 +787,10 @@ def test_simulacron_batch_requests_contract(spark, tmp_path):
         ]
         assert sorted(bound) == sorted((42, b, 153000987000) for b in values)
         # KAF-99 shapes: one batch of N statements
-        assert stats["batch_size_hist"] == {len(values): 1}
-        bs = stats["bytes_stats"]
-        assert bs["n"] == len(values)
-        assert (bs["min"] == bs["max"]) == same_bytes
+        assert stats["batch_size_hist"].buckets == {len(values): 1}
+        bs = stats["batch_bytes_hist"]
+        assert bs.n == len(values)
+        assert (bs.min == bs.max) == same_bytes
 
 
 def test_simulacron_fail_batch_marks_all_member_offsets(spark, tmp_path):

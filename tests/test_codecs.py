@@ -237,6 +237,31 @@ def test_global_write_tuning_keys():
     assert dflt.query_execution_timeout_s == 30
 
 
+def test_writer_bounds_reject_values_below_one():
+    """maxNumberOfRecordsInBatch / maxConcurrentRequests below 1 would make
+    the writer send nothing (a negative chunk step) or fail on the executor
+    (a zero step, an empty in-flight window): both keys are rejected when
+    the config is built, parsed or by hand, naming the key."""
+    from kafka_sink_spark.config import SinkConfig
+
+    for key in ("maxNumberOfRecordsInBatch", "maxConcurrentRequests"):
+        for bad in ("0", "-1"):
+            with pytest.raises(ConfigError, match=key):
+                parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", key: bad})
+    with pytest.raises(ConfigError, match="maxNumberOfRecordsInBatch"):
+        SinkConfig(tables=[], max_number_of_records_in_batch=0)
+    with pytest.raises(ConfigError, match="maxConcurrentRequests"):
+        SinkConfig(tables=[], max_concurrent_requests=-1)
+    one = parse_sink_config(
+        {
+            "topic.t.ks.tbl.mapping": "pk=key",
+            "maxNumberOfRecordsInBatch": "1",
+            "maxConcurrentRequests": "1",
+        }
+    )
+    assert one.max_number_of_records_in_batch == one.max_concurrent_requests == 1
+
+
 def test_cloud_mode_rules():
     """S7: bundle ⊕ contactPoints rejected; weak CLs clamp to LOCAL_QUORUM."""
     with pytest.raises(ConfigError, match="mutually exclusive"):

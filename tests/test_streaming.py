@@ -395,8 +395,8 @@ def test_batch_size_histograms_in_sink_metrics(spark, tmp_path):
     assert q.exception() is None
 
     key = "events|ks.user_events"
-    size_hist = metrics.batch_size_histogram[key]
-    bytes_hist = metrics.batch_size_in_bytes_histogram[key]
+    size_hist = metrics.batch_size_histogram[key].buckets
+    bytes_hist = metrics.batch_size_in_bytes_histogram[key].buckets
     # mixed sizes: full batches AND smaller frames both occur
     assert len(size_hist) > 1
     assert max(size_hist) == 32 and min(size_hist) >= 1
@@ -407,9 +407,9 @@ def test_batch_size_histograms_in_sink_metrics(spark, tmp_path):
     # reference updates batchSizeInBytesHistogram per batch member)
     assert sum(bytes_hist.values()) == metrics.record_count[key]
     assert all(b == 0 or (b & (b - 1)) == 0 for b in bytes_hist)
-    bstats = metrics.batch_size_in_bytes_stats[key]
-    assert bstats["n"] == metrics.record_count[key]
-    assert 0 < bstats["min"] <= bstats["max"]
+    bstats = metrics.batch_size_in_bytes_histogram[key]
+    assert bstats.n == metrics.record_count[key]
+    assert 0 < bstats.min <= bstats.max
     # KAF-100 rates: events flowed, none failed
     assert metrics.record_rate(key) > 0
     assert metrics.failed_record_rate(key) == 0.0
