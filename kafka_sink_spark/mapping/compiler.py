@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kafka_sink_spark.config import TableConfig, TableSchema
 from kafka_sink_spark.functions.timeuuid import now_timeuuid
@@ -23,10 +24,9 @@ from kafka_sink_spark.mapping.parser import (
 from kafka_sink_spark.operators import records as R
 
 
-def _namespace_expr(df: DataFrame, entry: MappingEntry) -> Column:
-    """Resolve a mapping entry's source field to a Column on the decoded
-    record DataFrame."""
-    cols = set(df.columns)
+def _namespace_expr(cols: set[str], entry: MappingEntry) -> Column:
+    """Resolve a mapping entry's source field to a Column on a decoded
+    record frame with columns ``cols``."""
     if entry.is_function:
         if entry.path != "now":
             # Whitelist is exactly [now()] (HeadersCCMIT.java:264).
@@ -67,7 +67,20 @@ def compile_mapping(
     table: TableConfig,
     schema: TableSchema | None = None,
 ) -> DataFrame:
-    """Apply a table's mapping to a decoded record DataFrame.
+    """Apply a table's mapping to a decoded record DataFrame: the one
+    projection of :func:`mapping_columns`. The mapping is validated against
+    the table once, when the sink starts (``TableConfig.validate_against``),
+    not here."""
+    return df.select(*mapping_columns(df.schema, table, schema))
+
+
+def mapping_columns(
+    record_schema: StructType,
+    table: TableConfig,
+    schema: TableSchema | None = None,
+) -> list[Column]:
+    """A table's mapping as the select list over a decoded record frame of
+    ``record_schema``.
 
     Output columns: one per mapped target column, cast to the table column's
     Spark type when ``schema`` is given (the codec layer's cast fast path —
@@ -76,13 +89,10 @@ def compile_mapping(
     operators.writes). Record metadata columns ride along as ``_kafka_*``
     for the write stage (routing, record-timestamp writetime).
     """
-    if schema is not None:
-        table.validate_against(schema)
-
     select: list[Column] = []
-    cols = set(df.columns)
+    cols = set(record_schema.fieldNames())
     for entry in table.mapping:
-        expr = _namespace_expr(df, entry)
+        expr = _namespace_expr(cols, entry)
         # Whole-key/value onto a NON-struct column in JSON-decode mode: valid
         # JSON rows render as JSON text, non-JSON rows fall back to the
         # literal string (mode-3 literal semantics).
@@ -126,7 +136,7 @@ def compile_mapping(
     for meta in ("topic", "partition", "offset", "timestamp"):
         if meta in cols:
             select.append(F.col(meta).alias(f"_kafka_{meta}"))
-    return df.select(*select)
+    return select
 
 
 # C15 pseudo-types: declared in ColumnSpec.spark_type, stored as validated

@@ -38,10 +38,10 @@ from dataclasses import dataclass, field
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kafka_sink_spark.config import ConfigError, SinkConfig, TableConfig, TableSchema
-from kafka_sink_spark.operators.writes import UNSET, statement_kind, statements
+from kafka_sink_spark.operators.records import quote
+from kafka_sink_spark.operators.writes import UNSET, statement_kind_sql, statements
 from kafka_sink_spark.operators.writes import (  # noqa: F401 - re-exported
     cql_templates as statement_texts,
 )
@@ -279,13 +279,14 @@ def write_routed(
             raise
         yield frames, sizes
 
+    # SQL text and column names, so the narrowing builds no Column in Python.
+    narrow = [f"{statement_kind_sql(table, schema)} AS _statement_kind"] + [
+        quote(c) if c in present else f"NULL AS {quote(c)}" for c in names
+    ]
     parts = (
-        routed.select(
-            statement_kind(table, schema).alias("_statement_kind"),
-            *[c if c in present else F.lit(None).alias(c) for c in names],
-        )
-        .repartition(*[F.col(c) for c in pk])
-        .sortWithinPartitions(*[F.col(c) for c in sort_cols])
+        routed.selectExpr(*narrow)
+        .repartition(*[quote(c) for c in pk])
+        .sortWithinPartitions(*[quote(c) for c in sort_cols])
         .rdd.mapPartitions(write_partition)
         .collect()
     )

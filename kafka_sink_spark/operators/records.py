@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -40,6 +40,85 @@ HEADERS_MAP = "headers"
 
 # The reference's pseudo-field for whole-raw-value (RawData.FIELD_NAME).
 RAW_FIELD = "__self"
+
+
+def quote(name: str) -> str:
+    """A column name as a SQL identifier: backtick-quoted, so a dot or other
+    special character in it is not read as a field path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def column(name: str) -> Column:
+    """A column referenced by its exact name (see :func:`quote`)."""
+    return F.col(quote(name))
+
+
+def project(
+    schema: StructType, add: dict[str, Column] | None = None, drop: tuple[str, ...] = ()
+) -> list[Column]:
+    """The select list of ``df.withColumns(add).drop(*drop)`` over a frame
+    of ``schema``: every kept column by name (replaced in place when ``add``
+    names it), then the new ones in ``add`` order. Name-based, so one list
+    applies to every frame of that schema. When nothing is replaced or
+    dropped, the kept columns are one ``*``: the same projection, and each
+    select pays one py4j call per list entry."""
+    add = dict(add or {})
+    names = schema.fieldNames()
+    if not (set(add) | set(drop)) & set(names):
+        return [F.col("*")] + [c.alias(name) for name, c in add.items()]
+    out = []
+    for name in names:
+        if name not in drop:
+            out.append(add.pop(name).alias(name) if name in add else column(name))
+    return out + [c.alias(name) for name, c in add.items()]
+
+
+def decode_stages(
+    schema: StructType,
+    value_schema: StructType | None = None,
+    key_schema: StructType | None = None,
+) -> list[list[Column]]:
+    """The select lists that decode a record frame of ``schema``, applied in
+    order (see :func:`decode_records`): empty when nothing is decoded (raw
+    mode on both sides), else at most two projections — the staged JSON
+    parse, then the parsed/literal namespace columns."""
+    types = {f.name: f.dataType for f in schema.fields}
+    parse: dict[str, Column] = {}
+    derive: dict[str, Column] = {}
+    for col_name, side_schema, parsed_name, literal_name in (
+        ("key", key_schema, KEY_PARSED, KEY_LITERAL),
+        ("value", value_schema, VALUE_PARSED, VALUE_LITERAL),
+    ):
+        if col_name not in types:
+            continue
+        source = column(col_name)
+        if isinstance(types[col_name], StructType):
+            # Mode 1: already a typed struct (Avro path).
+            derive[parsed_name] = source
+            derive[literal_name] = F.lit(None).cast("string")
+        elif side_schema is not None:
+            schema_with_corrupt = StructType(
+                list(side_schema.fields) + [StructField(CORRUPT_COL, StringType())]
+            )
+            raw_name = f"_{col_name}_parsed_raw"
+            # Stage 1: parse once.
+            parse[raw_name] = F.from_json(
+                source.cast("string"),
+                schema_with_corrupt,
+                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
+            )
+            # Stage 2: derive parsed/literal from the staged parse.
+            raw = F.col(raw_name)
+            is_corrupt = raw.getField(CORRUPT_COL).isNotNull()
+            derive[parsed_name] = F.when(source.isNotNull() & ~is_corrupt, raw).otherwise(
+                F.lit(None)
+            )
+            derive[literal_name] = F.when(
+                source.isNotNull() & is_corrupt, source.cast("string")
+            ).otherwise(F.lit(None))
+        # Raw mode: no namespace columns; the compiler reads the bare column.
+    stages = [project(schema, parse)] if parse else []
+    return stages + ([project(schema, derive)] if derive else [])
 
 
 def decode_records(
@@ -68,48 +147,15 @@ def decode_records(
     so the JSON parse runs exactly once per record instead of once per
     referencing expression.
     """
-    out = records
-    for col_name, schema, parsed_name, literal_name in (
-        ("key", key_schema, KEY_PARSED, KEY_LITERAL),
-        ("value", value_schema, VALUE_PARSED, VALUE_LITERAL),
-    ):
-        if col_name not in records.columns:
-            continue
-        dtype = dict(records.dtypes)[col_name]
-        if dtype.startswith("struct"):
-            # Mode 1: already a typed struct (Avro path).
-            out = out.withColumn(parsed_name, F.col(col_name)).withColumn(
-                literal_name, F.lit(None).cast("string")
-            )
-        elif schema is not None:
-            schema_with_corrupt = StructType(
-                [f for f in schema.fields]
-                + [StructType().add(CORRUPT_COL, StringType()).fields[0]]
-            )
-            raw_name = f"_{col_name}_parsed_raw"
-            # Stage 1: parse once.
-            out = out.withColumn(
-                raw_name,
-                F.from_json(
-                    F.col(col_name).cast("string"),
-                    schema_with_corrupt,
-                    {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-                ),
-            )
-            # Stage 2: derive parsed/literal from the staged parse.
-            source = F.col(col_name)
-            is_corrupt = F.col(raw_name).getField(CORRUPT_COL).isNotNull()
-            out = out.select(
-                "*",
-                F.when(source.isNotNull() & ~is_corrupt, F.col(raw_name))
-                .otherwise(F.lit(None))
-                .alias(parsed_name),
-                F.when(source.isNotNull() & is_corrupt, source.cast("string"))
-                .otherwise(F.lit(None))
-                .alias(literal_name),
-            ).drop(raw_name)
-        # Raw mode: no namespace columns; the compiler reads the bare column.
-    return out
+    return apply_stages(records, decode_stages(records.schema, value_schema, key_schema))
+
+
+def apply_stages(df: DataFrame, stages: list) -> DataFrame:
+    """Apply decode stages in order: a select list is one projection; a
+    callable (the Python Avro codec's ``mapInPandas``) maps the frame."""
+    for stage in stages:
+        df = stage(df) if callable(stage) else df.select(*stage)
+    return df
 
 
 def headers_from_entries(headers_array: Column) -> Column:

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kafka_sink_spark.config import SinkConfig, TableConfig, TableSchema, time_unit_to_seconds
+from kafka_sink_spark.operators.records import project
 
 ROUTE_COL = "_route"
 TTL_COL = "_ttl"
@@ -20,6 +22,8 @@ WRITETIME_COL = "_writetime"
 ROUTE_INSERT = "INSERT"
 ROUTE_DELETE = "DELETE"
 ROUTE_COUNTER = "UPDATE_COUNTER"
+# The compiler's raw __ttl / __timestamp columns, replaced by _ttl/_writetime.
+_MAPPED_TIMES = ("_mapped_ttl", "_mapped_timestamp")
 
 # The driver's UNSET sentinel when the optional package is present, a stable
 # stand-in otherwise. The driver compares it by identity, so a bind list
@@ -36,7 +40,31 @@ except ImportError:  # pragma: no cover
 
 
 def add_ttl_writetime(mapped: DataFrame, table: TableConfig) -> DataFrame:
-    """Attach ``_ttl`` (seconds, int) and ``_writetime`` (microseconds, long).
+    """Attach ``_ttl`` and ``_writetime`` (:func:`ttl_writetime_columns`)
+    and drop the raw ``_mapped_ttl`` / ``_mapped_timestamp``."""
+    add = ttl_writetime_columns(mapped.schema, table)
+    return mapped.select(*project(mapped.schema, add, drop=_MAPPED_TIMES))
+
+
+def route_writes(mapped: DataFrame, table: TableConfig, schema: TableSchema) -> DataFrame:
+    """Add the ``_route`` column of :func:`route_column`."""
+    return mapped.select(*project(mapped.schema, {ROUTE_COL: route_column(table, schema)}))
+
+
+def ttl_route_columns(
+    mapped_schema: StructType, table: TableConfig, schema: TableSchema
+) -> list[Column]:
+    """:func:`add_ttl_writetime` then :func:`route_writes` over a mapped
+    frame of ``mapped_schema``, as ONE select list (the route reads only
+    mapped columns, never ``_ttl``/``_writetime``)."""
+    add = ttl_writetime_columns(mapped_schema, table)
+    add[ROUTE_COL] = route_column(table, schema)
+    return project(mapped_schema, add, drop=_MAPPED_TIMES)
+
+
+def ttl_writetime_columns(mapped_schema: StructType, table: TableConfig) -> dict[str, Column]:
+    """``_ttl`` (seconds, int) and ``_writetime`` (microseconds, long) of a
+    mapped frame of ``mapped_schema``.
 
     TTL precedence (SURVEY §2.6): mapped ``__ttl`` (converted from
     ``ttlTimeUnit``, default SECONDS; NEGATIVE → 0 per reference
@@ -48,35 +76,31 @@ def add_ttl_writetime(mapped: DataFrame, table: TableConfig) -> DataFrame:
     ms→µs (T1: record ts 153000987 → writetime 153000987000,
     WriteTimestampAndTtlCCMIT.java:46-70).
     """
-    out = mapped
+    cols = set(mapped_schema.fieldNames())
 
-    if "_mapped_ttl" in mapped.columns:
+    if "_mapped_ttl" in cols:
         factor = time_unit_to_seconds(table.ttl_time_unit)
         ttl_s = (F.col("_mapped_ttl") * F.lit(factor)).cast("long")
-        ttl_s = F.greatest(F.lit(0).cast("long"), ttl_s)  # negative → 0
-        out = out.withColumn(TTL_COL, ttl_s)
+        ttl = F.greatest(F.lit(0).cast("long"), ttl_s)  # negative → 0
     elif table.ttl is not None:
-        out = out.withColumn(TTL_COL, F.lit(int(table.ttl)).cast("long"))
+        ttl = F.lit(int(table.ttl)).cast("long")
     else:
-        out = out.withColumn(TTL_COL, F.lit(None).cast("long"))
+        ttl = F.lit(None).cast("long")
 
-    if "_mapped_timestamp" in mapped.columns:
+    if "_mapped_timestamp" in cols:
         factor_us = time_unit_to_seconds(table.timestamp_time_unit) * 1e6
         wt = (F.col("_mapped_timestamp") * F.lit(factor_us)).cast("long")
-        out = out.withColumn(WRITETIME_COL, wt)
     elif table.query is not None:
         # W5 provided-query mode: the record-timestamp auto-writetime is NOT
         # applied (reference: ProvidedQueryCCMIT.java:127-128) — timestamps
         # only flow through an explicit USING TIMESTAMP :var in the query.
-        out = out.withColumn(WRITETIME_COL, F.lit(None).cast("long"))
-    elif "_kafka_timestamp" in mapped.columns:
-        out = out.withColumn(
-            WRITETIME_COL, (F.unix_micros(F.col("_kafka_timestamp"))).cast("long")
-        )
+        wt = F.lit(None).cast("long")
+    elif "_kafka_timestamp" in cols:
+        wt = F.unix_micros(F.col("_kafka_timestamp")).cast("long")
     else:
-        out = out.withColumn(WRITETIME_COL, F.lit(None).cast("long"))
+        wt = F.lit(None).cast("long")
 
-    return out.drop("_mapped_ttl", "_mapped_timestamp")
+    return {TTL_COL: ttl, WRITETIME_COL: wt}
 
 
 def delete_condition(table: TableConfig, schema: TableSchema) -> Column:
@@ -95,20 +119,18 @@ def delete_condition(table: TableConfig, schema: TableSchema) -> Column:
     return cond
 
 
-def route_writes(mapped: DataFrame, table: TableConfig, schema: TableSchema) -> DataFrame:
-    """Add the ``_route`` column: INSERT / DELETE / UPDATE_COUNTER.
+def route_column(table: TableConfig, schema: TableSchema) -> Column:
+    """The ``_route`` of each mapped row: INSERT / DELETE / UPDATE_COUNTER.
 
     Counter tables always take the UPDATE path (W3,
     reference: SimpleEndToEndSimulacronIT.java:318-352); otherwise W4 decides
     DELETE vs INSERT.
     """
     if schema.counters:
-        route = F.lit(ROUTE_COUNTER)
-    else:
-        route = F.when(delete_condition(table, schema), F.lit(ROUTE_DELETE)).otherwise(
-            F.lit(ROUTE_INSERT)
-        )
-    return mapped.withColumn(ROUTE_COL, route)
+        return F.lit(ROUTE_COUNTER)
+    return F.when(delete_condition(table, schema), F.lit(ROUTE_DELETE)).otherwise(
+        F.lit(ROUTE_INSERT)
+    )
 
 
 def statements(
@@ -168,16 +190,23 @@ def cql_templates(table: TableConfig, schema: TableSchema) -> dict[str, str]:
 
 
 def statement_kind(table: TableConfig, schema: TableSchema) -> Column:
+    """The statement kind of each routed row: :func:`statement_kind_sql` as
+    a Column."""
+    return F.expr(statement_kind_sql(table, schema))
+
+
+def statement_kind_sql(table: TableConfig, schema: TableSchema) -> str:
     """The statement kind of each routed row — the one place it is decided:
     the provided query (W5) for every row of a provided-query table, else
     the delete / counter route, else the insert variant that the row's
-    writetime and TTL call for. One SQL CASE: a single call into the JVM
-    per write, where a ``F.when`` chain makes one per operator."""
+    writetime and TTL call for. One SQL CASE over ``_route``,
+    ``_writetime`` and ``_ttl``: a single call into the JVM per use, where a
+    ``F.when`` chain makes one per operator."""
     if table.query is not None:
-        return F.lit("provided")
+        return "'provided'"
     route, wt, ttl = ROUTE_COL, WRITETIME_COL, TTL_COL
     counter = f"WHEN {route} = '{ROUTE_COUNTER}' THEN 'counter' " if schema.counters else ""
-    return F.expr(
+    return (
         f"CASE WHEN {route} = '{ROUTE_DELETE}' THEN 'delete' {counter}"
         f"WHEN {wt} IS NULL AND {ttl} IS NOT NULL THEN 'insert_plain_ttl' "
         f"WHEN {wt} IS NULL THEN 'insert_plain' "
@@ -309,14 +338,16 @@ def run_sink_pipeline(
 ) -> DataFrame:
     """records → decoded → mapped → ttl/writetime → routed. The full hot path
     (reference trace: CassandraSinkTask.put, SURVEY §3.3) as one declarative
-    plan."""
+    plan, from the same builders the streaming sink compiles once per
+    stream. Validates the mapping against ``schema`` first, as the
+    streaming sink does at start."""
     from kafka_sink_spark.mapping.compiler import compile_mapping
     from kafka_sink_spark.operators.records import decode_records
 
+    table.validate_against(schema)
     decoded = decode_records(records, value_schema=value_schema, key_schema=key_schema)
     mapped = compile_mapping(decoded, table, schema)
-    timed = add_ttl_writetime(mapped, table)
-    return route_writes(timed, table, schema)
+    return mapped.select(*ttl_route_columns(mapped.schema, table, schema))
 
 
 def replay_list_append(

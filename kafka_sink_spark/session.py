@@ -128,6 +128,13 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark call-site capture off. With it on, every F.* / Column /
+        # DataFrame call reads this conf and sets and clears a JVM origin:
+        # about 1,300 extra py4j round trips per two-table fan-out batch.
+        # Turning it off loses only the Python call-site fragment of
+        # analysis-error messages. A static conf, and PySpark caches its
+        # first reading per process, so it is set when the session is built.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -22,8 +22,13 @@ import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 logger = logging.getLogger(__name__)
+
+# Marks a record whose value was null BEFORE the decode: a tombstone, not a
+# corrupt payload.
+_WAS_NULL = "__value_was_null"
 
 
 def _is_missing_avro_source(exc: Exception) -> bool:
@@ -52,8 +57,10 @@ def avro_available(spark: SparkSession) -> bool:
         df = spark.range(1).select(from_avro(F.lit(bytearray(b"\x02")), schema))
         df.schema  # forces analysis
         return True
-    except Exception:
-        return False
+    except Exception as exc:
+        if _is_missing_avro_source(exc):
+            return False
+        raise
 
 
 def decode_avro_records(
@@ -65,7 +72,8 @@ def decode_avro_records(
     corrupt_col: str | None = None,
 ) -> DataFrame:
     """Replace binary key/value columns with Avro-decoded structs, then run
-    the standard record decode (struct mode).
+    the standard record decode (struct mode): the stages of
+    :func:`avro_decode_stages`.
 
     ``value_avro_schema`` / ``key_avro_schema`` are Avro schema JSON strings
     (what the reference gets from Schema Registry). ``options`` passes
@@ -84,58 +92,100 @@ def decode_avro_records(
     (sources/avro_python.py, Arrow-batched) unless ``allow_python_fallback``
     is False, in which case AvroNotAvailable is raised.
     """
-    from kafka_sink_spark.operators.records import decode_records
+    from kafka_sink_spark.operators.records import apply_stages
 
-    _WAS_NULL = "__value_was_null"
-    if corrupt_col is not None:
-        records = records.withColumn(_WAS_NULL, F.col("value").isNull())
+    stages = avro_decode_stages(
+        records.schema,
+        value_avro_schema,
+        key_avro_schema,
+        options,
+        corrupt_col,
+        jvm=use_from_avro(records.sparkSession, allow_python_fallback),
+    )
+    return apply_stages(records, stages)
 
-    def finish(decoded_records: DataFrame) -> DataFrame:
-        out = decode_records(decoded_records)
-        if corrupt_col is not None:
-            out = out.withColumn(
-                corrupt_col,
-                F.col("value").isNull() & ~F.col(_WAS_NULL),
-            ).drop(_WAS_NULL)
-        return out
 
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError:  # pragma: no cover
-        from_avro = None
-
-    if from_avro is not None:
-        try:
-            out = records.withColumn(
-                "value", from_avro(F.col("value"), value_avro_schema, options or {})
-            )
-            if key_avro_schema is not None:
-                out = out.withColumn(
-                    "key", from_avro(F.col("key"), key_avro_schema, options or {})
-                )
-            out.schema  # force analysis so a missing jar fails HERE
-            return finish(out)
-        except Exception as exc:
-            if not _is_missing_avro_source(exc):
-                raise  # real schema/column error — do not mask it
-            logger.warning(
-                "spark-avro data source not loaded (%s); falling back to the "
-                "pure-Python Avro wire codec (Arrow-batched, ~100x slower — "
-                "add org.apache.spark:spark-avro for the JVM path)",
-                type(exc).__name__,
-            )
-
+def use_from_avro(spark: SparkSession, allow_python_fallback: bool = True) -> bool:
+    """Pick the decode path: True for ``from_avro`` (the spark-avro jar is
+    loaded), False for the Python wire codec; raises AvroNotAvailable when
+    the jar is absent and the fallback is not allowed."""
+    if avro_available(spark):
+        return True
     if not allow_python_fallback:
         raise AvroNotAvailable(
             "the spark-avro data source is not loaded; add the "
             "org.apache.spark:spark-avro jar matching your Spark version "
             "(spark.jars.packages) to enable JVM Struct/Avro decode"
         )
-    from kafka_sink_spark.sources.avro_python import decode_avro_column
+    logger.warning(
+        "spark-avro data source not loaded; falling back to the "
+        "pure-Python Avro wire codec (Arrow-batched, ~100x slower — "
+        "add org.apache.spark:spark-avro for the JVM path)"
+    )
+    return False
 
-    # honor from_avro's parse-mode option in the fallback too
-    mode = (options or {}).get("mode", "FAILFAST")
-    out = decode_avro_column(records, "value", value_avro_schema, mode=mode)
+
+def avro_decode_stages(
+    schema: StructType,
+    value_avro_schema: str,
+    key_avro_schema: str | None = None,
+    options: dict[str, str] | None = None,
+    corrupt_col: str | None = None,
+    jvm: bool = True,
+) -> list:
+    """The stages of :func:`decode_avro_records` for a record frame of
+    ``schema``, applied in order by ``operators.records.apply_stages``: the
+    Avro decode (one ``from_avro`` projection when ``jvm``, else one
+    ``mapInPandas`` per side), the corrupt flag, then the struct-mode
+    record decode."""
+    from kafka_sink_spark.operators.records import column, decode_stages, project
+    from kafka_sink_spark.sources.avro_python import (
+        avro_column_decoder,
+        avro_schema_to_spark,
+        resolve_named_types,
+    )
+
+    sides = {"value": value_avro_schema}
     if key_avro_schema is not None:
-        out = decode_avro_column(out, "key", key_avro_schema, mode=mode)
-    return finish(out)
+        sides["key"] = key_avro_schema
+    flag = {_WAS_NULL: column("value").isNull()} if corrupt_col is not None else {}
+
+    def flagged(st: StructType) -> StructType:
+        extra = [StructField(_WAS_NULL, BooleanType())] if flag else []
+        return StructType(list(st.fields) + extra)
+
+    stages: list = []
+    if jvm:
+        from pyspark.sql.avro.functions import from_avro
+
+        decoded = {
+            side: from_avro(column(side), avro_schema, options or {})
+            for side, avro_schema in sides.items()
+        }
+        stages.append(project(schema, {**decoded, **flag}))
+        out = flagged(
+            StructType(
+                [
+                    StructField(f.name, avro_schema_to_spark(resolve_named_types(sides[f.name])))
+                    if f.name in sides
+                    else f
+                    for f in schema.fields
+                ]
+            )
+        )
+    else:
+        if flag:
+            stages.append(project(schema, flag))
+        out = flagged(schema)
+        mode = (options or {}).get("mode", "FAILFAST")  # from_avro's parse mode
+        for side, avro_schema in sides.items():
+            decode_frame, out = avro_column_decoder(out, side, avro_schema, mode=mode)
+            stages.append(decode_frame)
+    if flag:
+        corrupt = {corrupt_col: column("value").isNull() & ~F.col(_WAS_NULL)}
+        stages.append(project(out, corrupt, drop=(_WAS_NULL,)))
+        out = StructType(
+            [f for f in out.fields if f.name != _WAS_NULL]
+            + [StructField(corrupt_col, BooleanType())]
+        )
+    return stages + decode_stages(out)

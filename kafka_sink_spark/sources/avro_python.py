@@ -32,7 +32,7 @@ import datetime as _dt
 import json
 import struct as _struct
 from decimal import Decimal
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -512,13 +512,23 @@ def decode_avro_column(
     100 TB job. Truncated buffers, bad union indexes, and invalid UTF-8 are
     all malformed; trailing garbage after a complete datum is also rejected.
     """
+    decode_frame, _out_schema = avro_column_decoder(df.schema, column, avro_schema_json, mode)
+    return decode_frame(df)
+
+
+def avro_column_decoder(
+    schema: T.StructType, column: str, avro_schema_json: str, mode: str = "FAILFAST"
+) -> tuple[Callable[[DataFrame], DataFrame], T.StructType]:
+    """:func:`decode_avro_column` for frames of ``schema``, built once:
+    ``(decode, output schema)``, where ``decode(df)`` is the frame's
+    ``mapInPandas``."""
     if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode!r}")
     schema_obj = resolve_named_types(avro_schema_json)
     spark_type = avro_schema_to_spark(schema_obj)
     out_fields = [
         f if f.name != column else T.StructField(column, spark_type)
-        for f in df.schema.fields
+        for f in schema.fields
     ]
     out_schema = T.StructType(out_fields)
     names = [f.name for f in out_fields]
@@ -544,4 +554,4 @@ def decode_avro_column(
             pdf[column] = pdf[column].map(_dec)
             yield pdf[names]
 
-    return df.mapInPandas(batches, schema=out_schema)
+    return (lambda df: df.mapInPandas(batches, schema=out_schema)), out_schema

@@ -1,23 +1,54 @@
-"""The single-pass micro-batch (``process_micro_batch``): error-policy
-ordering on a two-table fan-out, persisted frames released on every exit,
-and a bound on the Spark jobs one batch runs outside its writes."""
+"""The single-pass micro-batch (``process_micro_batch`` and the compiled
+``SinkPlan`` a stream runs): error-policy ordering on a two-table fan-out,
+persisted frames released on every exit, a bound on the Spark jobs one
+batch runs outside its writes, fan-in, the py4j cost of a batch once the
+plan is compiled, and the compiled plan's agreement with the DataFrame
+wrappers."""
 
+import datetime
+import gc
 import os
+import re
 import sys
+import time
+from collections import Counter
 
 import pytest
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark import cloudpickle
+from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_sink_spark.config import ColumnSpec, SinkConfig, TableConfig, TableSchema
+from kafka_sink_spark.mapping.compiler import compile_mapping
 from kafka_sink_spark.mapping.parser import parse_mapping
-from kafka_sink_spark.streaming.pipeline import SinkMetrics, process_micro_batch
+from kafka_sink_spark.operators.writes import add_ttl_writetime, route_writes, run_sink_pipeline
+from kafka_sink_spark.sources.avro import decode_avro_records
+from kafka_sink_spark.sources.avro_python import encode
+from kafka_sink_spark.streaming.pipeline import (
+    AVRO_CORRUPT,
+    SinkMetrics,
+    SinkPlan,
+    process_micro_batch,
+    split_mapping_errors,
+)
+
+# The write tasks unpickle this module's fake session; ship it by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 RAW_KEY = "clicks|ks.raw_clicks"
 TYPED_KEY = "clicks|ks.clicks_k"
 N_CLICKS, N_UNKNOWN, N_BAD = 12, 2, 3
 VALUE_SCHEMAS = {"clicks": StructType([StructField("k", IntegerType())])}
+RECORD_DDL = (
+    "topic string, partition int, offset long, timestamp timestamp, key string, "
+    "value string"
+)
+K_SCHEMA = StructType([StructField("k", IntegerType())])
+AVRO_K = '{"type":"record","name":"v","fields":[{"name":"k","type":"int"}]}'
+TS = datetime.datetime(2024, 1, 2, 3, 4, 5)
+PK_KCOL = [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")]
 
 
 def _records(spark, with_errors: bool = True):
@@ -30,11 +61,7 @@ def _records(spark, with_errors: bool = True):
             value = value[:-3]
         rows.append(("clicks", 0, i, None, str(i), value))
     rows += [("audit", 0, N_CLICKS + i, None, "0", '{"k": 0}') for i in range(N_UNKNOWN)]
-    return spark.createDataFrame(
-        rows,
-        "topic string, partition int, offset long, timestamp timestamp, "
-        "key string, value string",
-    )
+    return spark.createDataFrame(rows, RECORD_DDL)
 
 
 def _config(policy: str):
@@ -170,3 +197,242 @@ def test_bookkeeping_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS
+
+
+def test_fan_in_unions_every_topic_into_its_table(spark):
+    """S3 fan-in: two topics with different mappings into one table. The
+    returned frame of the table holds both topics' rows, unioned by column
+    name (the raw topic's mapping has no ``v``)."""
+    typed = TableConfig("a", "ks", "t", parse_mapping("pk=key, v=value.v"))
+    raw = TableConfig("b", "ks", "t", parse_mapping("pk=key"))
+    schemas = {
+        ("ks", "t"): TableSchema(
+            "ks", "t", [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("v", "int")]
+        )
+    }
+    records = spark.createDataFrame(
+        [("a", 0, 0, None, "1", '{"v": 5}'), ("b", 0, 0, None, "2", "x")], RECORD_DDL
+    )
+    out = process_micro_batch(
+        records, SinkConfig(tables=[typed, raw]), schemas,
+        value_schemas={"a": StructType([StructField("v", IntegerType())])},
+    )
+    assert sorted(out) == ["ks.t"]
+    assert sorted(tuple(r) for r in out["ks.t"].select("pk", "v").collect()) == [
+        (1, 5), (2, None),
+    ]
+
+
+class _Done:
+    def result(self):
+        return None
+
+
+class _NullSession:
+    """A driver session that accepts every statement and keeps nothing."""
+
+    def prepare(self, cql):
+        return cql
+
+    def execute_async(self, stmt, params=None):
+        return _Done()
+
+    def execute_batch(self, stmts, consistency_level=None):
+        return _Done()
+
+
+def _settle_py4j(spark):
+    """Collect garbage, then wait for py4j's finalizer thread to send the
+    queued releases of dropped JVM proxies, so a count window holds the
+    releases of its own work and no earlier test's."""
+    gc.collect()
+    queue = spark.sparkContext._gateway._gateway_client.finalizer_deque
+    deadline = time.monotonic() + 30
+    while queue and time.monotonic() < deadline:
+        time.sleep(0.05)
+    time.sleep(0.2)  # the release popped last is sent after the pop
+
+
+def test_batch_after_the_first_stays_under_py4j_budget(spark, monkeypatch):
+    """The stream's plan is compiled once: the second batch of a two-table
+    fan-out (mapping errors dead-lettered, both tables written through
+    ``write_routed``) makes at most 400 py4j round trips, counted on every
+    thread. Rebuilding decode → mapping → route per batch made ~2,000."""
+    from py4j import clientserver, java_gateway
+
+    from kafka_sink_spark.operators.cassandra_writer import write_routed
+
+    cfg, schemas = _config("All")
+    records = _records(spark)
+    plan = SinkPlan(spark, records.schema, cfg, schemas, value_schemas=VALUE_SCHEMAS)
+
+    def writer(routed, table, schema):
+        return write_routed(routed, table, schema, cfg, _NullSession)
+
+    def batch():
+        plan.run(records, writer=writer, error_sink=_counting_error_sink([]))
+
+    batch()
+    _settle_py4j(spark)
+    calls = [0]
+    for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+        send = cls.send_command
+
+        def counted(self, *args, _send=send, **kwargs):
+            calls[0] += 1
+            return _send(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "send_command", counted)
+    batch()
+    _settle_py4j(spark)
+    monkeypatch.undo()
+    assert 0 < calls[0] <= 400, calls[0]
+
+
+def _json_rows(values):
+    return [("t", 0, i, TS, str(i), v) for i, v in enumerate(values)]
+
+
+def _case(spark, name):
+    """(records, table, columns, value schema, ignoreErrors) of one decode
+    mode the compiled plan must agree with the DataFrame wrappers on."""
+    k = [f'{{"k": {i}}}' for i in range(6)]
+    if name == "json_literal":
+        values = [v if i % 3 else "not json {" for i, v in enumerate(k)]
+        return (
+            spark.createDataFrame(_json_rows(values), RECORD_DDL),
+            TableConfig("t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k, raw=value")),
+            PK_KCOL + [ColumnSpec("raw", "string")], K_SCHEMA, "None",
+        )
+    if name == "raw":
+        return (
+            spark.createDataFrame(_json_rows(["a", None, "c"]), RECORD_DDL),
+            TableConfig("t", "ks", "tbl", parse_mapping("pk=key, payload=value")),
+            [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("payload", "string")],
+            None, "None",
+        )
+    if name == "header":
+        rows = [r + ({"source": f"s{r[2]}"},) for r in _json_rows(k)]
+        return (
+            spark.createDataFrame(rows, RECORD_DDL + ", headers map<string,string>"),
+            TableConfig("t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k, src=header.source")),
+            PK_KCOL + [ColumnSpec("src", "string")], K_SCHEMA, "None",
+        )
+    if name == "now":
+        return (
+            spark.createDataFrame(_json_rows(k), RECORD_DDL),
+            TableConfig("t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k, id=now()")),
+            PK_KCOL + [ColumnSpec("id", "string")], K_SCHEMA, "None",
+        )
+    if name == "ttl_timestamp":
+        values = [f'{{"k": {i}, "t": {i * 10 - 20}, "ts": {i * 1000}}}' for i in range(6)]
+        vs = StructType(
+            [StructField("k", IntegerType()), StructField("t", LongType()),
+             StructField("ts", LongType())]
+        )
+        return (
+            spark.createDataFrame(_json_rows(values), RECORD_DDL),
+            TableConfig(
+                "t", "ks", "tbl",
+                parse_mapping("pk=key, kcol=value.k, __ttl=value.t, __timestamp=value.ts"),
+                ttl_time_unit="MILLISECONDS",
+            ),
+            PK_KCOL, vs, "None",
+        )
+    if name == "provided":
+        return (
+            spark.createDataFrame(_json_rows(k), RECORD_DDL),
+            TableConfig(
+                "t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k"),
+                query="INSERT INTO ks.tbl(pk,kcol) VALUES (:pk,:kcol)", deletes_enabled=False,
+            ),
+            PK_KCOL, K_SCHEMA, "None",
+        )
+    # Avro: valid payloads, a tombstone (a DELETE) and, when permissive, a
+    # corrupt payload (a mapping error, dead-lettered).
+    payloads = [encode(AVRO_K, {"k": i}) for i in range(4)] + [None]
+    if name == "avro_permissive":
+        payloads.append(b"\xff\xff\xff")
+    rows = [("t", 0, i, TS, str(i), p) for i, p in enumerate(payloads)]
+    return (
+        spark.createDataFrame(rows, RECORD_DDL.replace("value string", "value binary")),
+        TableConfig("t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k")),
+        PK_KCOL, AVRO_K, "All" if name == "avro_permissive" else "None",
+    )
+
+
+def _wrapped(records, table, schema, vs, policy):
+    """The same batch through the DataFrame wrappers."""
+    if not isinstance(vs, str):
+        return run_sink_pipeline(records, table, schema, value_schema=vs)
+    permissive = policy == "All"
+    decoded = decode_avro_records(
+        records, vs,
+        options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
+        corrupt_col=AVRO_CORRUPT if permissive else None,
+    )
+    good, _bad = split_mapping_errors(decoded, table)
+    mapped = compile_mapping(good, table, schema)
+    return route_writes(add_ttl_writetime(mapped, table), table, schema)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["json_literal", "raw", "avro_permissive", "avro_failfast", "header", "now",
+     "ttl_timestamp", "provided"],
+)
+def test_compiled_plan_matches_dataframe_wrappers(spark, name):
+    """The frame a stream's compiled plan hands the writer has the columns
+    and the multiset of rows of the DataFrame wrappers on the same records,
+    in every decode mode; the JSON payload is parsed once in it."""
+    records, table, columns, vs, policy = _case(spark, name)
+    schema = TableSchema("ks", "tbl", columns)
+    cfg = SinkConfig(tables=[table], ignore_errors=policy)
+    plan = SinkPlan(
+        spark, records.schema, cfg, {("ks", "tbl"): schema},
+        value_schemas={"t": vs} if vs is not None else None,
+    )
+    seen = {}
+
+    def writer(routed, table, schema):
+        seen["columns"] = routed.columns
+        seen["rows"] = routed.collect()
+        seen["plan"] = routed._jdf.queryExecution().executedPlan().toString()
+
+    plan.run(records, writer=writer)
+    expected = _wrapped(records, table, schema, vs, policy)
+    assert seen["columns"] == expected.columns
+    skip = {"id"} if name == "now" else set()
+
+    def multiset(rows):
+        return Counter(
+            tuple(v for c, v in zip(seen["columns"], r) if c not in skip) for r in rows
+        )
+
+    assert multiset(seen["rows"]) == multiset(expected.collect())
+    if name == "now":
+        v1 = r"^[0-9a-f]{8}-[0-9a-f]{4}-1[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$"
+        assert all(re.match(v1, r["id"]) for r in seen["rows"])
+    assert seen["plan"].count("from_json") == (0 if vs is None or isinstance(vs, str) else 1)
+
+
+def test_batch_of_another_schema_recompiles_the_plan(spark):
+    """A plan compiled for JSON-string values meets a batch whose value is
+    already a struct, with its columns in another order: it recompiles for
+    that schema. Read through the stale plan, every struct would parse as
+    malformed JSON and the batch would raise as mapping errors."""
+    table = TableConfig("clicks", "ks", "clicks_k", parse_mapping("pk=key, kcol=value.k"))
+    schema = TableSchema("ks", "clicks_k", PK_KCOL)
+    cfg = SinkConfig(tables=[table])
+    strings = spark.createDataFrame(_json_rows([]), RECORD_DDL)
+    plan = SinkPlan(spark, strings.schema, cfg, {("ks", "clicks_k"): schema},
+                    value_schemas=VALUE_SCHEMAS)
+    structs = spark.createDataFrame(
+        [(f'{{"k": {i * 10}}}', str(i), "clicks", 0, i, TS) for i in range(3)],
+        "value string, key string, topic string, partition int, offset long, "
+        "timestamp timestamp",
+    ).withColumn("value", F.from_json("value", "k int"))
+    out = plan.run(structs)
+    assert plan.record_schema.simpleString() == structs.schema.simpleString()
+    rows = out["ks.clicks_k"].select("pk", "kcol").collect()
+    assert sorted(tuple(r) for r in rows) == [(0, 0), (1, 10), (2, 20)]
