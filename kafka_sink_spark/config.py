@@ -26,8 +26,15 @@ _TABLE_SETTINGS = {
     "deletesEnabled",
     "consistencyLevel",
 }
-# Per-topic codec settings (sample:187-225).
-_CODEC_SETTINGS = {"locale", "timeZone", "date", "time", "timestamp", "unit"}
+# Per-topic codec settings (sample:187-225): key → CodecConfig field.
+_CODEC_SETTINGS = {
+    "locale": "locale",
+    "timeZone": "time_zone",
+    "date": "date_pattern",
+    "time": "time_pattern",
+    "timestamp": "timestamp_pattern",
+    "unit": "unit",
+}
 
 _TIME_UNITS = {
     "NANOSECONDS": 1e-9,
@@ -113,6 +120,13 @@ class CodecConfig:
     timestamp_pattern: str = "CQL_TIMESTAMP"
     unit: str = "MILLISECONDS"
 
+    def changed_keys(self) -> list[str]:
+        """The ``codec.*`` keys whose value differs from the default."""
+        default = CodecConfig()
+        return [
+            k for k, f in _CODEC_SETTINGS.items() if getattr(self, f) != getattr(default, f)
+        ]
+
 
 @dataclass
 class TableConfig:
@@ -190,7 +204,6 @@ class SinkConfig:
     max_number_of_records_in_batch: int = 32  # sample:38-39
     connection_pool_local_size: int = 4  # sample:41-42
     query_execution_timeout_s: int = 30  # sample:44-45
-    jmx: bool = True
     compression: str = "None"  # sample:59-61
     ignore_errors: str = "None"  # None | Driver | All (KAF-200)
     secure_connect_bundle: str | None = None
@@ -233,9 +246,6 @@ class SinkConfig:
             if value < 1:
                 raise ConfigError(f"{key} must be at least 1, got {value}")
 
-    def tables_for_topic(self, topic: str) -> list[TableConfig]:
-        return [t for t in self.tables if t.topic == topic]
-
 
 def parse_sink_config(props: dict[str, str]) -> SinkConfig:
     """Parse flat connector properties into a SinkConfig.
@@ -271,14 +281,8 @@ def parse_sink_config(props: dict[str, str]) -> SinkConfig:
 
     tables: list[TableConfig] = []
     for (topic, ks, tbl), settings in sorted(table_raw.items()):
-        codec_settings = codec_raw.get(topic, {})
         codec = CodecConfig(
-            locale=codec_settings.get("locale", "en_US"),
-            time_zone=codec_settings.get("timeZone", "UTC"),
-            date_pattern=codec_settings.get("date", "ISO_LOCAL_DATE"),
-            time_pattern=codec_settings.get("time", "ISO_LOCAL_TIME"),
-            timestamp_pattern=codec_settings.get("timestamp", "CQL_TIMESTAMP"),
-            unit=codec_settings.get("unit", "MILLISECONDS"),
+            **{_CODEC_SETTINGS[k]: v for k, v in codec_raw.get(topic, {}).items()}
         )
         mapping_str = settings.get("mapping")
         if mapping_str is None and "query" not in settings:
@@ -367,7 +371,6 @@ def parse_sink_config(props: dict[str, str]) -> SinkConfig:
         ),
         connection_pool_local_size=int(globals_raw.get("connectionPoolLocalSize", "4")),
         query_execution_timeout_s=int(globals_raw.get("queryExecutionTimeout", "30")),
-        jmx=globals_raw.get("jmx", "true").lower() == "true",
         compression=globals_raw.get("compression", "None"),
         ignore_errors=globals_raw.get("ignoreErrors", "None"),
         secure_connect_bundle=cloud_bundle,

@@ -186,7 +186,11 @@ def write_routed(
     arrive in clustering order.
     """
     present = set(routed.columns)
-    pk = [c for c in schema.partition_key if c in present]
+    # Rows co-batch only on the whole routing key; a frame lacking any of
+    # its columns (a provided query binding other names) is written one
+    # EXECUTE per row, unshuffled and unsorted, so no batch can span two
+    # partitions.
+    pk = schema.partition_key if present.issuperset(schema.partition_key) else []
     sort_cols = pk + [c for c in schema.primary_key if c not in pk and c in present]
     # Selected: kind, then the routing key (a row's run key is a slice),
     # then every bind source; each bind reads its source by index.
@@ -195,7 +199,7 @@ def write_routed(
     names = list(dict.fromkeys(sort_cols + sources))
     index = {c: i for i, c in enumerate(names, start=1)}
     key_end = 1 + len(pk)
-    max_batch = config.max_number_of_records_in_batch
+    max_batch = config.max_number_of_records_in_batch if pk else 1
     max_inflight = config.max_concurrent_requests
 
     def write_partition(rows: Iterable) -> Iterator[tuple[Histogram, Histogram]]:
@@ -226,45 +230,44 @@ def write_routed(
 
         frames, sizes = Histogram(), Histogram(pow2=True)
 
-        def submit(stmts: list[tuple[str, dict]]) -> None:
-            """One key-run → unlogged batch frames of ≤ max_batch; a chunk of
-            one goes as a standalone EXECUTE. Observes every frame into the
-            frame-size histogram (KAF-99: a single EXECUTE is a frame of
-            size 1) and every statement into the bytes histogram."""
-            for i in range(0, len(stmts), max_batch):
-                chunk = stmts[i : i + max_batch]
-                throttle()
-                if len(chunk) == 1:
-                    kind, params = chunk[0]
-                    fut = session.execute_async(statement(kind), params)
-                else:
-                    fut = _submit_batch(
-                        session,
-                        [(statement(k), p) for k, p in chunk],
-                        table.consistency_level,
-                        counter=bool(schema.counters),
-                    )
-                frames.add(len(chunk))
-                for _kind, params in chunk:
-                    sizes.add(_estimate_statement_bytes(params))
-                futures.append(fut)
+        def submit(frame: list[tuple[str, dict]]) -> None:
+            """One frame: an unlogged batch of ≤ max_batch statements of one
+            key-run, or a standalone EXECUTE for a single one. Observes the
+            frame into the frame-size histogram (KAF-99: a single EXECUTE is
+            a frame of size 1) and every statement into the bytes
+            histogram."""
+            throttle()
+            if len(frame) == 1:
+                kind, params = frame[0]
+                fut = session.execute_async(statement(kind), params)
+            else:
+                fut = _submit_batch(
+                    session,
+                    [(statement(k), p) for k, p in frame],
+                    table.consistency_level,
+                    counter=bool(schema.counters),
+                )
+            frames.add(len(frame))
+            for _kind, params in frame:
+                sizes.add(_estimate_statement_bytes(params))
+            futures.append(fut)
 
         run_key = object()
-        run: list[tuple[str, dict]] = []
+        frame: list[tuple[str, dict]] = []
         try:
             for row in rows:
                 r = tuple(row)  # Row.__getitem__ is a Python-level call
                 key = r[1:key_end]
-                if key != run_key and run:
-                    submit(run)
-                    run = []
+                if frame and (key != run_key or len(frame) == max_batch):
+                    submit(frame)
+                    frame = []
                 run_key = key
                 kind = r[0]
                 binds = plan[kind][1]
                 params = {n: (d if (v := r[i]) is None else v) for n, i, d in binds}
-                run.append((kind, params))
-            if run:
-                submit(run)
+                frame.append((kind, params))
+            if frame:
+                submit(frame)
             while futures:
                 futures.popleft().result()
         except Exception:
@@ -283,13 +286,12 @@ def write_routed(
     narrow = [f"{statement_kind_sql(table, schema)} AS _statement_kind"] + [
         quote(c) if c in present else f"NULL AS {quote(c)}" for c in names
     ]
-    parts = (
-        routed.selectExpr(*narrow)
-        .repartition(*[quote(c) for c in pk])
-        .sortWithinPartitions(*[quote(c) for c in sort_cols])
-        .rdd.mapPartitions(write_partition)
-        .collect()
-    )
+    narrowed = routed.selectExpr(*narrow)
+    if pk:
+        narrowed = narrowed.repartition(*[quote(c) for c in pk]).sortWithinPartitions(
+            *[quote(c) for c in sort_cols]
+        )
+    parts = narrowed.rdd.mapPartitions(write_partition).collect()
     frames, sizes = Histogram(), Histogram(pow2=True)
     for task_frames, task_sizes in parts:
         frames.merge(task_frames)

@@ -189,12 +189,6 @@ def cql_templates(table: TableConfig, schema: TableSchema) -> dict[str, str]:
     return {kind: text for kind, (text, _binds) in statements(table, schema).items()}
 
 
-def statement_kind(table: TableConfig, schema: TableSchema) -> Column:
-    """The statement kind of each routed row: :func:`statement_kind_sql` as
-    a Column."""
-    return F.expr(statement_kind_sql(table, schema))
-
-
 def statement_kind_sql(table: TableConfig, schema: TableSchema) -> str:
     """The statement kind of each routed row — the one place it is decided:
     the provided query (W5) for every row of a provided-query table, else
@@ -228,7 +222,7 @@ def cql_statement(table: TableConfig, schema: TableSchema) -> Column:
     user's CQL text is used verbatim — no generation, no validation.
     """
     texts = [F.lit(x) for kv in cql_templates(table, schema).items() for x in kv]
-    return F.create_map(*texts)[statement_kind(table, schema)]
+    return F.create_map(*texts)[F.expr(statement_kind_sql(table, schema))]
 
 
 def partition_key_batches(

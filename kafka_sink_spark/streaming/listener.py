@@ -5,21 +5,16 @@ The reference registers per-'topic|ks.table' metrics with Kafka Connect's
 JMX domain (KAF-85, changelog/README.md:59) so operators can scrape
 recordCount / failedRecordCount / batchSizeHistogram between batches
 (SimpleEndToEndSimulacronIT.java:468-471,859-874).  SURVEY §2.8 maps that
-surface to a StreamingQueryListener: ``SinkMetricsListener`` snapshots the
-shared :class:`~kafka_sink_spark.streaming.pipeline.SinkMetrics` object on
-every query-progress event, pairing each snapshot with the micro-batch id
-and source progress — one exposition record per committed batch, exactly
-when the reference's counters become observable.
+surface to a StreamingQueryListener: on every query-progress event
+``SinkMetricsListener`` looks up the record the stream committed for that
+event's ``batchId`` in the shared
+:class:`~kafka_sink_spark.streaming.registry.SinkMetrics` and emits it —
+one exposition record per committed batch, exactly when the reference's
+counters become observable.
 
-The listener runs on the driver's listener bus (a thread in the same
-Python process in classic PySpark).  The bus is asynchronous, so a
-progress event for batch N may be delivered while batch N+1's
-foreachBatch is already mutating the shared SinkMetrics — a snapshot is
-therefore monotone (counts >= those at batch N's commit) but may include
-a successor batch's increments.  Callers that need a strict
-batch-to-snapshot pairing should record per-batch deltas keyed by
-batchId inside foreachBatch itself; this listener is the between-batch
-scrape surface, matching how JMX polling observes the reference.
+The record is the batch's own SinkMetrics plus the counters as they stood
+right after that batch was folded in, both made when the batch ended; the
+listener bus is asynchronous, but a later batch cannot change either.
 """
 
 from __future__ import annotations
@@ -28,30 +23,29 @@ from typing import Callable
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-from kafka_sink_spark.streaming.pipeline import SinkMetrics
+from kafka_sink_spark.streaming.registry import SinkMetrics
 
 
 class SinkMetricsListener(StreamingQueryListener):
-    """Collects one SinkMetrics snapshot per micro-batch progress event.
+    """Emits one record per micro-batch progress event.
 
-    ``events`` grows by one dict per committed batch:
-    ``{"query_id", "query_name", "batch_id", "timestamp",
-    "num_input_rows", "metrics": SinkMetrics.snapshot()}``.
-    Pass ``emit`` to also push each event to an external exporter (a
-    logger, a StatsD client, ...); exporter errors are swallowed so the
-    listener bus never kills the query.
+    ``emit`` receives ``{"query_id", "query_name", "batch_id", "timestamp",
+    "num_input_rows", "metrics", "totals"}``: ``metrics`` is the batch's own
+    SinkMetrics and ``totals`` the :meth:`SinkMetrics.counters` right after
+    it. A batch whose record the shared SinkMetrics no longer keeps (it
+    keeps the last ``numRecentProgressUpdates``) is not emitted. Exporter
+    errors are swallowed so the listener bus never kills the query.
     """
 
     def __init__(
         self,
         metrics: SinkMetrics,
+        emit: Callable[[dict], None],
         query_name: str | None = None,
-        emit: Callable[[dict], None] | None = None,
     ) -> None:
         self.metrics = metrics
-        self.query_name = query_name
         self.emit = emit
-        self.events: list[dict] = []
+        self.query_name = query_name
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API name)
         pass
@@ -60,20 +54,24 @@ class SinkMetricsListener(StreamingQueryListener):
         p = event.progress
         if self.query_name is not None and p.name != self.query_name:
             return
-        record = {
-            "query_id": str(p.id),
-            "query_name": p.name,
-            "batch_id": p.batchId,
-            "timestamp": p.timestamp,
-            "num_input_rows": p.numInputRows,
-            "metrics": self.metrics.snapshot(),
-        }
-        self.events.append(record)
-        if self.emit is not None:
-            try:
-                self.emit(record)
-            except Exception:
-                pass  # exposition must never fail the stream
+        committed = self.metrics.batches.get(p.batchId)
+        if committed is None:
+            return
+        batch, totals = committed
+        try:
+            self.emit(
+                {
+                    "query_id": str(p.id),
+                    "query_name": p.name,
+                    "batch_id": p.batchId,
+                    "timestamp": p.timestamp,
+                    "num_input_rows": p.numInputRows,
+                    "metrics": batch,
+                    "totals": totals,
+                }
+            )
+        except Exception:
+            pass  # exposition must never fail the stream
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass

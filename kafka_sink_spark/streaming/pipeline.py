@@ -13,8 +13,9 @@ Reference semantics mapped (SURVEY §2.8):
     All    → every error is ignored; mapping errors divert to the
              dead-letter ``error_sink``; the batch always commits.
 - per-table metrics recordCount/failedRecordCount named "topic|ks.table"
-  (reference: SimpleEndToEndSimulacronIT.java:469-471) → accumulator-backed
-  SinkMetrics.
+  (reference: SimpleEndToEndSimulacronIT.java:469-471) → SinkMetrics: each
+  micro-batch counts into its own record, folded into the stream's totals
+  and kept under its batch id when the batch ends.
 - fail-fast startup: mappings validated against table schemas BEFORE the
   stream starts (reference: SimpleEndToEndSimulacronIT.java:286-315).
 
@@ -54,9 +55,9 @@ of record data.
 from __future__ import annotations
 
 import functools
+import logging
 import operator
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -65,7 +66,6 @@ from pyspark.sql.types import StructType
 
 from kafka_sink_spark.config import SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.compiler import mapping_columns
-from kafka_sink_spark.operators.cassandra_writer import Histogram
 from kafka_sink_spark.operators.records import (
     KEY_LITERAL,
     RAW_FIELD,
@@ -75,91 +75,13 @@ from kafka_sink_spark.operators.records import (
     project,
 )
 from kafka_sink_spark.operators.writes import ttl_route_columns
+from kafka_sink_spark.streaming.registry import SinkMetrics, metric_key
+
+logger = logging.getLogger(__name__)
 
 # Flag column marking Avro records whose non-null payload failed to decode
 # (PERMISSIVE mode) — routed to the dead-letter channel, never written.
 AVRO_CORRUPT = "_avro_corrupt"
-
-
-@dataclass
-class SinkMetrics:
-    """Per-'topic|ks.table' counters, mirroring the reference metric names
-    (recordCount / failedRecordCount) plus the global failedWithUnknownTopic.
-
-    KAF-99 parity (reference: SimpleEndToEndSimulacronIT.java:859-874
-    asserts batchSizeHistogram / batchSizeInBytesHistogram per
-    'topic|ks.table'): ``batch_size_histogram`` maps each key to a
-    :class:`Histogram` of statements per wire frame (a standalone EXECUTE
-    is a frame of size 1; at most maxNumberOfRecordsInBatch, so the buckets
-    are bounded); ``batch_size_in_bytes_histogram`` to one of the
-    estimated bound-value payload per statement, in power-of-two buckets —
-    one update PER STATEMENT, like the reference's histogram (a 2-statement
-    batch adds two observations). Both carry exact count/min/max/sum and
-    are fed from write_routed's histograms via ``observe_write``.
-
-    KAF-100 parity (changelog/README.md:16 "Add rates to
-    failedRecordCount"): ``record_rate`` / ``failed_record_rate`` expose
-    events-per-second over the metrics object's lifetime — the mean-rate
-    component of the reference's Meter (the decaying 1/5/15-min EWMAs are
-    a JMX-exposition nicety; the counters and mean rate are the graded
-    signal)."""
-
-    record_count: dict[str, int] = field(default_factory=dict)
-    failed_record_count: dict[str, int] = field(default_factory=dict)
-    failed_with_unknown_topic: int = 0
-    batch_size_histogram: dict[str, Histogram] = field(default_factory=dict)
-    batch_size_in_bytes_histogram: dict[str, Histogram] = field(default_factory=dict)
-    started_at: float = field(default_factory=time.monotonic)
-
-    def bump(self, key: str, n: int, failed: bool = False) -> None:
-        d = self.failed_record_count if failed else self.record_count
-        d[key] = d.get(key, 0) + n
-
-    def observe_write(self, key: str, stats: dict) -> None:
-        """Merge one write_routed stats dict's histograms (``batch_size_hist``
-        / ``batch_bytes_hist``) into the per-key ones."""
-        for attr, part in (
-            ("batch_size_histogram", "batch_size_hist"),
-            ("batch_size_in_bytes_histogram", "batch_bytes_hist"),
-        ):
-            h = stats.get(part)
-            if h is not None and h.n:
-                getattr(self, attr).setdefault(key, Histogram(h.pow2)).merge(h)
-
-    def _rate(self, counts: dict[str, int], key: str) -> float:
-        elapsed = max(time.monotonic() - self.started_at, 1e-9)
-        return counts.get(key, 0) / elapsed
-
-    def record_rate(self, key: str) -> float:
-        return self._rate(self.record_count, key)
-
-    def failed_record_rate(self, key: str) -> float:
-        return self._rate(self.failed_record_count, key)
-
-    def snapshot(self) -> dict:
-        """Point-in-time view of every metric, rates included — the payload
-        the StreamingQueryListener emits per micro-batch."""
-        keys = set(self.record_count) | set(self.failed_record_count)
-        return {
-            "record_count": dict(self.record_count),
-            "failed_record_count": dict(self.failed_record_count),
-            "failed_with_unknown_topic": self.failed_with_unknown_topic,
-            "batch_size_histogram": {
-                k: Histogram(h.pow2).merge(h)
-                for k, h in self.batch_size_histogram.items()
-            },
-            "batch_size_in_bytes_histogram": {
-                k: Histogram(h.pow2).merge(h)
-                for k, h in self.batch_size_in_bytes_histogram.items()
-            },
-            "record_rate": {k: self.record_rate(k) for k in keys},
-            "failed_record_rate": {k: self.failed_record_rate(k) for k in keys},
-        }
-
-
-def mapping_error_condition(decoded: DataFrame, table: TableConfig) -> Column | None:
-    """:func:`mapping_error_column` of a decoded record DataFrame."""
-    return mapping_error_column(decoded.schema, table)
 
 
 def mapping_error_column(decoded_schema: StructType, table: TableConfig) -> Column | None:
@@ -208,10 +130,10 @@ def mapping_error_column(decoded_schema: StructType, table: TableConfig) -> Colu
 def split_mapping_errors(
     decoded: DataFrame, table: TableConfig
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Separate the records :func:`mapping_error_condition` flags from the
+    """Separate the records :func:`mapping_error_column` flags from the
     healthy stream: ``(good, bad)``, with ``bad`` None when ``table`` cannot
     hit a mapping error."""
-    bad_cond = mapping_error_condition(decoded, table)
+    bad_cond = mapping_error_column(decoded.schema, table)
     if bad_cond is None:
         return decoded, None
     good = decoded.filter(~bad_cond).drop(AVRO_CORRUPT)
@@ -299,6 +221,13 @@ class SinkPlan:
         self.key_schemas = key_schemas or {}
         for table in config.tables:
             table.validate_against(schemas[(table.keyspace, table.table)])
+            if changed := table.codec.changed_keys():
+                logger.warning(
+                    "%s|%s.%s: codec setting(s) %s are not applied; the mapping "
+                    "converts with the default codec settings",
+                    table.topic, table.keyspace, table.table,
+                    ", ".join(f"codec.{k}" for k in changed),
+                )
         self._compile(spark, record_schema)
 
     def _compile(self, spark: SparkSession, record_schema: StructType) -> None:
@@ -336,9 +265,10 @@ class SinkPlan:
         schema = self.schemas[(table.keyspace, table.table)]
         errors = mapping_error_column(decoded.schema, table)
         mapping = mapping_columns(decoded.schema, table, schema)
+        name = f"{table.keyspace}.{table.table}"
         return _TablePlan(
-            key=f"{table.topic}|{table.keyspace}.{table.table}",
-            name=f"{table.keyspace}.{table.table}",
+            key=metric_key(table.topic, name),
+            name=name,
             errors=errors,
             good=None if errors is None else ~errors,
             dead=(
@@ -469,7 +399,8 @@ def process_micro_batch(
        counted and diverted to ``error_sink``, read from the cache;
     6. writes: each table's good rows, read from the cache;
     7. release: every persisted frame is unpersisted when the batch ends,
-       on success or raise.
+       on success or raise, and the batch's own SinkMetrics is folded into
+       ``metrics`` (what a raised batch counted still counts).
 
     ``value_schemas``/``key_schemas`` entries select the decode mode per
     topic: a StructType means JSON-with-literal-fallback; an Avro schema
@@ -483,7 +414,12 @@ def process_micro_batch(
     plan = SinkPlan(
         batch_df.sparkSession, batch_df.schema, config, schemas, value_schemas, key_schemas
     )
-    return plan.run(batch_df, writer=writer, metrics=metrics, error_sink=error_sink)
+    batch = SinkMetrics()
+    try:
+        return plan.run(batch_df, writer=writer, metrics=batch, error_sink=error_sink)
+    finally:
+        if metrics is not None:
+            metrics.commit(batch)
 
 
 def start_sink_stream(
@@ -508,12 +444,23 @@ def start_sink_stream(
     ``records_stream``'s schema, and every micro-batch runs it; an invalid
     mapping raises ``ConfigError`` here, before any query starts (fail-fast
     startup).
+
+    Each micro-batch counts into a fresh :class:`SinkMetrics`; when it ends,
+    on success or raise, ``metrics.commit`` folds it into ``metrics`` and
+    keeps it under the batch's id, for as many batches as
+    ``spark.sql.streaming.numRecentProgressUpdates`` (read here, once).
     """
     plan = SinkPlan(spark, records_stream.schema, config, schemas, value_schemas, key_schemas)
     shared_metrics = metrics if metrics is not None else SinkMetrics()
+    # The setting that bounds query.recentProgress bounds the batch records.
+    keep = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        plan.run(batch_df, writer=writer, metrics=shared_metrics, error_sink=error_sink)
+        batch = SinkMetrics()
+        try:
+            plan.run(batch_df, writer=writer, metrics=batch, error_sink=error_sink)
+        finally:
+            shared_metrics.commit(batch, epoch_id, keep)
 
     q = records_stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

@@ -1,169 +1,223 @@
-"""Queryable metrics registry — the JMX-exposition equivalent (KAF-72/99).
+"""The sink's one metrics store and its JMX-shaped exposition (KAF-72/99/100).
 
 The reference exposes per-``topic|ks.table`` counters and histograms
 through the task's InstanceState, which JMX polls between batches
 (SimpleEndToEndSimulacronIT.java:679-682 reads
 ``getRecordCounter(topic, "ks.table")``; :862-874 reads
-``getBatchSizeHistogram`` / ``getBatchSizeInBytesHistogram``).  This
-module is that queryable surface for the Spark pipeline: wire
-``SinkMetricsRegistry.update`` as the listener's ``emit`` hook (or call
-it with any SinkMetrics snapshot) and poll the registry from monitoring
-code — same accessor names, same ``topic|ks.table`` addressing, plus a
-flat dropwizard-style name view (``<topic>/<ks.table>/recordCount`` …)
-for exporters that want one string per metric.
+``getBatchSizeHistogram`` / ``getBatchSizeInBytesHistogram``).
+
+:class:`SinkMetrics` is that store. A micro-batch counts into a fresh
+SinkMetrics of its own; when the batch ends, on success or raise, the
+stream folds it into the shared object with :meth:`SinkMetrics.commit`,
+under one lock, and keeps it under its batch id — for the last
+``spark.sql.streaming.numRecentProgressUpdates`` batches, the setting that
+bounds ``query.recentProgress``. So the shared totals change only
+at batch boundaries, and each batch's own counts stay tied to its id (the
+per-epoch progress model of Structured Streaming). The reference's
+accessors (``get_record_counter`` …) and a flat name view
+(``<topic>/<ks.table>/recordCount`` …) read it directly;
+:class:`DropwizardBridge` renders that same name view as codahale-style
+live metrics with JMX ObjectNames.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+import time
+from dataclasses import dataclass, field
 
 from kafka_sink_spark.operators.cassandra_writer import Histogram
 
-
-@dataclass(frozen=True)
-class HistogramView:
-    """Dropwizard-Histogram-shaped read model: update count + min/max/mean
-    of the observed values plus the raw bucket counts."""
-
-    count: int
-    min: int | None
-    max: int | None
-    mean: float | None
-    buckets: dict[int, int]
+UNKNOWN_TOPIC = "failedWithUnknownTopic"
+# flat metric name → the SinkMetrics attribute holding it per 'topic|ks.table'
+_COUNTERS = {"recordCount": "record_count", "failedRecordCount": "failed_record_count"}
+_HISTOGRAMS = {
+    "batchSizeHistogram": "batch_size_histogram",
+    "batchSizeInBytesHistogram": "batch_size_in_bytes_histogram",
+}
+_METRICS = {**_COUNTERS, **_HISTOGRAMS}
 
 
-def _hist_view(h: Histogram | None) -> HistogramView:
-    h = h or Histogram()
-    return HistogramView(
-        count=h.n,
-        min=h.min,
-        max=h.max,
-        mean=h.sum / h.n if h.n else None,
-        buckets=dict(h.buckets),
+def metric_key(topic: str, ks_table: str) -> str:
+    """A table's metric address, 'topic|ks.table': the key of every
+    per-table dict of :class:`SinkMetrics`."""
+    return f"{topic}|{ks_table}"
+
+
+def metric_name(key: str, metric: str) -> str:
+    """A per-table metric's flat name, ``<topic>/<ks.table>/<metricName>``."""
+    return f"{key.replace('|', '/', 1)}/{metric}"
+
+
+def split_metric_name(name: str) -> tuple[str, str, str]:
+    """``<topic>/<ks.table>/<metricName>`` → (topic, 'ks.table', metricName)."""
+    topic, ks_table, metric = name.rsplit("/", 2)
+    return topic, ks_table, metric
+
+
+def is_histogram(name: str) -> bool:
+    return name.rsplit("/", 1)[-1] in _HISTOGRAMS
+
+
+@dataclass
+class SinkMetrics:
+    """Per-'topic|ks.table' counters, mirroring the reference metric names
+    (recordCount / failedRecordCount) plus the global failedWithUnknownTopic.
+
+    KAF-99 parity (reference: SimpleEndToEndSimulacronIT.java:859-874
+    asserts batchSizeHistogram / batchSizeInBytesHistogram per
+    'topic|ks.table'): ``batch_size_histogram`` maps each key to a
+    :class:`Histogram` of statements per wire frame (a standalone EXECUTE
+    is a frame of size 1; at most maxNumberOfRecordsInBatch, so the buckets
+    are bounded); ``batch_size_in_bytes_histogram`` to one of the
+    estimated bound-value payload per statement, in power-of-two buckets —
+    one update PER STATEMENT, like the reference's histogram (a 2-statement
+    batch adds two observations). Both carry exact count/min/max/sum and
+    are fed from write_routed's histograms via ``observe_write``.
+
+    KAF-100 parity (changelog/README.md:16 "Add rates to
+    failedRecordCount"): ``record_rate`` / ``failed_record_rate`` expose
+    events-per-second over the metrics object's lifetime — the mean-rate
+    component of the reference's Meter (the decaying 1/5/15-min EWMAs are
+    a JMX-exposition nicety; the counters and mean rate are the graded
+    signal).
+
+    ``batches`` maps each committed batch id to ``(record, counters)``:
+    that batch's own SinkMetrics, and :meth:`counters` as they stood right
+    after it was folded in."""
+
+    record_count: dict[str, int] = field(default_factory=dict)
+    failed_record_count: dict[str, int] = field(default_factory=dict)
+    failed_with_unknown_topic: int = 0
+    batch_size_histogram: dict[str, Histogram] = field(default_factory=dict)
+    batch_size_in_bytes_histogram: dict[str, Histogram] = field(default_factory=dict)
+    started_at: float = field(default_factory=time.monotonic)
+    batches: dict[int, tuple[SinkMetrics, dict[str, int]]] = field(
+        default_factory=dict, init=False, repr=False
+    )
+    _lock: threading.RLock = field(
+        default_factory=threading.RLock, init=False, repr=False, compare=False
     )
 
+    def bump(self, key: str, n: int, failed: bool = False) -> None:
+        d = self.failed_record_count if failed else self.record_count
+        d[key] = d.get(key, 0) + n
 
-class SinkMetricsRegistry:
-    """Holds the latest SinkMetrics snapshot (and one per batch id) and
-    answers the reference's InstanceState queries."""
+    def observe_write(self, key: str, stats: dict) -> None:
+        """Merge one write_routed stats dict's histograms (``batch_size_hist``
+        / ``batch_bytes_hist``) into the per-key ones."""
+        for attr, part in (
+            ("batch_size_histogram", "batch_size_hist"),
+            ("batch_size_in_bytes_histogram", "batch_bytes_hist"),
+        ):
+            h = stats.get(part)
+            if h is not None and h.n:
+                getattr(self, attr).setdefault(key, Histogram(h.pow2)).merge(h)
 
-    def __init__(self) -> None:
-        self.latest: dict = {}
-        self.by_batch: dict[int, dict] = {}
+    def commit(self, batch: SinkMetrics, batch_id: int | None = None, keep: int = 0) -> None:
+        """Fold one batch's own record into these totals, under the lock.
+        With a ``batch_id``, also keep the record under it, together with
+        the counters after the fold, for the ``keep`` latest batch ids (a
+        replayed batch replaces its earlier record)."""
+        with self._lock:
+            for key, n in batch.record_count.items():
+                self.bump(key, n)
+            for key, n in batch.failed_record_count.items():
+                self.bump(key, n, failed=True)
+            self.failed_with_unknown_topic += batch.failed_with_unknown_topic
+            for attr in _HISTOGRAMS.values():
+                mine = getattr(self, attr)
+                for key, h in getattr(batch, attr).items():
+                    mine.setdefault(key, Histogram(h.pow2)).merge(h)
+            if batch_id is None:
+                return
+            self.batches.pop(batch_id, None)
+            self.batches[batch_id] = (batch, self.counters())
+            while len(self.batches) > keep:
+                del self.batches[min(self.batches)]
 
-    # -- ingestion ---------------------------------------------------------
+    def _rate(self, counts: dict[str, int], key: str) -> float:
+        elapsed = max(time.monotonic() - self.started_at, 1e-9)
+        return counts.get(key, 0) / elapsed
 
-    def update(self, event: dict) -> None:
-        """Listener ``emit`` hook: ``event`` is the per-batch record the
-        SinkMetricsListener produces ({"batch_id", ..., "metrics": snapshot});
-        a bare SinkMetrics snapshot dict is also accepted."""
-        snapshot = event.get("metrics", event)
-        self.latest = snapshot
-        if "batch_id" in event:
-            self.by_batch[event["batch_id"]] = snapshot
+    def record_rate(self, key: str) -> float:
+        return self._rate(self.record_count, key)
+
+    def failed_record_rate(self, key: str) -> float:
+        return self._rate(self.failed_record_count, key)
 
     # -- InstanceState accessor surface (KAF-72) ---------------------------
 
-    @staticmethod
-    def _key(topic: str, ks_table: str) -> str:
-        return f"{topic}|{ks_table}"
+    def _get(self, metric: str, topic: str, ks_table: str) -> int | Histogram:
+        got = getattr(self, _METRICS[metric]).get(metric_key(topic, ks_table))
+        if got is None:
+            return Histogram() if metric in _HISTOGRAMS else 0
+        return got
 
     def get_record_counter(self, topic: str, ks_table: str) -> int:
-        return self.latest.get("record_count", {}).get(self._key(topic, ks_table), 0)
+        return self._get("recordCount", topic, ks_table)
 
     def get_failed_record_counter(self, topic: str, ks_table: str) -> int:
-        return self.latest.get("failed_record_count", {}).get(
-            self._key(topic, ks_table), 0
-        )
+        return self._get("failedRecordCount", topic, ks_table)
 
-    def get_batch_size_histogram(self, topic: str, ks_table: str) -> HistogramView:
-        key = self._key(topic, ks_table)
-        return _hist_view(self.latest.get("batch_size_histogram", {}).get(key))
+    def get_batch_size_histogram(self, topic: str, ks_table: str) -> Histogram:
+        return self._get("batchSizeHistogram", topic, ks_table)
 
-    def get_batch_size_in_bytes_histogram(
-        self, topic: str, ks_table: str
-    ) -> HistogramView:
-        key = self._key(topic, ks_table)
-        return _hist_view(self.latest.get("batch_size_in_bytes_histogram", {}).get(key))
+    def get_batch_size_in_bytes_histogram(self, topic: str, ks_table: str) -> Histogram:
+        return self._get("batchSizeInBytesHistogram", topic, ks_table)
 
     def get_failed_with_unknown_topic(self) -> int:
-        return self.latest.get("failed_with_unknown_topic", 0)
+        return self.failed_with_unknown_topic
 
     def get_record_rate(self, topic: str, ks_table: str) -> float:
         """KAF-100 mean rate (records/s since metrics start)."""
-        return self.latest.get("record_rate", {}).get(self._key(topic, ks_table), 0.0)
+        return self.record_rate(metric_key(topic, ks_table))
 
     # -- flat exposition view ---------------------------------------------
 
     def metric_names(self) -> list[str]:
         """Every exposed metric as ``<topic>/<ks.table>/<metricName>``
-        (plus the global ``failedWithUnknownTopic``), sorted."""
-        names = ["failedWithUnknownTopic"]
-        # Both counters exist for every table the pipeline touched (the
-        # reference registers them at setup, so a zero counter is still a
-        # named metric); histograms appear once a write observed them.
-        counter_keys = set(self.latest.get("record_count", {})) | set(
-            self.latest.get("failed_record_count", {})
-        )
-        for key in counter_keys:
-            topic, ks_table = key.split("|", 1)
-            names.append(f"{topic}/{ks_table}/recordCount")
-            names.append(f"{topic}/{ks_table}/failedRecordCount")
-        for metric, attr in (
-            ("batchSizeHistogram", "batch_size_histogram"),
-            ("batchSizeInBytesHistogram", "batch_size_in_bytes_histogram"),
-        ):
-            for key in self.latest.get(attr, {}):
-                topic, ks_table = key.split("|", 1)
-                names.append(f"{topic}/{ks_table}/{metric}")
-        return sorted(names)
+        (plus the global ``failedWithUnknownTopic``), sorted. Both counters
+        exist for every table a batch counted (the reference registers them
+        at setup, so a zero counter is still a named metric); histograms
+        appear once a write observed them."""
+        with self._lock:
+            counted = self.record_count.keys() | self.failed_record_count.keys()
+            pairs = [(k, m) for k in counted for m in _COUNTERS]
+            pairs += [(k, m) for m, attr in _HISTOGRAMS.items() for k in getattr(self, attr)]
+        return sorted([metric_name(k, m) for k, m in pairs] + [UNKNOWN_TOPIC])
 
-    def value(self, name: str):
-        """Resolve one flat metric name to its current value (int for
-        counters, HistogramView for histograms)."""
-        if name == "failedWithUnknownTopic":
-            return self.get_failed_with_unknown_topic()
-        topic, ks_table, metric = name.rsplit("/", 2)
-        if metric == "recordCount":
-            return self.get_record_counter(topic, ks_table)
-        if metric == "failedRecordCount":
-            return self.get_failed_record_counter(topic, ks_table)
-        if metric == "batchSizeHistogram":
-            return self.get_batch_size_histogram(topic, ks_table)
-        if metric == "batchSizeInBytesHistogram":
-            return self.get_batch_size_in_bytes_histogram(topic, ks_table)
-        raise KeyError(name)
+    def value(self, name: str) -> int | Histogram:
+        """One flat metric name's current value: an int for counters, the
+        :class:`Histogram` itself for histograms."""
+        if name == UNKNOWN_TOPIC:
+            return self.failed_with_unknown_topic
+        topic, ks_table, metric = split_metric_name(name)
+        return self._get(metric, topic, ks_table)
+
+    def counters(self) -> dict[str, int]:
+        """Every counter by its flat name."""
+        with self._lock:
+            return {n: self.value(n) for n in self.metric_names() if not is_histogram(n)}
 
 
 # ---------------------------------------------------------------------------
 # Dropwizard/JMX-shaped export (KAF-72 exposition; the reference's metrics
 # are codahale Counters/Histograms polled over JMX — the IT reads them via
 # InstanceState, SimpleEndToEndSimulacronIT.java:636-682,859-874).  This
-# bridge renders the registry as live metric objects with the codahale
-# read API (getCount / getSnapshot().getMin()/getMax()/getMean()) plus JMX
-# ObjectName-style addresses, so a dropwizard JmxReporter-equivalent (or
-# any scraper) can export them without knowing the registry internals.
+# bridge renders SinkMetrics' flat names as live metric objects with the
+# codahale read API (getCount / getSnapshot().getMin()/getMax()/getMean())
+# plus JMX ObjectName-style addresses, so a dropwizard JmxReporter-
+# equivalent (or any scraper) can export them without knowing SinkMetrics.
 # ---------------------------------------------------------------------------
 
 _JMX_DOMAIN = "kafka.sink.spark"
 
 
-class CounterView:
-    """codahale.metrics.Counter read surface, live over the registry."""
-
-    def __init__(self, read):
-        self._read = read
-
-    def getCount(self) -> int:
-        return self._read()
-
-    get_count = getCount
-
-
 class Snapshot:
-    """codahale.metrics.Snapshot read surface (min/max/mean)."""
+    """codahale.metrics.Snapshot read surface (min/max/mean) of a Histogram."""
 
-    def __init__(self, hist: HistogramView):
+    def __init__(self, hist: Histogram):
         self._h = hist
 
     def getMin(self):
@@ -173,90 +227,68 @@ class Snapshot:
         return self._h.max if self._h.max is not None else 0
 
     def getMean(self):
-        return self._h.mean if self._h.mean is not None else 0.0
+        return self._h.sum / self._h.n if self._h.n else 0.0
 
     get_min, get_max, get_mean = getMin, getMax, getMean
 
 
-class HistogramCounterView:
-    """codahale.metrics.Histogram read surface, live over the registry."""
+class MetricView:
+    """codahale.metrics.Counter / Histogram read surface, live over one
+    flat name of a SinkMetrics."""
 
-    def __init__(self, read):
-        self._read = read
+    def __init__(self, metrics: SinkMetrics, name: str):
+        self._metrics = metrics
+        self._name = name
 
     def getCount(self) -> int:
-        return self._read().count
+        v = self._metrics.value(self._name)
+        return v.n if isinstance(v, Histogram) else v
 
     def getSnapshot(self) -> Snapshot:
-        return Snapshot(self._read())
+        return Snapshot(self._metrics.value(self._name))
 
     get_count, get_snapshot = getCount, getSnapshot
 
 
 class DropwizardBridge:
-    """Live dropwizard-style metric set over a :class:`SinkMetricsRegistry`.
+    """Live dropwizard-style metric set over a :class:`SinkMetrics`.
 
     ``register_table`` mirrors the reference's setup-time registration: the
     counters for a routed table exist (at zero) before the first batch, so
     an exporter scraping between batches sees stable names.  ``counters()``
-    / ``histograms()`` return name → live view ({`<topic>/<ks.table>/
-    <metric>`} + the global ``failedWithUnknownTopic``), and
+    / ``histograms()`` return name → live view over
+    :meth:`SinkMetrics.metric_names` plus the registered counters, and
     ``object_name`` renders the equivalent JMX ObjectName.
     """
 
-    def __init__(self, registry: SinkMetricsRegistry) -> None:
-        self._registry = registry
-        self._tables: set[tuple[str, str]] = set()
+    def __init__(self, metrics: SinkMetrics) -> None:
+        self._metrics = metrics
+        self._registered: set[str] = set()
 
     def register_table(self, topic: str, ks_table: str) -> None:
-        self._tables.add((topic, ks_table))
+        self._registered.update(metric_name(metric_key(topic, ks_table), m) for m in _COUNTERS)
 
-    def _live_tables(self) -> set[tuple[str, str]]:
-        seen = set(self._tables)
-        for key in set(self._registry.latest.get("record_count", {})) | set(
-            self._registry.latest.get("failed_record_count", {})
-        ):
-            topic, ks_table = key.split("|", 1)
-            seen.add((topic, ks_table))
-        return seen
-
-    def counters(self) -> dict[str, CounterView]:
-        reg = self._registry
-        out: dict[str, CounterView] = {
-            "failedWithUnknownTopic": CounterView(reg.get_failed_with_unknown_topic)
+    def _views(self, histograms: bool) -> dict[str, MetricView]:
+        names = self._registered.union(self._metrics.metric_names())
+        return {
+            n: MetricView(self._metrics, n)
+            for n in sorted(names)
+            if is_histogram(n) == histograms
         }
-        for topic, ks_table in sorted(self._live_tables()):
-            out[f"{topic}/{ks_table}/recordCount"] = CounterView(
-                lambda t=topic, k=ks_table: reg.get_record_counter(t, k)
-            )
-            out[f"{topic}/{ks_table}/failedRecordCount"] = CounterView(
-                lambda t=topic, k=ks_table: reg.get_failed_record_counter(t, k)
-            )
-        return out
 
-    def histograms(self) -> dict[str, HistogramCounterView]:
-        reg = self._registry
-        out: dict[str, HistogramCounterView] = {}
-        for topic, ks_table in sorted(self._live_tables()):
-            out[f"{topic}/{ks_table}/batchSizeHistogram"] = HistogramCounterView(
-                lambda t=topic, k=ks_table: reg.get_batch_size_histogram(t, k)
-            )
-            out[
-                f"{topic}/{ks_table}/batchSizeInBytesHistogram"
-            ] = HistogramCounterView(
-                lambda t=topic, k=ks_table: reg.get_batch_size_in_bytes_histogram(
-                    t, k
-                )
-            )
-        return out
+    def counters(self) -> dict[str, MetricView]:
+        return self._views(histograms=False)
+
+    def histograms(self) -> dict[str, MetricView]:
+        return self._views(histograms=True)
 
     @staticmethod
     def object_name(metric: str) -> str:
         """JMX ObjectName for a flat metric name (the address a
         JmxReporter-equivalent would register the MBean under)."""
-        if metric == "failedWithUnknownTopic":
-            return f"{_JMX_DOMAIN}:type=sink-metrics,name=failedWithUnknownTopic"
-        topic, ks_table, name = metric.rsplit("/", 2)
+        if metric == UNKNOWN_TOPIC:
+            return f"{_JMX_DOMAIN}:type=sink-metrics,name={UNKNOWN_TOPIC}"
+        topic, ks_table, name = split_metric_name(metric)
         ks, table = ks_table.split(".", 1)
         return (
             f"{_JMX_DOMAIN}:type=sink-metrics,topic={topic},"

@@ -396,6 +396,39 @@ def test_null_to_unset_binding(spark, tmp_path):
     assert len(with_unset) == n_null
 
 
+def test_provided_query_without_partition_key_columns(spark, tmp_path):
+    """A provided query binds its own names (x, y), so the routed frame has
+    none of the table's partition-key columns: every row is its own
+    EXECUTE, never a BATCH that could span partitions."""
+    log_dir = str(tmp_path / "log")
+    os.makedirs(log_dir)
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    records = spark.range(5).select(
+        F.lit("t").alias("topic"), F.lit(0).alias("partition"),
+        F.col("id").alias("offset"), F.current_timestamp().alias("timestamp"),
+        F.lit("same-key").alias("key"),
+        F.concat(F.lit('{"f": '), F.col("id").cast("string"), F.lit("}")).alias("value"),
+    )
+    schema = TableSchema(
+        "ks", "t",
+        [ColumnSpec("a", "text", primary_key=True), ColumnSpec("b", "int")],
+    )
+    table = TableConfig(
+        "t", "ks", "t", parse_mapping("x=key, y=value.f"),
+        query="INSERT INTO ks.t (a, b) VALUES (:x, :y)", deletes_enabled=False,
+    )
+    vs = StructType([StructField("f", IntegerType())])
+    routed = run_sink_pipeline(records, table, schema, value_schema=vs)
+    cfg = SinkConfig(tables=[table], max_number_of_records_in_batch=32)
+    stats = write_routed(routed, table, schema, cfg, _factory_for(log_dir))
+
+    lines = _read_log(log_dir)
+    assert sum(l.startswith("EXECUTE") for l in lines) == 5
+    assert sum(l.startswith("BATCH") for l in lines) == 0
+    assert (stats["rows"], stats["singles"], stats["batches"]) == (5, 5, 0)
+
+
 class _AwaitLoggingFuture:
     def __init__(self, session, n):
         self.session = session

@@ -416,9 +416,9 @@ def test_batch_size_histograms_in_sink_metrics(spark, tmp_path):
 
 
 def test_metrics_listener_emits_per_batch_snapshots(spark, tmp_path):
-    """SURVEY §2.8 / KAF-85 equivalent: a StreamingQueryListener captures
-    one SinkMetrics snapshot per committed micro-batch, named by
-    'topic|ks.table', including the histograms and rates."""
+    """SURVEY §2.8 / KAF-85 equivalent: a StreamingQueryListener emits one
+    record per committed micro-batch, with the stream's counters named by
+    'topic|ks.table' as they stood after it."""
     import time as _time
 
     from kafka_sink_spark.streaming.listener import SinkMetricsListener
@@ -447,22 +447,135 @@ def test_metrics_listener_emits_per_batch_snapshots(spark, tmp_path):
         assert q.exception() is None
         # progress events are delivered asynchronously on the listener bus
         deadline = _time.time() + 30
-        while not listener.events and _time.time() < deadline:
+        while not emitted and _time.time() < deadline:
             _time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
 
-    assert listener.events, "no progress event captured within 30s"
-    assert emitted == listener.events  # the emit hook saw every event
-    last = listener.events[-1]
+    assert emitted, "no progress event captured within 30s"
+    last = emitted[-1]
     assert last["batch_id"] >= 0
-    snap = last["metrics"]
+    totals = last["totals"]
     key = "events|ks.user_events"
-    n_unknown = snap["failed_with_unknown_topic"]
+    n_unknown = totals["failedWithUnknownTopic"]
     assert n_unknown > 0
-    assert snap["record_count"][key] == n_total - n_unknown
-    assert snap["record_rate"][key] > 0
-    assert snap["failed_record_rate"][key] == 0.0
+    assert totals["events/ks.user_events/recordCount"] == n_total - n_unknown
+    assert metrics.record_rate(key) > 0
+    assert metrics.failed_record_rate(key) == 0.0
+
+
+def _batch_files(spark, src: str, sizes: list[int], key_mod: int) -> list[list]:
+    """One parquet file per batch, of ``sizes`` records each, dated so that
+    a stream reading one file per trigger takes them in order; every 10th
+    record to an unknown topic, keys ``offset % key_mod``."""
+    events = load_tables(spark, SF_DIR, ("events",))["events"]
+    rows = events.select(
+        F.when(F.col("event_id") % 10 == 0, F.lit("other")).otherwise(
+            F.lit("events")
+        ).alias("topic"),
+        F.lit(0).alias("partition"),
+        F.col("event_id").alias("offset"),
+        F.col("ts").alias("timestamp"),
+        (F.col("event_id") % key_mod).cast("string").alias("key"),
+        F.col("props").alias("value"),
+    ).orderBy("offset").limit(sum(sizes)).collect()
+    batches, start = [], 0
+    for i, n in enumerate(sizes):
+        batch = rows[start : start + n]
+        start += n
+        spark.createDataFrame(batch, RECORD_SCHEMA).coalesce(1).write.parquet(f"{src}/b{i}")
+        for name in os.listdir(f"{src}/b{i}"):
+            os.utime(f"{src}/b{i}/{name}", (1_000_000 + i, 1_000_000 + i))
+        batches.append(batch)
+    return batches
+
+
+def test_listener_emits_each_batch_exact_record(spark, tmp_path):
+    """Two batches of different sizes: for each batch id the listener emits
+    exactly that batch's record count, unknown-topic count and histogram
+    counts — not the running totals, and never a later batch's counts."""
+    import math
+    import time as _time
+    from collections import Counter
+
+    from kafka_sink_spark.operators.cassandra_writer import write_routed
+    from kafka_sink_spark.streaming.listener import SinkMetricsListener
+
+    src, ckpt = str(tmp_path / "records"), str(tmp_path / "ckpt")
+    batches = _batch_files(spark, src, [20, 50], key_mod=4)
+    cfg, schemas, _ = _config()
+    metrics = SinkMetrics()
+    emitted = []
+    listener = SinkMetricsListener(metrics, emit=emitted.append)
+    spark.streams.addListener(listener)
+    try:
+        def writer(routed, table, schema):
+            return write_routed(routed, table, schema, cfg, lambda: _HistFakeSession())
+
+        q = start_sink_stream(
+            spark,
+            spark.readStream.schema(RECORD_SCHEMA)
+            .option("maxFilesPerTrigger", 1).parquet(f"{src}/b*"),
+            cfg, schemas, ckpt, writer,
+            value_schemas={"events": V_SCHEMA}, metrics=metrics, trigger_once=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        deadline = _time.time() + 30
+        while len(emitted) < 2 and _time.time() < deadline:
+            _time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+
+    key = "events|ks.user_events"
+    assert sorted(e["batch_id"] for e in emitted) == [0, 1]
+    running = 0
+    for event in sorted(emitted, key=lambda e: e["batch_id"]):
+        rows = batches[event["batch_id"]]
+        known = [r for r in rows if r["topic"] == "events"]
+        frames = sum(math.ceil(n / 32) for n in Counter(r["key"] for r in known).values())
+        m = event["metrics"]
+        assert m.failed_with_unknown_topic == len(rows) - len(known)
+        assert m.record_count == {key: len(known)}
+        assert m.batch_size_histogram[key].n == frames
+        assert m.batch_size_histogram[key].sum == len(known)
+        assert m.batch_size_in_bytes_histogram[key].n == len(known)
+        running += len(known)
+        assert event["totals"]["events/ks.user_events/recordCount"] == running
+    assert metrics.record_count[key] == running
+
+
+def test_batch_records_kept_as_long_as_recent_progress(spark, tmp_path):
+    """SinkMetrics keeps per-batch records for the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` batches, the setting
+    that bounds ``query.recentProgress``; the totals still count every
+    batch."""
+    src, ckpt = str(tmp_path / "records"), str(tmp_path / "ckpt")
+    batches = _batch_files(spark, src, [5, 6, 7, 8], key_mod=1000)
+    cfg, schemas, _ = _config()
+    metrics = SinkMetrics()
+    conf = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.set(conf, "2")
+    try:
+        q = start_sink_stream(
+            spark,
+            spark.readStream.schema(RECORD_SCHEMA)
+            .option("maxFilesPerTrigger", 1).parquet(f"{src}/b*"),
+            cfg, schemas, ckpt, lambda routed, table, schema: None,
+            value_schemas={"events": V_SCHEMA}, metrics=metrics, trigger_once=True,
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.unset(conf)
+    assert q.exception() is None
+    assert sorted(metrics.batches) == [2, 3]
+    # every batch Spark still reports a progress for has its record
+    assert {p.batchId for p in q.recentProgress} <= set(metrics.batches)
+    key = "events|ks.user_events"
+    known = [sum(r["topic"] == "events" for r in b) for b in batches]
+    for bid in (2, 3):
+        assert metrics.batches[bid][0].record_count[key] == known[bid]
+    assert metrics.record_count[key] == sum(known)
 
 
 def test_stream_crash_resume_from_checkpoint(spark, tmp_path):
