@@ -245,6 +245,12 @@ class SinkConfig:
         ):
             if value < 1:
                 raise ConfigError(f"{key} must be at least 1, got {value}")
+        # The error policy is matched by exact name: any other value would
+        # silently act as None.
+        if self.ignore_errors not in ("None", "Driver", "All"):
+            raise ConfigError(
+                f"ignoreErrors must be None, Driver or All, got: {self.ignore_errors}"
+            )
 
 
 def parse_sink_config(props: dict[str, str]) -> SinkConfig:

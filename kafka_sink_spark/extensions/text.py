@@ -56,10 +56,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def stopword_ratio(col: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     """Fraction of whitespace tokens that are stopwords (quality signal)."""
     toks = tokens(F.lower(col))
@@ -74,18 +70,6 @@ def punct_ratio(col: Column) -> Column:
     return F.length(stripped).cast("double") / F.greatest(
         F.length(col), F.lit(1)
     ).cast("double")
-
-
-def quality_score(col: Column) -> Column:
-    """Composite quality heuristic in [0,1]: long enough, low punctuation,
-    reasonable stopword density. Weights are arbitrary but fixed."""
-    length_ok = F.least(F.length(col).cast("double") / F.lit(200.0), F.lit(1.0))
-    return F.round(
-        F.lit(0.5) * length_ok
-        + F.lit(0.25) * (F.lit(1.0) - punct_ratio(col))
-        + F.lit(0.25) * F.least(stopword_ratio(col) * F.lit(5.0), F.lit(1.0)),
-        6,
-    )
 
 
 def lang_scores(col: Column) -> dict[str, Column]:

@@ -19,12 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 # --- C1/C2: numeric width / boolean / string casts -------------------------
-# Plain `.cast(target)` — applied by the mapping compiler from table metadata.
-# (reference: StructEndToEndCCMIT.java:86-224, JsonEndToEndCCMIT.java:109-158)
-
-
-def cast_to(col: Column, spark_type: str) -> Column:
-    return col.cast(spark_type)
+# Plain `.cast(target)`, applied inline by the mapping compiler from table
+# metadata (reference: StructEndToEndCCMIT.java:86-224,
+# JsonEndToEndCCMIT.java:109-158).
 
 
 def number_to_boolean(col: Column) -> Column:
@@ -205,13 +202,6 @@ def list_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> 
         col.getItem(i).cast(t).alias(name)
         for i, (name, t) in enumerate(zip(field_names, field_types))
     ]
-    return F.struct(*fields)
-
-
-def struct_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> Column:
-    """Struct → UDT by field name with coercion; strict arity is validated by
-    the compiler against table metadata (StructToUDTCodecTest.java:66-81)."""
-    fields = [col.getField(n).cast(t).alias(n) for n, t in zip(field_names, field_types)]
     return F.struct(*fields)
 
 

@@ -611,7 +611,16 @@ def cassandra_session_factory(
     The factory connects once per worker process: later calls with the
     same resolved settings (client id included, so one factory's) return
     the cached session.
+
+    TLS is not wired to the driver yet, so a config that asks for it
+    (``ssl.provider`` JDK or OpenSSL) is refused here rather than
+    connected in plaintext.
     """
+    if config.ssl_provider != "None":
+        raise ConfigError(
+            f"ssl.provider={config.ssl_provider} is not supported by the session "
+            "factory yet; it would connect without TLS"
+        )
     settings = build_session_settings(config, version, application_name)
     key = json.dumps(settings, sort_keys=True, default=repr)
 

@@ -9,11 +9,11 @@ stage — no per-row Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from kafka_sink_spark.config import SinkConfig, TableConfig, TableSchema, time_unit_to_seconds
+from kafka_sink_spark.config import TableConfig, TableSchema, time_unit_to_seconds
 from kafka_sink_spark.operators.records import project
 
 ROUTE_COL = "_route"

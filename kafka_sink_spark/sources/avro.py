@@ -18,7 +18,9 @@ JSON-parsed and Avro-parsed structs.
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,9 +28,9 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 
 logger = logging.getLogger(__name__)
 
-# Marks a record whose value was null BEFORE the decode: a tombstone, not a
-# corrupt payload.
-_WAS_NULL = "__value_was_null"
+# Marks a record whose key or value was null BEFORE the decode (a tombstone
+# or a keyless record), not a corrupt payload.
+_WAS_NULL = "__{}_was_null"
 
 
 def _is_missing_avro_source(exc: Exception) -> bool:
@@ -81,8 +83,8 @@ def decode_avro_records(
     Python fallback, which honors the same parse modes.
 
     ``corrupt_col``: when set (meaningful with mode=PERMISSIVE), adds a
-    boolean column marking records whose VALUE payload was non-null but
-    failed to decode — distinguishing corrupt records (ignoreErrors
+    boolean column marking records whose key or value payload was non-null
+    but failed to decode — distinguishing corrupt records (ignoreErrors
     territory) from genuine null-value tombstones (delete-on-null routing).
     Works identically on the JVM and fallback paths, since both turn a
     corrupt payload into a null struct under PERMISSIVE.
@@ -148,11 +150,11 @@ def avro_decode_stages(
     sides = {"value": value_avro_schema}
     if key_avro_schema is not None:
         sides["key"] = key_avro_schema
-    flag = {_WAS_NULL: column("value").isNull()} if corrupt_col is not None else {}
+    was_null = {side: _WAS_NULL.format(side) for side in sides} if corrupt_col else {}
+    flag = {name: column(side).isNull() for side, name in was_null.items()}
 
     def flagged(st: StructType) -> StructType:
-        extra = [StructField(_WAS_NULL, BooleanType())] if flag else []
-        return StructType(list(st.fields) + extra)
+        return StructType(list(st.fields) + [StructField(n, BooleanType()) for n in flag])
 
     stages: list = []
     if jvm:
@@ -182,10 +184,13 @@ def avro_decode_stages(
             decode_frame, out = avro_column_decoder(out, side, avro_schema, mode=mode)
             stages.append(decode_frame)
     if flag:
-        corrupt = {corrupt_col: column("value").isNull() & ~F.col(_WAS_NULL)}
-        stages.append(project(out, corrupt, drop=(_WAS_NULL,)))
+        corrupt = functools.reduce(
+            operator.or_,
+            (column(side).isNull() & ~F.col(name) for side, name in was_null.items()),
+        )
+        stages.append(project(out, {corrupt_col: corrupt}, drop=tuple(flag)))
         out = StructType(
-            [f for f in out.fields if f.name != _WAS_NULL]
+            [f for f in out.fields if f.name not in flag]
             + [StructField(corrupt_col, BooleanType())]
         )
     return stages + decode_stages(out)

@@ -6,7 +6,8 @@ Reference semantics mapped (SURVEY §2.8):
   reference: CassandraSinkTask.java:67-73) → Spark checkpointing +
   idempotent upserts: a replayed micro-batch overwrites itself.
 - ignoreErrors None/Driver/All (reference: CassandraSinkTask.java:128-141;
-  KAF-200) → error-routing policy inside the batch:
+  KAF-200) → error-routing policy inside the batch, applied by
+  ``SinkPlan.run`` alone:
     None   → any record error fails the batch (Spark retries → rewind);
     Driver → driver/write errors are ignored (counted), mapping/decode
              errors still fail the batch (rewind);
@@ -24,7 +25,7 @@ for the life of its query, so ``start_sink_stream`` builds the whole
 per-batch chain once, from the config, the table schemas, the value/key
 schemas and the stream's record schema — each topic's decode projections,
 each table's mapping-error condition and its mapping → ttl/writetime →
-route select lists, the unknown-topic predicate and each topic's aggregate
+route select lists, the unknown-topic count and each topic's aggregate
 — and validates every mapping. A trigger then only applies these
 name-based Column lists; it builds no Column, probes no stage schema and
 validates nothing. ``process_micro_batch`` is the same body behind a
@@ -39,10 +40,12 @@ fanned out from it:
     → dead letters → writes → release
 
 One aggregate per topic counts its rows and every table's mapping errors
-and fills the cache; the dead-letter sink and the writer read decoded rows
-from it; under ignoreErrors=None/Driver the batch raises after the counts and
-before any write; the cache is released when the batch ends, on success or
-raise. The unknown-topic count is the one other count of the batch.
+and fills the cache; its scan of the batch also counts the unknown-topic
+records, through an ``Observation`` on the batch frame, so no other job
+reads the batch. The dead-letter sink and the writer read decoded rows
+from the cache; under ignoreErrors=None/Driver the batch raises after the
+counts and before any write; the cache is released when the batch ends, on
+success or raise.
 
 Scale design: foreachBatch receives a distributed DataFrame; every stage here
 is declarative — the Column builders batch mode's ``decode_records`` /
@@ -60,11 +63,11 @@ import operator
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from kafka_sink_spark.config import SinkConfig, TableConfig, TableSchema
+from kafka_sink_spark.config import ConfigError, SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.compiler import mapping_columns
 from kafka_sink_spark.operators.records import (
     KEY_LITERAL,
@@ -141,43 +144,28 @@ def split_mapping_errors(
     return good, bad
 
 
-def _decode_stages(
-    spark: SparkSession, schema: StructType, config: SinkConfig, vs: object, ks: object
-) -> list:
+def _decode_stages(spark: SparkSession, schema: StructType, vs: object, ks: object) -> list:
     """The decode stages of one topic's records: an Avro schema JSON string
-    selects Struct/Avro mode (S1), anything else the JSON-with-literal-
-    fallback or raw decode of ``decode_records``."""
+    selects Struct/Avro mode (S1), PERMISSIVE under every policy, so a
+    corrupt payload is flagged ``AVRO_CORRUPT``, a mapping error like
+    malformed JSON; anything else the JSON-with-literal-fallback or raw
+    decode of ``decode_records``."""
     if isinstance(vs, str):
         from kafka_sink_spark.sources.avro import avro_decode_stages, use_from_avro
 
-        permissive = config.ignore_errors == "All"
         return avro_decode_stages(
-            schema,
-            vs,
-            ks if isinstance(ks, str) else None,
-            options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
-            corrupt_col=AVRO_CORRUPT if permissive else None,
-            jvm=use_from_avro(spark),
+            schema, vs, ks if isinstance(ks, str) else None,
+            options={"mode": "PERMISSIVE"}, corrupt_col=AVRO_CORRUPT, jvm=use_from_avro(spark),
         )
     return decode_stages(schema, value_schema=vs, key_schema=ks)
-
-
-@dataclass(frozen=True)
-class _TopicPlan:
-    """One topic's compiled stages: its records, their decode, and the one
-    aggregate over the decoded rows (row count, then each table's
-    mapping-error count)."""
-
-    records: Column
-    decode: list
-    tables: list[int]
-    counts: list[Column]
 
 
 @dataclass(frozen=True)
 class _TablePlan:
     """One table's compiled stages over its topic's decoded frame."""
 
+    table: TableConfig
+    schema: TableSchema
     key: str  # metric key, 'topic|ks.table'
     name: str  # 'ks.table'
     errors: Column | None  # mapping_error_column; None: cannot error
@@ -187,12 +175,24 @@ class _TablePlan:
     route: list[Column]  # ttl_route_columns over the mapped frame
 
 
+@dataclass(frozen=True)
+class _TopicPlan:
+    """One topic's compiled stages: its records, their decode, its tables'
+    plans, and the one aggregate over the decoded rows (row count, then
+    each table's mapping-error count)."""
+
+    records: Column
+    decode: list
+    tables: list[_TablePlan]
+    counts: list[Column]
+
+
 class SinkPlan:
     """The sink's per-batch work, compiled once for a record schema.
 
     A stream's record schema is fixed for the life of the query, so the
     decode → mapping → ttl/writetime → route chain, the mapping-error
-    conditions, the unknown-topic predicate and every topic's aggregate are
+    conditions, the unknown-topic metric and every topic's aggregate are
     built once, as name-based Column lists, when the plan is made — the
     reference compiles each table's RecordMapper once at task start
     (SURVEY §3.3). :meth:`run` then only applies them: per topic a filter,
@@ -200,10 +200,14 @@ class SinkPlan:
     and two projections. Building the same chain per batch cost ~2,000 py4j
     round trips on a two-table fan-out.
 
+    :meth:`run` is the one place that applies ``ignoreErrors``; the stages
+    it applies are the same under every policy.
+
     The mappings are validated against their tables here, before anything
-    runs. A batch whose schema differs from the compiled one (names and
-    types; nullability aside) recompiles the plan for the new schema, so a
-    stale plan never reads a batch it was not built for.
+    runs; a config with no tables is rejected, since a batch would then run
+    no action. A batch whose schema differs from the compiled one (names
+    and types; nullability aside) recompiles the plan for the new schema,
+    so a stale plan never reads a batch it was not built for.
     """
 
     def __init__(
@@ -215,6 +219,8 @@ class SinkPlan:
         value_schemas: dict[str, object] | None = None,
         key_schemas: dict[str, object] | None = None,
     ):
+        if not config.tables:
+            raise ConfigError("the sink config has no tables")
         self.config = config
         self.schemas = schemas
         self.value_schemas = value_schemas or {}
@@ -231,34 +237,25 @@ class SinkPlan:
         self._compile(spark, record_schema)
 
     def _compile(self, spark: SparkSession, record_schema: StructType) -> None:
-        tables = self.config.tables
-        by_topic: dict[str, list[int]] = {}
-        for i, table in enumerate(tables):
-            by_topic.setdefault(table.topic, []).append(i)
-        stages = {
-            topic: _decode_stages(
-                spark,
-                record_schema,
-                self.config,
-                self.value_schemas.get(topic),
-                self.key_schemas.get(topic),
-            )
-            for topic in by_topic
-        }
+        by_topic: dict[str, list[TableConfig]] = {}
+        for table in self.config.tables:
+            by_topic.setdefault(table.topic, []).append(table)
         # Each stage's output schema comes from analyzing the stages over
         # an empty frame of the record schema, once.
         empty = spark.createDataFrame([], record_schema)
-        decoded = {topic: apply_stages(empty, s) for topic, s in stages.items()}
         self.record_schema = record_schema
-        self.unknown = ~F.col("topic").isin(list(by_topic))
-        self.tables = [self._table_plan(t, decoded[t.topic]) for t in tables]
+        self.unknown = F.count_if(~F.col("topic").isin(list(by_topic))).alias("unknown")
         self.topics = []
-        for topic, idxs in by_topic.items():
-            errors = [self.tables[i].errors for i in idxs]
+        for topic, tables in by_topic.items():
+            stages = _decode_stages(
+                spark, record_schema, self.value_schemas.get(topic), self.key_schemas.get(topic)
+            )
+            decoded = apply_stages(empty, stages)
+            plans = [self._table_plan(t, decoded) for t in tables]
             counts = [F.count(F.lit(1))] + [
-                F.count_if(F.lit(False) if c is None else c) for c in errors
+                F.count_if(F.lit(False) if p.errors is None else p.errors) for p in plans
             ]
-            self.topics.append(_TopicPlan(F.col("topic") == topic, stages[topic], idxs, counts))
+            self.topics.append(_TopicPlan(F.col("topic") == topic, stages, plans, counts))
 
     def _table_plan(self, table: TableConfig, decoded: DataFrame) -> _TablePlan:
         """One table's stages over its topic's (empty, analyzed) decoded frame."""
@@ -267,6 +264,8 @@ class SinkPlan:
         mapping = mapping_columns(decoded.schema, table, schema)
         name = f"{table.keyspace}.{table.table}"
         return _TablePlan(
+            table=table,
+            schema=schema,
             key=metric_key(table.topic, name),
             name=name,
             errors=errors,
@@ -291,37 +290,43 @@ class SinkPlan:
         :func:`process_micro_batch` for the order and the error policy)."""
         if batch_df.schema.simpleString() != self.record_schema.simpleString():
             self._compile(batch_df.sparkSession, batch_df.schema)
-        config = self.config
-        tables = config.tables
+        policy = self.config.ignore_errors
         metrics = metrics if metrics is not None else SinkMetrics()
-        metrics.failed_with_unknown_topic += batch_df.filter(self.unknown).count()
+        # Unknown-topic records are counted by the topic aggregates' scans
+        # of the batch, not by an action of their own.
+        unknown = Observation()
+        observed = batch_df.observe(unknown, self.unknown)
 
         cached: list[DataFrame] = []
         try:
-            # per table, in config order: (decoded, n_good, n_bad)
-            splits: list[tuple] = [()] * len(tables)
+            # per table, topic by topic: (plan, decoded, n_good, n_bad)
+            splits: list[tuple[_TablePlan, DataFrame, int, int]] = []
             for topic in self.topics:
-                decoded = apply_stages(batch_df.filter(topic.records), topic.decode).persist()
+                decoded = apply_stages(observed.filter(topic.records), topic.decode).persist()
                 cached.append(decoded)
                 n_rows, *n_bads = decoded.agg(*topic.counts).collect()[0]
-                for i, n_bad in zip(topic.tables, n_bads):
-                    splits[i] = (decoded, n_rows - n_bad, n_bad)
+                splits += [
+                    (plan, decoded, n_rows - n_bad, n_bad)
+                    for plan, n_bad in zip(topic.tables, n_bads)
+                ]
+            # Read only now: Observation.get blocks until an action has run.
+            metrics.failed_with_unknown_topic += unknown.get["unknown"]
 
-            for table, plan, (decoded, _n_good, n_bad) in zip(tables, self.tables, splits):
+            for plan, decoded, _n_good, n_bad in splits:
                 if not n_bad:
                     continue
-                if config.ignore_errors != "All":
+                if policy != "All":
                     raise RuntimeError(
                         f"{n_bad} record(s) failed mapping for {plan.key} "
-                        f"(ignoreErrors={config.ignore_errors} rewinds mapping errors)"
+                        f"(ignoreErrors={policy} rewinds mapping errors)"
                     )
                 metrics.bump(plan.key, n_bad, failed=True)
                 if error_sink is not None:
                     bad = decoded.filter(plan.errors)
-                    error_sink(bad if plan.dead is None else bad.select(*plan.dead), table)
+                    error_sink(bad if plan.dead is None else bad.select(*plan.dead), plan.table)
 
             out: dict[str, DataFrame] = {}
-            for table, plan, (decoded, n_good, _n_bad) in zip(tables, self.tables, splits):
+            for plan, decoded, n_good, _n_bad in splits:
                 good = decoded if plan.good is None else decoded.filter(plan.good)
                 routed = good.select(*plan.mapping).select(*plan.route)
                 # S3 fan-in: several topics may map into one table, each with
@@ -332,31 +337,25 @@ class SinkPlan:
                     if prior is None
                     else prior.unionByName(routed, allowMissingColumns=True)
                 )
-                schema = self.schemas[(table.keyspace, table.table)]
-                if writer is None:
-                    metrics.bump(plan.key, n_good)
-                    continue
-                try:
-                    stats = writer(routed, table, schema)
-                except Exception:
-                    if config.ignore_errors not in ("All", "Driver"):
-                        raise  # None → batch fails → Spark retries (offset rewind)
-                    # Divert: count as failed, keep the batch alive.  The
-                    # reference's recordCounter increments at the MAPPING
-                    # stage, so driver-failed records appear in BOTH
-                    # counters (SimpleEndToEndSimulacronIT.java:555-564:
-                    # recordCounter=5 with 3 driver failures; :430-470:
-                    # recordCounter=4 excludes only the MAPPING failure).
-                    metrics.bump(plan.key, n_good)
-                    metrics.bump(plan.key, n_good, failed=True)
-                    continue
-                # A write_routed-shaped stats dict feeds the KAF-99 batch
-                # histograms; writers returning None keep the old contract.
-                if isinstance(stats, dict):
-                    metrics.observe_write(plan.key, stats)
-                    metrics.bump(plan.key, stats.get("rows", n_good))
-                else:
-                    metrics.bump(plan.key, n_good)
+                if writer is not None:
+                    try:
+                        stats = writer(routed, plan.table, plan.schema)
+                    except Exception:
+                        if policy == "None":
+                            raise  # the batch fails → Spark retries (offset rewind)
+                        # Divert: count as failed, keep the batch alive. The
+                        # reference's recordCounter increments at the MAPPING
+                        # stage, so driver-failed records appear in BOTH
+                        # counters (SimpleEndToEndSimulacronIT.java:555-564:
+                        # recordCounter=5 with 3 driver failures; :430-470:
+                        # recordCounter=4 excludes only the MAPPING failure).
+                        metrics.bump(plan.key, n_good, failed=True)
+                    else:
+                        # write_routed's stats dict feeds the KAF-99 batch
+                        # histograms; a writer may return None instead.
+                        if isinstance(stats, dict):
+                            metrics.observe_write(plan.key, stats)
+                metrics.bump(plan.key, n_good)
             return out
         finally:
             for df in cached:
@@ -384,32 +383,31 @@ def process_micro_batch(
     writer is given — the test/oracle path; topics fanned in to one table
     are unioned by column name). The order:
 
-    1. unknown-topic records are counted, not written
-       (SimpleEndToEndSimulacronIT.java:740-755) — one topic-only count;
-    2. decode per topic: tables on one topic share its value/key schema, so
+    1. decode per topic: tables on one topic share its value/key schema, so
        they share one decoded frame;
-    3. persist each topic's decoded frame;
-    4. one count job per topic: a single aggregate computes the topic's row
+    2. persist each topic's decoded frame;
+    3. one count job per topic: a single aggregate computes the topic's row
        count and every table's mapping-error count
-       (:func:`mapping_error_column`) and fills the cache. Under
+       (:func:`mapping_error_column`) and fills the cache; the first one
+       also counts the unknown-topic records, which are never written
+       (SimpleEndToEndSimulacronIT.java:740-755). Under
        ignoreErrors=None/Driver any mapping error raises here, before any
        table is written, so Spark's retry rewinds the offsets with nothing
        half-written — the reference's failure-offset behavior (SURVEY §2.8);
-    5. dead letters: under ignoreErrors=All each table's mapping errors are
+    4. dead letters: under ignoreErrors=All each table's mapping errors are
        counted and diverted to ``error_sink``, read from the cache;
-    6. writes: each table's good rows, read from the cache;
-    7. release: every persisted frame is unpersisted when the batch ends,
+    5. writes: each table's good rows, read from the cache;
+    6. release: every persisted frame is unpersisted when the batch ends,
        on success or raise, and the batch's own SinkMetrics is folded into
        ``metrics`` (what a raised batch counted still counts).
 
     ``value_schemas``/``key_schemas`` entries select the decode mode per
     topic: a StructType means JSON-with-literal-fallback; an Avro schema
-    JSON **string** means Struct/Avro mode (S1) via decode_avro_records —
-    PERMISSIVE + corrupt-flagging when ignoreErrors=All (corrupt records go
-    to the dead-letter channel; null-value tombstones still route as
-    deletes), FAILFAST otherwise (a corrupt record fails the count job, so
-    the batch raises before any write and Spark's retry rewinds the
-    offsets).
+    JSON **string** means Struct/Avro mode (S1) via decode_avro_records,
+    PERMISSIVE and corrupt-flagging under every policy. A corrupt key or
+    value payload is a mapping error like malformed JSON: dead-lettered
+    under ignoreErrors=All, raised before any write otherwise; null-value
+    tombstones still route as deletes.
     """
     plan = SinkPlan(
         batch_df.sparkSession, batch_df.schema, config, schemas, value_schemas, key_schemas

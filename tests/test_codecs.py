@@ -262,6 +262,26 @@ def test_writer_bounds_reject_values_below_one():
     assert one.max_number_of_records_in_batch == one.max_concurrent_requests == 1
 
 
+def test_ignore_errors_rejects_unknown_policies():
+    """ignoreErrors is matched by exact name, so a value outside
+    None|Driver|All (``all``, ``Ignore``) would silently act as None: it is
+    rejected when the config is built, parsed or by hand, naming the key."""
+    from kafka_sink_spark.config import SinkConfig
+
+    for bad in ("all", "Ignore", ""):
+        with pytest.raises(ConfigError, match="ignoreErrors"):
+            parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", "ignoreErrors": bad})
+    with pytest.raises(ConfigError, match="ignoreErrors"):
+        SinkConfig(tables=[], ignore_errors="driver")
+    for good in ("None", "Driver", "All"):
+        assert (
+            parse_sink_config(
+                {"topic.t.ks.tbl.mapping": "pk=key", "ignoreErrors": good}
+            ).ignore_errors
+            == good
+        )
+
+
 def test_cloud_mode_rules():
     """S7: bundle ⊕ contactPoints rejected; weak CLs clamp to LOCAL_QUORUM."""
     with pytest.raises(ConfigError, match="mutually exclusive"):

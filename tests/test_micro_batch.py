@@ -20,7 +20,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_sink_spark.config import ColumnSpec, SinkConfig, TableConfig, TableSchema
+from kafka_sink_spark.config import ColumnSpec, ConfigError, SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.compiler import compile_mapping
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.operators.writes import add_ttl_writetime, route_writes, run_sink_pipeline
@@ -175,14 +175,15 @@ def test_no_persist_outlives_the_batch(spark):
 
 
 def test_bookkeeping_job_count(spark):
-    """A two-table fan-out with mapping errors under All runs at most 9
-    Spark jobs: the unknown-topic count (shuffle + result), the one count
-    of the topic (cache fill + shuffle + result), the one table's
-    dead-letter count (shuffle + result) and one noop write per table. The
-    per-table pipeline this replaced ran 12 on the same batch (a
-    mapping-error count per table with errors, and a fallback row count
-    per written table); a reintroduced per-table count shows here."""
-    MAX_JOBS = 9
+    """A two-table fan-out with mapping errors under All runs at most 7
+    Spark jobs: the one count of the topic (cache fill + shuffle + result,
+    which also counts the unknown-topic records), the one table's
+    dead-letter count (shuffle + result) and one noop write per table. A
+    separate unknown-topic count made 9; the per-table pipeline before
+    that ran 12 on the same batch (a mapping-error count per table with
+    errors, and a fallback row count per written table); a reintroduced
+    count shows here."""
+    MAX_JOBS = 7
     sc = spark.sparkContext
     cfg, schemas = _config("All")
     records = _records(spark)
@@ -197,6 +198,32 @@ def test_bookkeeping_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= MAX_JOBS
+
+
+@pytest.mark.parametrize("n", [0, 5])
+def test_empty_and_all_unknown_batches_return(spark, n):
+    """A batch with no records, and one whose records are all on an
+    unconfigured topic, complete: the unknown-topic count (0 and N) is
+    read once the topic's aggregate has run, and each table is handed an
+    empty frame."""
+    cfg, schemas = _config("None")
+    rows = [("audit", 0, i, None, "0", '{"k": 0}') for i in range(n)]
+    metrics = SinkMetrics()
+    calls = []
+    process_micro_batch(
+        spark.createDataFrame(rows, RECORD_DDL), cfg, schemas, value_schemas=VALUE_SCHEMAS,
+        writer=_noop_writer(calls), metrics=metrics,
+    )
+    assert metrics.failed_with_unknown_topic == n
+    assert metrics.record_count == {RAW_KEY: 0, TYPED_KEY: 0}
+    assert calls == ["raw_clicks", "clicks_k"]
+
+
+def test_config_without_tables_is_rejected(spark):
+    """A plan with no tables would run no action, so it is refused when
+    built."""
+    with pytest.raises(ConfigError, match="no tables"):
+        SinkPlan(spark, spark.createDataFrame([], RECORD_DDL).schema, SinkConfig(tables=[]), {})
 
 
 def test_fan_in_unions_every_topic_into_its_table(spark):

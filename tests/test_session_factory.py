@@ -407,6 +407,16 @@ def test_unknown_ssl_provider_rejected():
         cfg({"ssl.provider": "GnuTLS"})
 
 
+@pytest.mark.parametrize("provider", ["JDK", "OpenSSL"])
+def test_ssl_provider_refused_rather_than_connecting_in_plaintext(provider):
+    """The factory passes no SSL context to ``Cluster``, so asking for TLS
+    must fail when the factory is built, before any connection is made."""
+    log = []
+    with pytest.raises(ConfigError, match="ssl.provider"):
+        cassandra_session_factory(cfg({"ssl.provider": provider}), driver=fake_driver(log))
+    assert log == []
+
+
 # ---------------------------------------------------------------------------
 # Cloud mode (CloudSniEndToEndIT.java:92-168)
 # ---------------------------------------------------------------------------

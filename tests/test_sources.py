@@ -575,3 +575,27 @@ def test_avro_permissive_mode_nulls_corrupt_payloads(spark):
         .select(VALUE_PARSED).collect()
     ]
     assert {g["s"] if g else None for g in got} == {"ok", None}
+
+
+def test_corrupt_flag_marks_key_and_value_payloads(spark):
+    """``corrupt_col`` marks a record whose key or value payload was
+    non-null and failed the PERMISSIVE decode; a null payload (a tombstone
+    value, a keyless record) is not corrupt."""
+    from kafka_sink_spark.sources.avro import decode_avro_records
+    from kafka_sink_spark.sources.avro_python import encode
+
+    sch = '{"type":"record","name":"r","fields":[{"name":"n","type":"long"}]}'
+    ok = encode(sch, {"n": 7})
+    rows = [
+        (0, ok, ok),
+        (1, b"\xff", ok),  # corrupt key
+        (2, ok, b"\xff"),  # corrupt value
+        (3, None, None),  # keyless tombstone
+        (4, ok, None),  # tombstone
+    ]
+    rec = spark.createDataFrame(rows, "offset long, key binary, value binary")
+    out = decode_avro_records(
+        rec, sch, sch, options={"mode": "PERMISSIVE"}, corrupt_col="corrupt"
+    )
+    got = {r["offset"]: r["corrupt"] for r in out.select("offset", "corrupt").collect()}
+    assert got == {0: False, 1: True, 2: True, 3: False, 4: False}

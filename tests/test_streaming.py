@@ -252,7 +252,8 @@ def test_avro_struct_mode_through_pipeline(spark):
     schema JSON STRING in value_schemas selects decode_avro_records. Under
     ignoreErrors=All corrupt payloads divert to the DLQ (PERMISSIVE +
     corrupt flag) while null-value tombstones still route as DELETEs; under
-    the default policy a corrupt payload fails the batch (FAILFAST)."""
+    None and Driver a corrupt payload is a mapping error: the batch raises
+    before any write, so Spark's retry rewinds the offsets."""
     from pyspark.sql.types import BinaryType, LongType, StringType
     from pyspark.sql.types import StructField as SF
     from pyspark.sql.types import StructType as ST
@@ -314,13 +315,18 @@ def test_avro_struct_mode_through_pipeline(spark):
     good = routed.filter(F.col(ROUTE_COL) != "DELETE")
     assert good.filter(F.col("kcol") != F.col("pk") * 10).count() == 0
 
-    # --- default policy: FAILFAST fails the batch on the corrupt record ---
-    cfg2 = SinkConfig(tables=[table])
-    with pytest.raises(Exception):
-        out2 = process_micro_batch(
-            batch, cfg2, schemas, value_schemas={"events": avro_schema}
-        )
-        out2["ks.t"].count()
+    # --- None (the default) and Driver: the batch raises before any write ---
+    for policy in ("None", "Driver"):
+        writes = []
+        with pytest.raises(
+            RuntimeError, match=rf"{n_corrupt} record.*failed mapping for events\|ks\.t"
+        ):
+            process_micro_batch(
+                batch, SinkConfig(tables=[table], ignore_errors=policy), schemas,
+                value_schemas={"events": avro_schema},
+                writer=lambda routed, t, s: writes.append(t.table),
+            )
+        assert writes == []
 
 
 # ---------------------------------------------------------------------------
@@ -535,6 +541,7 @@ def test_listener_emits_each_batch_exact_record(spark, tmp_path):
         known = [r for r in rows if r["topic"] == "events"]
         frames = sum(math.ceil(n / 32) for n in Counter(r["key"] for r in known).values())
         m = event["metrics"]
+        assert event["num_input_rows"] == len(rows)
         assert m.failed_with_unknown_topic == len(rows) - len(known)
         assert m.record_count == {key: len(known)}
         assert m.batch_size_histogram[key].n == frames
