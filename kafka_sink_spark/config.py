@@ -11,7 +11,9 @@ table-scoped keys are recognized by their known trailing setting name.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
 from kafka_sink_spark.mapping.parser import MappingEntry, MappingError, parse_mapping
 
@@ -34,6 +36,18 @@ _CODEC_SETTINGS = {
     "time": "time_pattern",
     "timestamp": "timestamp_pattern",
     "unit": "unit",
+}
+
+# codec.locale → (grouping separator, decimal separator): the locales
+# functions.codecs parses numbers in. Covers the locales the reference tests
+# exercise (fr_FR in JsonEndToEndCCMIT.java:310) plus common ones.
+LOCALE_SEPS = {
+    "en_US": (",", "."),
+    "en_GB": (",", "."),
+    "fr_FR": ("\u202f", ","),  # narrow no-break space grouping
+    "de_DE": (".", ","),
+    "es_ES": (".", ","),
+    "it_IT": (".", ","),
 }
 
 _TIME_UNITS = {
@@ -120,12 +134,33 @@ class CodecConfig:
     timestamp_pattern: str = "CQL_TIMESTAMP"
     unit: str = "MILLISECONDS"
 
-    def changed_keys(self) -> list[str]:
-        """The ``codec.*`` keys whose value differs from the default."""
-        default = CodecConfig()
-        return [
-            k for k, f in _CODEC_SETTINGS.items() if getattr(self, f) != getattr(default, f)
-        ]
+    def __post_init__(self) -> None:
+        # Refused here, once: the mapping converts every row with these.
+        if self.unit not in _TIME_UNITS:
+            raise ConfigError(
+                f"codec.unit must be one of {', '.join(_TIME_UNITS)}, got: {self.unit}"
+            )
+        if self.locale not in LOCALE_SEPS:
+            raise ConfigError(
+                f"codec.locale must be one of {', '.join(LOCALE_SEPS)}, got: {self.locale}"
+            )
+        if not _is_zone_id(self.time_zone):
+            raise ConfigError(f"codec.timeZone is not a time-zone id: {self.time_zone}")
+
+
+# A zone offset as java.time.ZoneId reads it: Z, +h, +hh:mm, UTC+hh:mm, ...
+_ZONE_OFFSET = re.compile(r"Z|(UTC|GMT|UT)?([+-]\d{1,2}(:?\d{2}(:?\d{2})?)?)?")
+
+
+def _is_zone_id(zone: str) -> bool:
+    """Whether ``zone`` names a region of the tz database or a fixed offset."""
+    if zone and _ZONE_OFFSET.fullmatch(zone):
+        return True
+    try:
+        ZoneInfo(zone)
+    except (ZoneInfoNotFoundError, ValueError):
+        return False
+    return True
 
 
 @dataclass

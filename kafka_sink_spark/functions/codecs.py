@@ -3,25 +3,97 @@ column expressions (SURVEY.md §2.4, C1–C17).
 
 Everything here is a pure Column→Column function built from
 ``pyspark.sql.functions`` builtins so conversions stay JVM-side inside
-WholeStageCodegen. Only the locale-aware number/temporal parsers (which Spark
-cannot express — its casts are locale-fixed) drop to Arrow-batched pandas UDFs,
-mirroring the reference's ``codec.locale`` setting
+WholeStageCodegen; only ``format_number_locale`` drops to an Arrow-batched
+pandas UDF.
+
+:func:`convert` is the one place that decides how a mapped value becomes its
+target column's type, under its topic's ``codec.*`` settings
 (reference: sink/src/it/java/com/datastax/oss/kafka/sink/ccm/JsonEndToEndCCMIT.java:303-336).
+Every conversion it builds yields null where the reference's codec would
+fail, never a raised error, so the mapping can flag the failure per record.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 from decimal import Decimal as PyDecimal
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import (
+    DataType,
+    DateType,
+    DoubleType,
+    NumericType,
+    StringType,
+    TimestampType,
+)
+
+from kafka_sink_spark.config import LOCALE_SEPS
+
+# --- the one conversion entry point ----------------------------------------
+
+# C15 pseudo-types: declared in ColumnSpec.spark_type, stored as validated
+# strings (see wkt_passthrough / daterange_passthrough).
+GEO_TARGETS = {
+    "geo_point": "point",
+    "geo_linestring": "linestring",
+    "geo_polygon": "polygon",
+}
+DATERANGE_TARGET = "daterange"
+
+
+@functools.lru_cache(maxsize=64)
+def _spark_type(target_type: str) -> DataType:
+    return DataType.fromDDL(target_type)
+
+
+def same_type(source_type: DataType, target_type: str) -> bool:
+    """Whether a value of ``source_type`` already is of the column type
+    ``target_type`` (nullability aside), so there is nothing to convert."""
+    name = target_type.strip().lower()
+    if name in GEO_TARGETS or name == DATERANGE_TARGET:
+        return False
+    return source_type.simpleString() == _spark_type(target_type).simpleString()
+
+
+def convert(source: Column, source_type: DataType, target_type: str, codec) -> Column:
+    """``source`` (of ``source_type``) as the column type ``target_type``,
+    under the codec settings ``codec`` (a ``config.CodecConfig``):
+
+    - numeric → timestamp: epoch in ``codec.unit`` (C5);
+    - string → timestamp / date: ``codec.timestamp`` / ``codec.date``
+      pattern, zone-less text read in ``codec.timeZone`` (C4);
+    - string → number: ``codec.locale`` separators (C3);
+    - geo / daterange: validated passthrough (C15);
+    - anything else: ``try_cast`` (C1/C2; struct targets cast by field name
+      with per-field coercion, C11/C14).
+
+    A value the conversion cannot read comes out null.
+    """
+    name = target_type.strip().lower()
+    if name == DATERANGE_TARGET:
+        return daterange_passthrough(source.try_cast("string"))
+    if name in GEO_TARGETS:
+        return wkt_passthrough(source.try_cast("string"), GEO_TARGETS[name])
+    target = _spark_type(target_type)
+    if isinstance(target, TimestampType) and isinstance(source_type, NumericType):
+        return epoch_to_timestamp(source, codec.unit)
+    if isinstance(source_type, StringType):
+        if isinstance(target, TimestampType):
+            return string_to_timestamp(source, codec.timestamp_pattern, codec.time_zone)
+        if isinstance(target, DateType):
+            return string_to_date(source, codec.date_pattern)
+        if isinstance(target, NumericType):
+            return parse_number_locale(source, codec.locale, target_type)
+    return source.try_cast(target_type)
+
 
 # --- C1/C2: numeric width / boolean / string casts -------------------------
-# Plain `.cast(target)`, applied inline by the mapping compiler from table
-# metadata (reference: StructEndToEndCCMIT.java:86-224,
-# JsonEndToEndCCMIT.java:109-158).
+# ``try_cast`` to the table column's type, applied by :func:`convert`
+# (reference: StructEndToEndCCMIT.java:86-224, JsonEndToEndCCMIT.java:109-158).
 
 
 def number_to_boolean(col: Column) -> Column:
@@ -31,42 +103,33 @@ def number_to_boolean(col: Column) -> Column:
 
 # --- C3: locale-aware string<->number (codec.locale) -----------------------
 
-_LOCALE_SEPS = {
-    # locale → (grouping separator, decimal separator). Covers the locales the
-    # reference tests exercise (fr_FR in JsonEndToEndCCMIT.java:310) plus
-    # common ones; extend as needed.
-    "en_US": (",", "."),
-    "en_GB": (",", "."),
-    "fr_FR": (" ", ","),  # narrow no-break space grouping
-    "de_DE": (".", ","),
-    "es_ES": (".", ","),
-    "it_IT": (".", ","),
-}
+# What a space-grouping locale accepts as its grouping separator.
+_SPACES = " \t\n\x0b\f\r\u00a0\u202f"
 
 
-def parse_number_locale(col: Column, locale: str = "en_US") -> Column:
-    """String → double honoring the locale's grouping/decimal separators.
+def parse_number_locale(col: Column, locale: str = "en_US", target: str = "double") -> Column:
+    """Numeric text in ``locale`` → the number type ``target``: grouping
+    separators dropped, the decimal separator read as ``.``, then
+    ``try_cast`` (exact for every integral and decimal type — no detour
+    through a double). Text that is not a number comes out null.
 
-    Space-grouping locales (fr_FR) also accept a regular space / NBSP /
-    narrow-NBSP as grouping. Stays as a Column expression (translate + cast)
-    — no UDF needed for the separator swap, which is all
-    java.text.DecimalFormat does for plain numbers.
+    Space-grouping locales (fr_FR) accept any space as grouping; stripping
+    whitespace for every locale would silently accept malformed input. One
+    ``translate`` does both edits — all java.text.DecimalFormat does for
+    plain numbers.
     """
-    group, dec = _LOCALE_SEPS.get(locale, (",", "."))
-    if group.isspace():
-        # Only space-grouping locales treat whitespace as a separator;
-        # stripping it for every locale would silently accept malformed input.
-        cleaned = F.regexp_replace(col, r"[\s  ]", "")
-    else:
-        cleaned = F.regexp_replace(col, re_escape(group), "")
-    if dec != ".":
-        cleaned = F.regexp_replace(cleaned, re_escape(dec), ".")
-    return cleaned.cast("double")
+    group, dec = LOCALE_SEPS[locale]
+    text = F.translate(col, dec + (_SPACES if group.isspace() else group), ".")
+    if dec == ".":
+        # The cast rejects any grouping separator, so text it reads as it is
+        # needs no translate: only grouped numbers pay for one (3x cheaper).
+        return F.coalesce(col.try_cast(target), text.try_cast(target))
+    return text.try_cast(target)
 
 
 def format_number_locale(col: Column, locale: str = "en_US") -> Column:
     """Number → string per locale (reverse direction)."""
-    group, dec = _LOCALE_SEPS.get(locale, (",", "."))
+    group, dec = LOCALE_SEPS[locale]
 
     def _fmt(s: pd.Series) -> pd.Series:
         def one(v):
@@ -80,43 +143,69 @@ def format_number_locale(col: Column, locale: str = "en_US") -> Column:
     return F.pandas_udf(_fmt, StringType())(col.cast(DoubleType()))
 
 
-def re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
-
-
 # --- C4/C5/C6: temporal conversions ---------------------------------------
 
+# Text that carries its own zone: a Z, an offset or a zone id after the
+# time of day (``17:12:32Z``, ``17:12:32.584+02:00``, ``17:12 Europe/Paris``).
+_ZONED_TEXT = r":[0-9]{2}(\.[0-9]*)?\s*[^\s0-9.:]"
+# Pattern letters that parse a zone or an offset.
+_ZONE_LETTERS = re.compile(r"[VzOXxZ]")
 
-def string_to_timestamp(col: Column, pattern: str | None = None) -> Column:
-    """C4: string → timestamp by pattern; None/CQL_TIMESTAMP/ISO names use
-    Spark's lenient ISO parsing (matches the reference defaults for ISO input).
+
+def _lenient(pattern: str | None) -> bool:
+    """The reference's named formatters parse as Spark's lenient ISO reader."""
+    return pattern is None or pattern == "CQL_TIMESTAMP" or pattern.startswith("ISO_")
+
+
+def string_to_timestamp(
+    col: Column, pattern: str | None = None, time_zone: str = "UTC"
+) -> Column:
+    """C4: string → timestamp by pattern; None, CQL_TIMESTAMP and the ISO_*
+    names use Spark's lenient ISO parsing (matches the reference defaults for
+    ISO input). Text with no zone of its own is a wall-clock time in
+    ``time_zone`` (codec.timeZone): the session-zone parse is re-read in it.
     """
-    if pattern in (None, "CQL_TIMESTAMP", "ISO_ZONED_DATE_TIME", "ISO_INSTANT"):
-        return F.to_timestamp(col)
-    return F.to_timestamp(col, pattern)
+    if _lenient(pattern):
+        parsed = F.try_to_timestamp(col)
+        zoned = col.rlike(_ZONED_TEXT)
+    else:
+        parsed = F.try_to_timestamp(col, F.lit(pattern))
+        zoned = F.lit(bool(_ZONE_LETTERS.search(re.sub(r"'[^']*'", "", pattern))))
+    local = F.to_utc_timestamp(F.from_utc_timestamp(parsed, F.current_timezone()), time_zone)
+    return F.when(zoned, parsed).otherwise(local)
 
 
 def string_to_date(col: Column, pattern: str | None = None) -> Column:
-    if pattern in (None, "ISO_LOCAL_DATE"):
-        return F.to_date(col)
-    return F.to_date(col, pattern)
+    if _lenient(pattern):
+        return F.try_to_date(col)
+    return F.try_to_date(col, pattern)
+
+
+# codec.unit → microseconds per unit; NANOSECONDS divides instead.
+_EPOCH_MICROS = {
+    "MICROSECONDS": 1,
+    "MILLISECONDS": 1_000,
+    "SECONDS": 1_000_000,
+    "MINUTES": 60_000_000,
+    "HOURS": 3_600_000_000,
+    "DAYS": 86_400_000_000,
+}
 
 
 def epoch_to_timestamp(col: Column, unit: str = "MILLISECONDS") -> Column:
     """C5: numeric-since-epoch → timestamp selected by codec.unit
-    (reference: JsonEndToEndCCMIT.java:303-336, `vseconds: 1520611952`)."""
-    n = col.cast("long")
-    if unit == "SECONDS":
-        return F.timestamp_seconds(n)
-    if unit == "MILLISECONDS":
-        return F.timestamp_millis(n)
-    if unit == "MICROSECONDS":
-        return F.timestamp_micros(n)
+    (reference: JsonEndToEndCCMIT.java:303-336, `vseconds: 1520611952`).
+    Integer arithmetic throughout: nanoseconds floor-divide to microseconds
+    (through a double, 1700000000000000999 ns would round up a microsecond),
+    and a value past the timestamp range comes out null."""
+    n = col.try_cast("long")
     if unit == "NANOSECONDS":
-        return F.timestamp_micros((n / F.lit(1000)).cast("long"))
-    raise ValueError(f"unsupported epoch unit {unit}")
+        micros = F.call_function("div", n - F.pmod(n, F.lit(1000)), F.lit(1000))
+    elif unit in _EPOCH_MICROS:
+        micros = F.try_multiply(n, F.lit(_EPOCH_MICROS[unit]))
+    else:
+        raise ValueError(f"unsupported epoch unit {unit}")
+    return F.timestamp_micros(micros)
 
 
 def hhmmss_numeric_to_time_nanos(col: Column) -> Column:
@@ -272,7 +361,7 @@ def base64_to_decimal(col: Column, precision: int, scale: int) -> Column:
 # then parse; reference: StructEndToEndCCMIT.java:206-209, 262-280). Without
 # a DSE target type system, the faithful OSS behavior is VALIDATED
 # passthrough: well-formed text flows through trimmed, malformed text becomes
-# null (the mapping layer's null handling then applies). All regex, all JVM.
+# null, which the sink counts as a failed conversion. All regex, all JVM.
 _NUM = r"-?[0-9]+(\.[0-9]+)?"
 _COORD = rf"{_NUM}\s+{_NUM}"
 _COORD_LIST = rf"{_COORD}(\s*,\s*{_COORD})*"

@@ -11,9 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StringType, StructType
 
 from kafka_sink_spark.config import TableConfig, TableSchema
+from kafka_sink_spark.functions import codecs
 from kafka_sink_spark.functions.timeuuid import now_timeuuid
 from kafka_sink_spark.mapping.parser import (
     TIMESTAMP_TARGET,
@@ -23,43 +24,79 @@ from kafka_sink_spark.mapping.parser import (
 )
 from kafka_sink_spark.operators import records as R
 
+# Special targets → output column; their values convert to double (the
+# unit conversion happens in operators.writes).
+_SPECIAL = {TTL_TARGET: "_mapped_ttl", TIMESTAMP_TARGET: "_mapped_timestamp"}
 
-def _namespace_expr(cols: set[str], entry: MappingEntry) -> Column:
-    """Resolve a mapping entry's source field to a Column on a decoded
-    record frame with columns ``cols``."""
+
+def _source(
+    types: dict[str, DataType], entry: MappingEntry, target: str | None
+) -> tuple[Column, DataType]:
+    """A mapping entry's source field on a decoded record frame whose columns
+    have ``types``: its Column and its type. ``target`` is the type it maps
+    onto, when known."""
     if entry.is_function:
         if entry.path != "now":
             # Whitelist is exactly [now()] (HeadersCCMIT.java:264).
             raise MappingError(f"unsupported function {entry.path}()")
-        return now_timeuuid()
+        return now_timeuuid(), StringType()
 
     ns = entry.namespace
-    parsed = {"key": R.KEY_PARSED, "value": R.VALUE_PARSED}.get(ns)
-
     if ns == "header":
-        if R.HEADERS_MAP not in cols:
+        if R.HEADERS_MAP not in types:
             raise MappingError("record DataFrame has no headers column")
-        return F.col(R.HEADERS_MAP).getItem(entry.path)
+        return F.col(R.HEADERS_MAP).getItem(entry.path), types[R.HEADERS_MAP].valueType
 
+    if ns not in types:
+        raise MappingError(f"record DataFrame has no {ns} column")
+    parsed = {"key": R.KEY_PARSED, "value": R.VALUE_PARSED}[ns]
+    if entry.path == R.RAW_FIELD or parsed not in types:
+        if entry.path in (None, R.RAW_FIELD):
+            # Raw mode, or value.__self: the bare column (StructDataTest.java:43-46).
+            return F.col(ns), types[ns]
+        raise MappingError(
+            f"mapping references {entry.source_name} but record {ns} was decoded in "
+            f"raw mode; only bare '{ns}' or '{ns}.{R.RAW_FIELD}' is addressable"
+        )
+    fields = [f for f in types[parsed].fields if f.name != R.CORRUPT_COL]
     if entry.path is None:
-        # Whole key/value. Raw mode → the bare column. JSON mode: resolved in
-        # compile_mapping (target-type aware: struct target gets the parsed
-        # struct; scalar target gets JSON text with literal fallback for
-        # non-JSON rows, MetadataCreatorTest.java:104-116).
-        if parsed in cols:
-            return F.col(parsed).dropFields(R.CORRUPT_COL)
-        return F.col(ns)
+        whole = F.col(parsed).dropFields(R.CORRUPT_COL)
+        if target is None or target.strip().lower().startswith("struct"):
+            return whole, StructType(fields)
+        # Whole JSON key/value onto a non-struct column: valid JSON rows
+        # render as JSON text, non-JSON rows fall back to the literal string
+        # (mode-3 literal semantics, MetadataCreatorTest.java:104-116).
+        literal = {"key": R.KEY_LITERAL, "value": R.VALUE_LITERAL}[ns]
+        return F.coalesce(F.to_json(whole), F.col(literal)), StringType()
+    field = next((f for f in fields if f.name == entry.path), None)
+    if field is None:
+        raise MappingError(f"mapping references {entry.source_name}, a field the {ns} lacks")
+    return F.col(parsed).getField(entry.path), field.dataType
 
-    if entry.path == R.RAW_FIELD:
-        # value.__self: the raw pseudo-field (StructDataTest.java:43-46).
-        return F.col(ns)
 
-    if parsed in cols:
-        return F.col(parsed).getField(entry.path)
-    raise MappingError(
-        f"mapping references {entry.source_name} but record {ns} was decoded in "
-        f"raw mode; only bare '{ns}' or '{ns}.{R.RAW_FIELD}' is addressable"
-    )
+def _conversions(
+    record_schema: StructType, table: TableConfig, schema: TableSchema | None
+) -> list[tuple[Column, Column | None]]:
+    """Per mapping entry: its output column, converted to its target type by
+    ``codecs.convert`` under the table's codec settings, and the flag of a
+    failed conversion — source not null, result null — or None when the
+    source already has the target type (nothing can fail)."""
+    types = {f.name: f.dataType for f in record_schema.fields}
+    out = []
+    for entry in table.mapping:
+        name = _SPECIAL.get(entry.column, entry.column)
+        if entry.column in _SPECIAL:
+            target = "double"
+        else:
+            col_spec = schema.by_name.get(entry.column) if schema is not None else None
+            target = None if col_spec is None else col_spec.spark_type
+        source, source_type = _source(types, entry, target)
+        if target is None or codecs.same_type(source_type, target):
+            out.append((source.alias(name), None))
+            continue
+        value = codecs.convert(source, source_type, target, table.codec)
+        out.append((value.alias(name), source.isNotNull() & value.isNull()))
+    return out
 
 
 def compile_mapping(
@@ -82,73 +119,29 @@ def mapping_columns(
     """A table's mapping as the select list over a decoded record frame of
     ``record_schema``.
 
-    Output columns: one per mapped target column, cast to the table column's
-    Spark type when ``schema`` is given (the codec layer's cast fast path —
-    SURVEY §2.4 C1/C2). Special targets ``__ttl`` / ``__timestamp`` come out
-    as ``_mapped_ttl`` / ``_mapped_timestamp`` raw (unit conversion happens in
-    operators.writes). Record metadata columns ride along as ``_kafka_*``
-    for the write stage (routing, record-timestamp writetime).
+    Output columns: one per mapped target column. When ``schema`` is given,
+    each value whose type differs from its table column's converts through
+    ``codecs.convert`` with the table's ``codec.*`` settings (SURVEY §2.4
+    C1–C5, C15); a value the conversion cannot read comes out null, and
+    :func:`conversion_errors` flags that record as a mapping error. Special
+    targets ``__ttl`` / ``__timestamp`` come out as ``_mapped_ttl`` /
+    ``_mapped_timestamp`` doubles, converted the same way (the unit
+    conversion happens in operators.writes). Record metadata columns ride
+    along as ``_kafka_*`` for the write stage (routing, record-timestamp
+    writetime).
     """
-    select: list[Column] = []
+    select = [value for value, _ in _conversions(record_schema, table, schema)]
     cols = set(record_schema.fieldNames())
-    for entry in table.mapping:
-        expr = _namespace_expr(cols, entry)
-        # Whole-key/value onto a NON-struct column in JSON-decode mode: valid
-        # JSON rows render as JSON text, non-JSON rows fall back to the
-        # literal string (mode-3 literal semantics).
-        if not entry.is_function and entry.path is None and schema is not None:
-            parsed = {"key": R.KEY_PARSED, "value": R.VALUE_PARSED}.get(entry.namespace)
-            literal = {"key": R.KEY_LITERAL, "value": R.VALUE_LITERAL}.get(entry.namespace)
-            col_spec = schema.by_name.get(entry.column)
-            if (
-                parsed in cols
-                and col_spec is not None
-                and not _is_struct_target(col_spec.spark_type)
-            ):
-                expr = F.coalesce(F.to_json(expr), F.col(literal))
-        if entry.column == TTL_TARGET:
-            select.append(expr.cast("double").alias("_mapped_ttl"))
-            continue
-        if entry.column == TIMESTAMP_TARGET:
-            select.append(expr.cast("double").alias("_mapped_timestamp"))
-            continue
-        if schema is not None:
-            col_spec = schema.by_name.get(entry.column)
-            if col_spec is not None:
-                target = col_spec.spark_type.strip().lower()
-                if target in _GEO_TARGETS:
-                    # C15 DSE geo/daterange: validated WKT / range-text
-                    # passthrough (StructEndToEndCCMIT.java:206-209, 262-280).
-                    from kafka_sink_spark.functions import codecs as _codecs
-
-                    if target == "daterange":
-                        expr = _codecs.daterange_passthrough(expr.cast("string"))
-                    else:
-                        expr = _codecs.wkt_passthrough(
-                            expr.cast("string"), _GEO_TARGETS[target]
-                        )
-                else:
-                    # UDT/tuple targets too: Spark casts struct-to-struct by
-                    # field name, with per-field coercion (C11, C14).
-                    expr = expr.cast(col_spec.spark_type)
-        select.append(expr.alias(entry.column))
-
     for meta in ("topic", "partition", "offset", "timestamp"):
         if meta in cols:
             select.append(F.col(meta).alias(f"_kafka_{meta}"))
     return select
 
 
-# C15 pseudo-types: declared in ColumnSpec.spark_type, stored as validated
-# strings (see functions.codecs.wkt_passthrough / daterange_passthrough).
-_GEO_TARGETS = {
-    "geo_point": "point",
-    "geo_linestring": "linestring",
-    "geo_polygon": "polygon",
-    "daterange": "daterange",
-}
-
-
-def _is_struct_target(spark_type: str) -> bool:
-    return spark_type.strip().lower().startswith("struct")
-
+def conversion_errors(
+    record_schema: StructType, table: TableConfig, schema: TableSchema | None
+) -> list[Column]:
+    """The failed-conversion flag of each entry of :func:`mapping_columns`
+    whose conversion can fail, over the same decoded record frame."""
+    flags = [failed for _, failed in _conversions(record_schema, table, schema)]
+    return [failed for failed in flags if failed is not None]

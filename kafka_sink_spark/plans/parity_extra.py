@@ -427,8 +427,8 @@ def sink_geo_wkt(spark, sf_dir):
     Point/LineString WKT and DateRange text land as VALIDATED passthrough
     strings — well-formed text flows through, malformed text (every 7th
     point unclosed, every 11th linestring empty, every 5th daterange
-    garbage) nulls out. The validation is pure rlike inside the one mapping
-    projection."""
+    garbage) nulls out; the streaming sink counts such a record as a mapping
+    error. The validation is pure rlike inside the one mapping projection."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
     uid = F.col("user_id").cast("string")
     pt = F.when(

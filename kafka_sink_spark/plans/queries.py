@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from kafka_sink_spark.config import ColumnSpec, TableConfig, TableSchema
+from kafka_sink_spark.config import CodecConfig, ColumnSpec, TableConfig, TableSchema
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.operators.writes import (
     ROUTE_COL,
@@ -681,13 +681,23 @@ def sink_codec_temporals(spark, sf_dir):
 )
 def sink_codec_locale(spark, sf_dir):
     """C3 locale-aware number parsing (reference:
-    JsonEndToEndCCMIT.java:303-336, codec.locale=fr_FR): comma-decimal strings
-    parse to doubles."""
-    from kafka_sink_spark.functions import codecs
-
+    JsonEndToEndCCMIT.java:303-336, codec.locale=fr_FR): comma-decimal JSON
+    strings map onto a ``double`` column through the sink path, which
+    converts them under the topic's codec settings."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
     fr_string = F.regexp_replace(F.round(F.col("value"), 2).cast("string"), r"\.", ",")
-    return events.select(
-        F.col("event_id").cast("bigint").alias("pk"),
-        codecs.parse_number_locale(fr_string, "fr_FR").alias("parsed"),
+    records = _records(
+        events, key=F.col("event_id").cast("string"),
+        value=F.to_json(F.struct(fr_string.alias("v"))),
     )
+    schema = TableSchema(
+        "ks", "fr_values",
+        [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("parsed", "double")],
+    )
+    table = TableConfig(
+        "events", "ks", "fr_values", parse_mapping("pk=key, parsed=value.v"),
+        codec=CodecConfig(locale="fr_FR"),
+    )
+    vschema = StructType([StructField("v", StringType())])
+    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    return routed.select("pk", "parsed")

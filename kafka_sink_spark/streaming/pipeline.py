@@ -58,7 +58,6 @@ of record data.
 from __future__ import annotations
 
 import functools
-import logging
 import operator
 from dataclasses import dataclass
 from typing import Callable
@@ -68,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kafka_sink_spark.config import ConfigError, SinkConfig, TableConfig, TableSchema
-from kafka_sink_spark.mapping.compiler import mapping_columns
+from kafka_sink_spark.mapping.compiler import conversion_errors, mapping_columns
 from kafka_sink_spark.operators.records import (
     KEY_LITERAL,
     RAW_FIELD,
@@ -80,19 +79,22 @@ from kafka_sink_spark.operators.records import (
 from kafka_sink_spark.operators.writes import ttl_route_columns
 from kafka_sink_spark.streaming.registry import SinkMetrics, metric_key
 
-logger = logging.getLogger(__name__)
-
 # Flag column marking Avro records whose non-null payload failed to decode
 # (PERMISSIVE mode) — routed to the dead-letter channel, never written.
 AVRO_CORRUPT = "_avro_corrupt"
 
 
-def mapping_error_column(decoded_schema: StructType, table: TableConfig) -> Column | None:
+def mapping_error_column(
+    decoded_schema: StructType, table: TableConfig, schema: TableSchema | None = None
+) -> Column | None:
     """The one definition of a mapping error, over a decoded record frame of
-    ``decoded_schema``: a record whose key or value failed the typed decode
-    (the reference's per-record mapping error,
-    CassandraSinkTask.java:128-141: rewound under None/Driver, skipped and
-    counted under All). ``None`` when ``table`` cannot hit one.
+    ``decoded_schema``: a record whose key or value failed the typed decode,
+    or, given the table's ``schema``, one with a mapped value that failed its
+    conversion to the column type (``mapping_columns`` →
+    ``codecs.convert``: source not null, result null) — the reference's
+    per-record mapping error (CassandraSinkTask.java:128-141: rewound under
+    None/Driver, skipped and counted under All). ``None`` when ``table``
+    cannot hit one.
 
     A record errors on a side (key/value) only when the mapping addresses
     typed ``<side>.<field>`` paths AND has no whole-``<side>`` entry AND that
@@ -126,17 +128,17 @@ def mapping_error_column(decoded_schema: StructType, table: TableConfig) -> Colu
             errors_on("key", KEY_LITERAL),
         )
         if c is not None
-    ]
+    ] + conversion_errors(decoded_schema, table, schema)
     return functools.reduce(operator.or_, conds) if conds else None
 
 
 def split_mapping_errors(
-    decoded: DataFrame, table: TableConfig
+    decoded: DataFrame, table: TableConfig, schema: TableSchema | None = None
 ) -> tuple[DataFrame, DataFrame | None]:
     """Separate the records :func:`mapping_error_column` flags from the
     healthy stream: ``(good, bad)``, with ``bad`` None when ``table`` cannot
     hit a mapping error."""
-    bad_cond = mapping_error_column(decoded.schema, table)
+    bad_cond = mapping_error_column(decoded.schema, table, schema)
     if bad_cond is None:
         return decoded, None
     good = decoded.filter(~bad_cond).drop(AVRO_CORRUPT)
@@ -227,13 +229,6 @@ class SinkPlan:
         self.key_schemas = key_schemas or {}
         for table in config.tables:
             table.validate_against(schemas[(table.keyspace, table.table)])
-            if changed := table.codec.changed_keys():
-                logger.warning(
-                    "%s|%s.%s: codec setting(s) %s are not applied; the mapping "
-                    "converts with the default codec settings",
-                    table.topic, table.keyspace, table.table,
-                    ", ".join(f"codec.{k}" for k in changed),
-                )
         self._compile(spark, record_schema)
 
     def _compile(self, spark: SparkSession, record_schema: StructType) -> None:
@@ -260,7 +255,7 @@ class SinkPlan:
     def _table_plan(self, table: TableConfig, decoded: DataFrame) -> _TablePlan:
         """One table's stages over its topic's (empty, analyzed) decoded frame."""
         schema = self.schemas[(table.keyspace, table.table)]
-        errors = mapping_error_column(decoded.schema, table)
+        errors = mapping_error_column(decoded.schema, table, schema)
         mapping = mapping_columns(decoded.schema, table, schema)
         name = f"{table.keyspace}.{table.table}"
         return _TablePlan(
@@ -337,7 +332,9 @@ class SinkPlan:
                     if prior is None
                     else prior.unionByName(routed, allowMissingColumns=True)
                 )
-                if writer is not None:
+                # A table with no good rows is not written: the writer would
+                # pay a key shuffle and a job over an empty frame.
+                if writer is not None and n_good:
                     try:
                         stats = writer(routed, plan.table, plan.schema)
                     except Exception:
@@ -388,7 +385,8 @@ def process_micro_batch(
     2. persist each topic's decoded frame;
     3. one count job per topic: a single aggregate computes the topic's row
        count and every table's mapping-error count
-       (:func:`mapping_error_column`) and fills the cache; the first one
+       (:func:`mapping_error_column`: decode failures and failed value
+       conversions) and fills the cache; the first one
        also counts the unknown-topic records, which are never written
        (SimpleEndToEndSimulacronIT.java:740-755). Under
        ignoreErrors=None/Driver any mapping error raises here, before any
@@ -396,7 +394,8 @@ def process_micro_batch(
        half-written — the reference's failure-offset behavior (SURVEY §2.8);
     4. dead letters: under ignoreErrors=All each table's mapping errors are
        counted and diverted to ``error_sink``, read from the cache;
-    5. writes: each table's good rows, read from the cache;
+    5. writes: each table's good rows, read from the cache; a table with
+       no good rows is not handed to the writer;
     6. release: every persisted frame is unpersisted when the batch ends,
        on success or raise, and the batch's own SinkMetrics is folded into
        ``metrics`` (what a raised batch counted still counts).

@@ -13,7 +13,7 @@ from pyspark.sql.utils import AnalysisException
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_sink_spark.config import ConfigError, parse_sink_config
+from kafka_sink_spark.config import LOCALE_SEPS, ConfigError, parse_sink_config
 from kafka_sink_spark.functions import codecs
 
 
@@ -41,6 +41,38 @@ def test_epoch_units(spark):
     ms = _one(spark, codecs.epoch_to_timestamp(F.lit(1520611952000), "MILLISECONDS"))
     us = _one(spark, codecs.epoch_to_timestamp(F.lit(1520611952000000), "MICROSECONDS"))
     assert s == ms == us == expect
+    day = datetime.datetime(1970, 1, 2)
+    for n, unit in ((1440, "MINUTES"), (24, "HOURS"), (1, "DAYS")):
+        assert _one(spark, codecs.epoch_to_timestamp(F.lit(n), unit)) == day
+
+
+def test_epoch_nanoseconds_divide_exactly(spark):
+    """C5 NANOSECONDS: 1700000000000000999 ns is 1700000000000000 µs; a
+    division through a double rounds it up to ...001."""
+    ts = codecs.epoch_to_timestamp(F.lit(1700000000000000999), "NANOSECONDS")
+    assert _one(spark, F.unix_micros(ts)) == 1700000000000000
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [("unit", "FORTNIGHTS"), ("locale", "xx_YY"), ("timeZone", "Mars/Olympus_Mons")],
+)
+def test_codec_settings_are_validated(key, value):
+    """Each ``codec.*`` value the codecs cannot apply is refused when the
+    config is parsed, not read as a default per row."""
+    with pytest.raises(ConfigError, match=f"codec.{key}"):
+        parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", f"topic.t.codec.{key}": value})
+
+
+def test_codec_settings_accept_every_documented_value():
+    """All seven units, every supported locale, zone ids and offsets parse."""
+    for unit in ("NANOSECONDS", "MICROSECONDS", "MILLISECONDS", "SECONDS", "MINUTES",
+                 "HOURS", "DAYS"):
+        parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", "topic.t.codec.unit": unit})
+    for locale in LOCALE_SEPS:
+        parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", "topic.t.codec.locale": locale})
+    for zone in ("UTC", "Europe/Paris", "Z", "+02:00", "GMT-5"):
+        parse_sink_config({"topic.t.ks.tbl.mapping": "pk=key", "topic.t.codec.timeZone": zone})
 
 
 def test_hhmmss_packed_time(spark):

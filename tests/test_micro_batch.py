@@ -204,19 +204,21 @@ def test_bookkeeping_job_count(spark):
 def test_empty_and_all_unknown_batches_return(spark, n):
     """A batch with no records, and one whose records are all on an
     unconfigured topic, complete: the unknown-topic count (0 and N) is
-    read once the topic's aggregate has run, and each table is handed an
-    empty frame."""
+    read once the topic's aggregate has run, each table's record count is
+    0, and no table is handed to the writer (its frame is still
+    returned)."""
     cfg, schemas = _config("None")
     rows = [("audit", 0, i, None, "0", '{"k": 0}') for i in range(n)]
     metrics = SinkMetrics()
     calls = []
-    process_micro_batch(
+    out = process_micro_batch(
         spark.createDataFrame(rows, RECORD_DDL), cfg, schemas, value_schemas=VALUE_SCHEMAS,
         writer=_noop_writer(calls), metrics=metrics,
     )
     assert metrics.failed_with_unknown_topic == n
     assert metrics.record_count == {RAW_KEY: 0, TYPED_KEY: 0}
-    assert calls == ["raw_clicks", "clicks_k"]
+    assert calls == []
+    assert sorted(out) == ["ks.clicks_k", "ks.raw_clicks"]
 
 
 def test_config_without_tables_is_rejected(spark):

@@ -471,42 +471,6 @@ def test_config_parse_roundtrip():
     assert t.codec.locale == "fr_FR"
 
 
-def test_sink_plan_warns_once_per_table_with_unapplied_codec_settings(spark, caplog):
-    """``topic.<t>.codec.*`` is parsed but the mapping does not apply it:
-    compiling the sink plan warns once per table whose codec settings
-    differ from the defaults, naming the keys; default tables stay quiet."""
-    import logging
-
-    from kafka_sink_spark.streaming.pipeline import SinkPlan
-
-    cfg = parse_sink_config(
-        {
-            "topic.fr.ks.t1.mapping": "pk=key",
-            "topic.fr.ks.t2.mapping": "pk=key",
-            "topic.plain.ks.t3.mapping": "pk=key",
-            "topic.fr.codec.locale": "fr_FR",
-            "topic.fr.codec.timeZone": "Europe/Paris",
-            "topic.plain.codec.unit": "MILLISECONDS",  # the default
-        }
-    )
-    schemas = {
-        ("ks", t): TableSchema("ks", t, [ColumnSpec("pk", "string", primary_key=True)])
-        for t in ("t1", "t2", "t3")
-    }
-    record_schema = spark.createDataFrame(
-        [], "topic string, partition int, offset long, timestamp timestamp, "
-        "key string, value string"
-    ).schema
-    with caplog.at_level(logging.WARNING, logger="kafka_sink_spark.streaming.pipeline"):
-        SinkPlan(spark, record_schema, cfg, schemas)
-    messages = sorted(r.getMessage() for r in caplog.records if "codec" in r.getMessage())
-    assert len(messages) == 2
-    for table, msg in zip(("fr|ks.t1", "fr|ks.t2"), messages):
-        assert msg.startswith(table)
-        assert "codec.locale" in msg and "codec.timeZone" in msg
-        assert "codec.unit" not in msg
-
-
 def test_config_dotted_topic_name():
     """KAF-104: topic names with dots route correctly."""
     cfg = parse_sink_config(

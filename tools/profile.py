@@ -12,10 +12,11 @@ Each line carries:
 - ``stages``: the Spark stages of the rep with the fastest execution, eager
   substrate builds included, from the status store — ``executorRunTime``,
   shuffle read/write bytes and memory/disk spill;
-- ``plan``: a digest of the formatted physical plan — operator counts
-  (exchanges, joins, windows, Python evals, in-memory scans) and its size in
-  lines. Comparing two scales (or two commits) is running this at both
-  sf_dirs and diffing the ``plan`` digests;
+- ``plan``: a digest of the physical plan that runs above any persisted
+  frame — operator counts (exchanges, joins, windows, Python evals,
+  in-memory scans) and its size in lines, one per operator. Comparing two
+  scales (or two commits) is running this at both sf_dirs and diffing the
+  ``plan`` digests;
 - ``substrates``: per memoized builder, the builds, build seconds and hits
   while this query ran (the ``kafka_sink_spark.substrates.report()`` diff);
 - ``n_rows`` and, when <= 200, ``rows`` — a re-execution, skipped under
@@ -29,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -57,12 +57,32 @@ PLAN_NODES = (
 
 
 def plan_digest(df) -> dict[str, int]:
-    """Operator counts over the formatted physical plan, plus its length."""
-    text = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    digest = {n: len(re.findall(rf"\b{n}\b", text)) for n in PLAN_NODES}
-    digest["lines"] = text.count("\n") + 1
+    """Operator counts over the physical plan that runs, plus its size in
+    ``lines``, one per operator: the executed plan walked from its root,
+    through adaptive and query-stage wrappers and into subqueries, stopping
+    at each in-memory scan — a persisted frame's plan runs when the cache
+    fills, and the explain text would repeat it inside every scan of it. A
+    reused exchange counts as one more line, not as the exchange again."""
+    digest = dict.fromkeys(PLAN_NODES, 0)
+    digest["lines"] = 0
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        digest["lines"] += 1
+        name = node.nodeName()
+        if name in digest:
+            digest[name] += 1
+        if kind == "InMemoryTableScanExec":
+            continue
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
     return digest
 
 
