@@ -2,9 +2,7 @@
 column expressions (SURVEY.md §2.4, C1–C17).
 
 Everything here is a pure Column→Column function built from
-``pyspark.sql.functions`` builtins so conversions stay JVM-side inside
-WholeStageCodegen; only ``format_number_locale`` drops to an Arrow-batched
-pandas UDF.
+``pyspark.sql.functions`` builtins, so conversions stay JVM-side.
 
 :func:`convert` is the one place that decides how a mapped value becomes its
 target column's type, under its topic's ``codec.*`` settings
@@ -19,15 +17,17 @@ import functools
 import re
 from decimal import Decimal as PyDecimal
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DataType,
     DateType,
-    DoubleType,
+    MapType,
     NumericType,
     StringType,
+    StructField,
+    StructType,
     TimestampType,
 )
 
@@ -67,9 +67,10 @@ def convert(source: Column, source_type: DataType, target_type: str, codec) -> C
     - string → timestamp / date: ``codec.timestamp`` / ``codec.date``
       pattern, zone-less text read in ``codec.timeZone`` (C4);
     - string → number: ``codec.locale`` separators (C3);
+    - string → array / map / struct: the text read as JSON (C8/C10/C11);
     - geo / daterange: validated passthrough (C15);
-    - anything else: ``try_cast`` (C1/C2; struct targets cast by field name
-      with per-field coercion, C11/C14).
+    - anything else: ``try_cast`` (C1/C2; a struct onto a struct column is
+      Spark's struct cast — field by field in order, each coerced, C11/C14).
 
     A value the conversion cannot read comes out null.
     """
@@ -88,20 +89,18 @@ def convert(source: Column, source_type: DataType, target_type: str, codec) -> C
             return string_to_date(source, codec.date_pattern)
         if isinstance(target, NumericType):
             return parse_number_locale(source, codec.locale, target_type)
+        if isinstance(target, (ArrayType, MapType, StructType)):
+            return _parse_json(source, target)
     return source.try_cast(target_type)
 
 
 # --- C1/C2: numeric width / boolean / string casts -------------------------
 # ``try_cast`` to the table column's type, applied by :func:`convert`
-# (reference: StructEndToEndCCMIT.java:86-224, JsonEndToEndCCMIT.java:109-158).
+# (reference: StructEndToEndCCMIT.java:86-224, JsonEndToEndCCMIT.java:109-158);
+# a number onto a boolean reads nonzero as true (StructEndToEndCCMIT.java:234-238).
 
 
-def number_to_boolean(col: Column) -> Column:
-    """Nonzero → true (reference codec semantics, StructEndToEndCCMIT.java:234-238)."""
-    return F.when(col.isNull(), F.lit(None).cast("boolean")).otherwise(col.cast("double") != 0.0)
-
-
-# --- C3: locale-aware string<->number (codec.locale) -----------------------
+# --- C3: locale-aware string → number (codec.locale) -----------------------
 
 # What a space-grouping locale accepts as its grouping separator.
 _SPACES = " \t\n\x0b\f\r\u00a0\u202f"
@@ -125,22 +124,6 @@ def parse_number_locale(col: Column, locale: str = "en_US", target: str = "doubl
         # needs no translate: only grouped numbers pay for one (3x cheaper).
         return F.coalesce(col.try_cast(target), text.try_cast(target))
     return text.try_cast(target)
-
-
-def format_number_locale(col: Column, locale: str = "en_US") -> Column:
-    """Number → string per locale (reverse direction)."""
-    group, dec = LOCALE_SEPS[locale]
-
-    def _fmt(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None or pd.isna(v):
-                return None
-            txt = f"{v:,}"
-            return txt.replace(",", "\0").replace(".", dec).replace("\0", group)
-
-        return s.map(one)
-
-    return F.pandas_udf(_fmt, StringType())(col.cast(DoubleType()))
 
 
 # --- C4/C5/C6: temporal conversions ---------------------------------------
@@ -243,12 +226,25 @@ def time_nanos_to_string(nanos: Column) -> Column:
 
 # --- C7: bytes → blob: BinaryType passthrough (StructDataTest.java:49-57) --
 
-# --- C8: JSON array string → typed array ----------------------------------
+# --- C8/C10/C11: JSON text → list / map / UDT -----------------------------
+
+_CORRUPT = "_corrupt_record"
 
 
-def json_array_to_list(col: Column, element_type: str = "int") -> Column:
-    """Raw value '"[42, 37]"' → list<int> (RawDataEndToEndCCMIT.java:150-162)."""
-    return F.from_json(col.cast("string"), f"array<{element_type}>")
+def _parse_json(col: Column, target: DataType) -> Column:
+    """JSON text → ``target`` (an array, map or struct type): raw value
+    ``"[42, 37]"`` → list<int> (RawDataEndToEndCCMIT.java:150-162). Text
+    that is not JSON of that shape comes out null; a struct is read with a
+    corrupt-record field for that, since a PERMISSIVE parse alone yields a
+    row of null fields."""
+    if not isinstance(target, StructType):
+        return F.from_json(col, target)
+    parsed = F.from_json(
+        col,
+        StructType(target.fields + [StructField(_CORRUPT, StringType())]),
+        {"columnNameOfCorruptRecord": _CORRUPT},
+    )
+    return F.when(parsed.getField(_CORRUPT).isNull(), parsed.dropFields(_CORRUPT))
 
 
 # --- C9: array → set (dedup), nested variants -----------------------------
@@ -265,23 +261,7 @@ def nested_array_to_set(col: Column) -> Column:
     return F.transform(col, lambda inner: F.array_sort(F.array_distinct(inner)))
 
 
-# --- C10/C11/C12/C14: map & UDT construction ------------------------------
-
-
-def map_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> Column:
-    """map<text, V> → struct(named fields) with per-field coercion (C11/C14).
-
-    Missing map keys become null fields; extra keys are an error in the
-    reference's strict StructToUDTCodec
-    (reference: sink/src/main/java/com/datastax/oss/kafka/sink/codecs/StructToUDTCodec.java:47-87)
-    — strictness enforced at validation time by the mapping compiler, not per
-    row, to stay vectorized.
-    """
-    fields = [
-        col.getItem(name).cast(t).alias(name)
-        for name, t in zip(field_names, field_types)
-    ]
-    return F.struct(*fields)
+# --- C12: ordered collection → UDT / tuple --------------------------------
 
 
 def list_to_udt(col: Column, field_names: list[str], field_types: list[str]) -> Column:

@@ -1,7 +1,8 @@
 """Executor-side Cassandra write path: the physical layer of W1-W11.
 
-``write_routed`` takes a routed DataFrame (the mapped, ttl/writetime and
-route columns of ``run_sink_pipeline``) and executes it against Cassandra.
+``write_routed`` takes a routed DataFrame (a table's mapped, ttl/writetime
+and route columns, as ``SinkPlan.run`` hands them to its writer) and
+executes it against Cassandra.
 It makes no statement decision of its own: each row's statement kind is
 the ``statement_kind`` column and its parameters are that kind's bind list,
 both from ``operators.writes.statements`` — the shapes ``cql_statement``

@@ -323,27 +323,6 @@ def apply_null_to_unset(routed: DataFrame, table: TableConfig, schema: TableSche
     return routed.groupBy(*[F.col(c) for c in pk]).agg(*aggs)
 
 
-def run_sink_pipeline(
-    records: DataFrame,
-    table: TableConfig,
-    schema: TableSchema,
-    value_schema=None,
-    key_schema=None,
-) -> DataFrame:
-    """records → decoded → mapped → ttl/writetime → routed. The full hot path
-    (reference trace: CassandraSinkTask.put, SURVEY §3.3) as one declarative
-    plan, from the same builders the streaming sink compiles once per
-    stream. Validates the mapping against ``schema`` first, as the
-    streaming sink does at start."""
-    from kafka_sink_spark.mapping.compiler import compile_mapping
-    from kafka_sink_spark.operators.records import decode_records
-
-    table.validate_against(schema)
-    decoded = decode_records(records, value_schema=value_schema, key_schema=key_schema)
-    mapped = compile_mapping(decoded, table, schema)
-    return mapped.select(*ttl_route_columns(mapped.schema, table, schema))
-
-
 def replay_list_append(
     routed: DataFrame, schema: TableSchema, val_col: str
 ) -> DataFrame:

@@ -14,17 +14,19 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from kafka_sink_spark.config import ColumnSpec, TableConfig, TableSchema, parse_sink_config
+from kafka_sink_spark.config import (
+    ColumnSpec,
+    SinkConfig,
+    TableConfig,
+    TableSchema,
+    parse_sink_config,
+)
 from kafka_sink_spark.functions import codecs
 from kafka_sink_spark.mapping.parser import parse_mapping
-from kafka_sink_spark.operators.writes import (
-    ROUTE_COL,
-    WRITETIME_COL,
-    cql_statement,
-    run_sink_pipeline,
-)
-from kafka_sink_spark.plans.queries import V_SCHEMA_K, _k, _records, register
+from kafka_sink_spark.operators.writes import WRITETIME_COL, cql_statement
+from kafka_sink_spark.plans.queries import V_SCHEMA_K, _k, _records, _sink, register
 from kafka_sink_spark.session import load_tables, spread_small_scan
+from kafka_sink_spark.streaming.pipeline import SinkMetrics, process_micro_batch
 
 # --------------------------------------------------------------------------
 # W5 — provided-query mode
@@ -86,7 +88,7 @@ def sink_provided_query(spark, sf_dir):
             StructField("ttlv", LongType()),
         ]
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select(
         "some_pk", "some_seq", "some_v", "ttl_var",
         F.col(WRITETIME_COL).alias("writetime"),
@@ -140,7 +142,7 @@ def sink_quoted_identifiers(spark, sf_dir):
             'pk=key, "Quoted Col"=value."Field.Dotted", spaced=value."With Space"'
         ),
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select("pk", "`Quoted Col`", "spaced")
 
 
@@ -171,31 +173,32 @@ def sink_collection_codecs(spark, sf_dir):
     """C8 JSON-array-string → list (RawDataEndToEndCCMIT.java:150-162),
     C9 array → set dedup+sort (StructEndToEndCCMIT.java:228-233) incl. nested
     list<set<int>>, C10 map construction (StructEndToEndCCMIT.java:225-226).
-    Collections are rendered canonically (sorted / JSON) so the value-hash is
-    representation-stable across engines."""
+    The raw record value IS a JSON array string; the sink maps it onto a
+    ``list<int>`` column. Collections are rendered canonically (sorted /
+    JSON) so the value-hash is representation-stable across engines."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
-    # from_json is CodegenFallback, so this projection runs interpreted with
-    # NO subexpression elimination: evaluate the JSON extraction and the C8
-    # decode ONCE each via stacked projections (CollapseProject keeps
-    # non-cheap exprs referenced more than once in their own Project), and
-    # spread the single-row-group scan so the per-row decode parallelizes.
-    base = spread_small_scan(events, spark).select(
-        "event_id", _k().cast("long").alias("kv")
-    )
-    kv = F.col("kv")
-    # C8: the raw record value IS a JSON array string.
+    # from_json is CodegenFallback: spread the single-row-group scan so the
+    # per-row decode parallelizes.
+    kv = _k().cast("long")
     raw = F.concat(
         F.lit("["), kv.cast("string"), F.lit(", "), (kv % 5).cast("string"),
         F.lit(", "), kv.cast("string"), F.lit(", "), ((kv * 2) % 7).cast("string"),
         F.lit("]"),
     )
-    nested = F.array(F.array(kv.cast("int"), kv.cast("int")), F.array((kv + 1).cast("int")))
-    mid = base.select(
-        "event_id", "kv", codecs.json_array_to_list(raw, "int").alias("arr")
+    records = _records(
+        spread_small_scan(events, spark), key=F.col("event_id").cast("string"), value=raw
     )
+    schema = TableSchema(
+        "ks", "collections",
+        [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("arr", "array<int>")],
+    )
+    table = TableConfig("events", "ks", "collections", parse_mapping("pk=key, arr=value"))
+    routed = _sink(records, table, schema)
     arr = F.col("arr")
-    return mid.select(
-        F.col("event_id").cast("bigint").alias("pk"),
+    kv = F.element_at(arr, 1).cast("long")
+    nested = F.array(F.array(kv.cast("int"), kv.cast("int")), F.array((kv + 1).cast("int")))
+    return routed.select(
+        "pk",
         F.size(arr).alias("list_len"),
         F.element_at(arr, 1).alias("list_first"),
         F.array_join(
@@ -255,7 +258,7 @@ def sink_udt_codecs(spark, sf_dir):
     table = TableConfig(
         "events", "ks", "udt_table", parse_mapping("pk=key, udtcol=value")
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     # C12: ordered collection → tuple by position with per-slot casts (input
     # derived from the mapped column — the source record is already projected
     # away at this stage).
@@ -338,15 +341,12 @@ def sink_avro_struct_decode(spark, sf_dir):
     """Struct/Avro decode mode over REAL wire bytes (SURVEY §1.2, reference:
     MetadataCreatorTest.java:45-66): each record's value is Avro-binary
     encoded executor-side (zigzag varints, union null index, IEEE doubles),
-    then decoded back through ``decode_avro_records`` — from_avro when the
+    then decoded back by the sink's Avro mode — from_avro when the
     spark-avro jar exists, else the pure-Python Arrow-batched wire codec —
-    and mapped/routed by the standard pipeline. The oracle reads the same
-    fields straight from the parquet."""
+    and mapped/routed by the same micro-batch body. The oracle reads the
+    same fields straight from the parquet."""
     from pyspark.sql.types import BinaryType
 
-    from kafka_sink_spark.mapping.compiler import compile_mapping
-    from kafka_sink_spark.operators.writes import add_ttl_writetime, route_writes
-    from kafka_sink_spark.sources.avro import decode_avro_records
     from kafka_sink_spark.sources.avro_python import encode
 
     events = load_tables(spark, sf_dir, ("events",))["events"]
@@ -396,9 +396,7 @@ def sink_avro_struct_decode(spark, sf_dir):
         parse_mapping("pk=key, kcol=value.k, etype=value.etype, score=value.score"),
         deletes_enabled=False,
     )
-    decoded = decode_avro_records(records, schema_json)
-    mapped = compile_mapping(decoded, table, schema)
-    routed = route_writes(add_ttl_writetime(mapped, table), table, schema)
+    routed = _sink(records, table, schema, value_schema=schema_json)
     return routed.select("pk", "kcol", "etype", "score")
 
 
@@ -411,15 +409,12 @@ def sink_avro_struct_decode(spark, sf_dir):
     "sink_geo_wkt",
     oracle="""
     SELECT CAST(event_id AS BIGINT) AS pk,
-           CASE WHEN event_id % 7 = 0 THEN NULL
-                ELSE 'POINT (' || CAST(user_id AS VARCHAR) || ' '
-                     || CAST(event_id % 100 AS VARCHAR) || ')' END AS pt,
-           CASE WHEN event_id % 11 = 0 THEN NULL
-                ELSE 'LINESTRING (0 0, ' || CAST(user_id AS VARCHAR) || ' 2)'
-           END AS ls,
-           CASE WHEN event_id % 5 = 0 THEN NULL
-                ELSE '[1997-01 TO 1997-12]' END AS dr
+           'POINT (' || CAST(user_id AS VARCHAR) || ' '
+           || CAST(event_id % 100 AS VARCHAR) || ')' AS pt,
+           'LINESTRING (0 0, ' || CAST(user_id AS VARCHAR) || ' 2)' AS ls,
+           '[1997-01 TO 1997-12]' AS dr
     FROM events
+    WHERE event_id % 7 <> 0 AND event_id % 11 <> 0 AND event_id % 5 <> 0
     """,
 )
 def sink_geo_wkt(spark, sf_dir):
@@ -427,8 +422,9 @@ def sink_geo_wkt(spark, sf_dir):
     Point/LineString WKT and DateRange text land as VALIDATED passthrough
     strings — well-formed text flows through, malformed text (every 7th
     point unclosed, every 11th linestring empty, every 5th daterange
-    garbage) nulls out; the streaming sink counts such a record as a mapping
-    error. The validation is pure rlike inside the one mapping projection."""
+    garbage) fails its conversion, so the sink dead-letters that record as a
+    mapping error. The validation is pure rlike inside the one mapping
+    projection."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
     uid = F.col("user_id").cast("string")
     pt = F.when(
@@ -469,7 +465,7 @@ def sink_geo_wkt(spark, sf_dir):
             StructField("dr", StringType()),
         ]
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select("pk", "pt", "ls", "dr")
 
 
@@ -509,7 +505,7 @@ def sink_schema_defaults(spark, sf_dir):
         "events", "ks", "defaults_table",
         parse_mapping("pk=key, with_default=value.k, without_default=value.k"),
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select(
         "pk",
         codecs.with_default(F.col("with_default"), 42).alias("with_default"),
@@ -545,9 +541,10 @@ def sink_error_policy(spark, sf_dir):
     """ignoreErrors=None/Driver/All (reference: CassandraSinkTask.java:128-141,
     SimpleEndToEndSimulacronIT.java:475-564, KAF-200): None rewinds every
     failure; Driver ignores driver-side errors but rewinds mapping errors;
-    All ignores everything (log+count only). Mapping errors are simulated with
-    a non-numeric payload (every 7th record), driver errors with a
-    deterministic write-failure flag (every 13th)."""
+    All ignores everything (log+count only). Mapping errors are real: a
+    non-numeric payload (every 7th record) that the sink dead-letters and
+    counts as failed under All. Driver errors are modelled per written row
+    with a deterministic write-failure flag (every 13th)."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
     value = F.when(F.col("event_id") % 7 == 0, F.lit('{"k": "oops"}')).otherwise(
         F.col("props")
@@ -558,18 +555,20 @@ def sink_error_policy(spark, sf_dir):
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
     table = TableConfig("events", "ks", "err_table", parse_mapping("pk=key, kcol=value.k"))
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
-    # Mapping error: the payload was present but the typed decode yielded null.
-    flags = routed.select(
-        F.when(F.col("kcol").isNull(), 1).otherwise(0).alias("map_err"),
-        F.when(
-            (F.col("kcol").isNotNull()) & (F.col("_kafka_offset") % 13 == 0), 1
-        ).otherwise(0).alias("drv_err"),
-    )
-    agg = flags.agg(
-        F.sum("map_err").alias("m"),
-        F.sum("drv_err").alias("d"),
-        (F.count(F.lit(1)) - F.sum("map_err") - F.sum("drv_err")).alias("ok"),
+    metrics = SinkMetrics()
+    routed = process_micro_batch(
+        records,
+        SinkConfig([table], ignore_errors="All"),
+        {("ks", "err_table"): schema},
+        {"events": V_SCHEMA_K},
+        metrics=metrics,
+    )["ks.err_table"]
+    drv_err = F.col("_kafka_offset") % 13 == 0
+    agg = routed.agg(
+        F.lit(metrics.get_failed_record_counter("events", "ks.err_table"))
+        .cast("bigint").alias("m"),
+        F.count_if(drv_err).alias("d"),
+        (F.count(F.lit(1)) - F.count_if(drv_err)).alias("ok"),
     )
     z = F.lit(0).cast("bigint")
     rows = [
@@ -685,7 +684,7 @@ def sink_provided_list_append(spark, sf_dir):
         deletes_enabled=False,
     )
     vschema = StructType([StructField("v", IntegerType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     out = replay_list_append(routed, schema, "v")
     # The driver's pandas canonicalizer can't sort/hash list cells — render
     # the list as its JSON string (same text both engines).
@@ -744,7 +743,7 @@ def sink_provided_map_entries(spark, sf_dir):
     vschema = StructType(
         [StructField("mk", StringType()), StructField("mv", IntegerType())]
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     out = replay_map_entries(routed, schema, "mk", "mv")
     # JSON-render the parallel arrays so the driver's pandas hash can sort them.
     return out.select(
@@ -813,7 +812,7 @@ def sink_provided_udt_partial(spark, sf_dir):
     vschema = StructType(
         [StructField("f1", IntegerType()), StructField("f2", StringType())]
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return apply_null_to_unset(routed, table, schema)
 
 
@@ -853,11 +852,13 @@ _AVRO_UNION_SCHEMA = (
 def sink_avro_union_decode(spark, sf_dir):
     """Struct/Avro decode of a [null, record] union carrying nested logical
     types — decimal-on-bytes, date, timestamp-micros, time-millis — through
-    the same ``decode_avro_records`` dispatch as the flat query (reference:
-    AvroJsonConvertersTest.java:82-159; StructEndToEndCCMIT nested-struct
-    cases). Every 4th record takes the null union branch. time-millis is the
-    regression pin for the raw-int decode rule (a datetime.time here would be
-    Arrow-rescaled 1000x); timestamp encode uses exact integer arithmetic."""
+    ``decode_avro_records`` (reference: AvroJsonConvertersTest.java:82-159;
+    StructEndToEndCCMIT nested-struct cases). It certifies the decoder alone
+    and maps nothing; the sink's Avro mode uses the same from_avro /
+    Python-codec dispatch. Every 4th record takes the null union branch.
+    time-millis is the regression pin for the raw-int decode rule (a
+    datetime.time here would be Arrow-rescaled 1000x); timestamp encode uses
+    exact integer arithmetic."""
     import datetime as _dt
     from decimal import Decimal
 
@@ -925,11 +926,10 @@ def sink_avro_union_decode(spark, sf_dir):
              WHEN 0 THEN '[2020-01-01T10:15 TO *]'
              WHEN 1 THEN '[2020-01-01T10:15:30.123 TO 2020-01-02]'
              WHEN 2 THEN '2020-06-15T23:59:59'
-             WHEN 3 THEN NULL
              WHEN 4 THEN '*'
-             WHEN 5 THEN NULL
            END AS dr
     FROM events
+    WHERE event_id % 6 NOT IN (3, 5)
     """,
 )
 def sink_daterange_precision(spark, sf_dir):
@@ -937,8 +937,8 @@ def sink_daterange_precision(spark, sf_dir):
     DateRange cases accept hour/minute/second/millisecond bounds, e.g.
     '[2020-01-01T10:15 TO *]'): bounds at every precision level pass through;
     an unterminated range (case 3) and a 4-digit fractional second (case 5 —
-    past the millisecond limit) null out. Validation is one rlike in the
-    mapping projection."""
+    past the millisecond limit) fail validation, so the sink dead-letters
+    those records. Validation is one rlike in the mapping projection."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
     dr = (
         F.when(F.col("event_id") % 6 == 0, F.lit("[2020-01-01T10:15 TO *]"))
@@ -966,5 +966,5 @@ def sink_daterange_precision(spark, sf_dir):
         deletes_enabled=False,
     )
     vschema = StructType([StructField("dr", StringType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select("pk", "dr")

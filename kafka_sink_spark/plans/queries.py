@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from kafka_sink_spark.config import CodecConfig, ColumnSpec, TableConfig, TableSchema
+from kafka_sink_spark.config import CodecConfig, ColumnSpec, SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.operators.writes import (
     ROUTE_COL,
@@ -40,9 +40,9 @@ from kafka_sink_spark.operators.writes import (
     cql_statement,
     partition_key_batches,
     replay_final_state,
-    run_sink_pipeline,
 )
 from kafka_sink_spark.session import load_tables
+from kafka_sink_spark.streaming.pipeline import process_micro_batch
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -81,6 +81,22 @@ def _k():
 
 V_SCHEMA_K = StructType([StructField("k", IntegerType())])
 
+
+def _sink(records, table, schema, value_schema=None, key_schema=None) -> DataFrame:
+    """The routed frame the sink's writer would get for ``table``:
+    ``records`` through the stream's per-batch body (``process_micro_batch``
+    with no writer) under ignoreErrors=All, so a record that fails mapping
+    is dead-lettered, not written."""
+    out = process_micro_batch(
+        records,
+        SinkConfig([table], ignore_errors="All"),
+        {(table.keyspace, table.table): schema},
+        {table.topic: value_schema},
+        {table.topic: key_schema},
+    )
+    return out[f"{table.keyspace}.{table.table}"]
+
+
 # --------------------------------------------------------------------------
 # §2 parity: P1/P2/C1 — JSON value decode + projection + cast + T1 writetime
 # --------------------------------------------------------------------------
@@ -106,7 +122,7 @@ def sink_json_map(spark, sf_dir):
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
     table = TableConfig("events", "ks", "user_events", parse_mapping("pk=key, kcol=value.k"))
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select(
         "pk", "kcol",
         F.col(WRITETIME_COL).alias("writetime"),
@@ -145,7 +161,7 @@ def sink_literal_fallback(spark, sf_dir):
     table = TableConfig(
         "events", "ks", "raw_events", parse_mapping("pk=key, kcol=value.k, raw=value")
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select("pk", "kcol", "raw")
 
 
@@ -177,7 +193,7 @@ def sink_delete_routing(spark, sf_dir):
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
     table = TableConfig("events", "ks", "user_events", parse_mapping("pk=key, kcol=value.k"))
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select(
         "pk", "kcol",
         F.col(ROUTE_COL).alias("route"),
@@ -215,7 +231,7 @@ def sink_ttl_writetime(spark, sf_dir):
     vschema = StructType(
         [StructField("v", IntegerType()), StructField("ttl", LongType())]
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select(
         "pk", F.col(TTL_COL).alias("ttl_s"), F.col(WRITETIME_COL).alias("writetime")
     )
@@ -247,7 +263,7 @@ def sink_timestamp_mapping(spark, sf_dir):
         timestamp_time_unit="SECONDS",
     )
     vschema = StructType([StructField("v", IntegerType()), StructField("tsv", LongType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select("pk", F.col(WRITETIME_COL).alias("writetime"))
 
 
@@ -283,7 +299,7 @@ def sink_upsert_replay(spark, sf_dir):
     table = TableConfig(
         "events", "ks", "user_latest", parse_mapping("user_pk=key, kcol=value.k")
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return replay_final_state(routed, schema)
 
 
@@ -317,7 +333,7 @@ def sink_counter_accrual(spark, sf_dir):
         parse_mapping("user_pk=key, total=value.k, hits=value.one"),
     )
     vschema = StructType([StructField("k", LongType()), StructField("one", LongType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return replay_final_state(routed, schema)
 
 
@@ -362,7 +378,7 @@ def sink_null_to_unset(spark, sf_dir):
         "events", "ks", "user_ab", parse_mapping("user_pk=key, a=value.a, b=value.b")
     )
     vschema = StructType([StructField("a", IntegerType()), StructField("b", IntegerType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return apply_null_to_unset(routed, table, schema)
 
 
@@ -386,7 +402,7 @@ def sink_batching(spark, sf_dir):
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
     table = TableConfig("events", "ks", "user_events", parse_mapping("pk=key, kcol=value.k"))
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return partition_key_batches(routed, schema, max_batch=32)
 
 
@@ -436,27 +452,30 @@ def sink_topic_routing(spark, sf_dir):
 )
 def sink_multi_table_fanout(spark, sf_dir):
     """S4 single-topic multi-table fan-out (reference:
-    StructEndToEndCCMIT.java:570-608): the SAME record stream feeds two tables
-    with independent mappings."""
+    StructEndToEndCCMIT.java:570-608): ONE record stream feeds two tables
+    with independent mappings, in one micro-batch — the topic is decoded
+    once and each table maps its own fields of it."""
     events = load_tables(spark, sf_dir, ("events",))["events"]
-    records = _records(events, key=F.col("event_id").cast("string"), value=F.col("props"))
-    records = records.withColumn("key2", F.col("key"))
-
+    value = F.to_json(F.struct(_k().alias("k"), F.col("user_id").alias("uid")))
+    records = _records(events, key=F.col("event_id").cast("string"), value=value)
     s1 = TableSchema(
         "ks", "t_by_event",
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
     t1 = TableConfig("events", "ks", "t_by_event", parse_mapping("pk=key, kcol=value.k"))
-    out1 = run_sink_pipeline(records, t1, s1, value_schema=V_SCHEMA_K)
-
-    events2 = load_tables(spark, sf_dir, ("events",))["events"]
-    records2 = _records(events2, key=F.col("user_id").cast("string"), value=F.col("props"))
     s2 = TableSchema(
         "ks", "t_by_user",
         [ColumnSpec("upk", "bigint", primary_key=True), ColumnSpec("kcol", "int")],
     )
-    t2 = TableConfig("events", "ks", "t_by_user", parse_mapping("upk=key, kcol=value.k"))
-    out2 = run_sink_pipeline(records2, t2, s2, value_schema=V_SCHEMA_K)
+    t2 = TableConfig("events", "ks", "t_by_user", parse_mapping("upk=value.uid, kcol=value.k"))
+    vschema = StructType([StructField("k", IntegerType()), StructField("uid", LongType())])
+    out = process_micro_batch(
+        records,
+        SinkConfig([t1, t2], ignore_errors="All"),
+        {("ks", "t_by_event"): s1, ("ks", "t_by_user"): s2},
+        {"events": vschema},
+    )
+    out1, out2 = out["ks.t_by_event"], out["ks.t_by_user"]
 
     r1 = out1.agg(
         F.lit("ks.t_by_event").alias("table_name"),
@@ -506,7 +525,7 @@ def sink_headers(spark, sf_dir):
         "events", "ks", "header_table",
         parse_mapping("pk=key, etype=header.h_type, val=header.h_val"),
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select("pk", "etype", "val")
 
 
@@ -541,7 +560,7 @@ def sink_json_key(spark, sf_dir):
         "events", "ks", "keyed",
         parse_mapping("user_pk=key.uid, seq=key.seq, kcol=value.k"),
     )
-    routed = run_sink_pipeline(
+    routed = _sink(
         records, table, schema, value_schema=V_SCHEMA_K, key_schema=kschema
     )
     return routed.select("user_pk", "seq", "kcol")
@@ -566,7 +585,7 @@ def sink_raw_values(spark, sf_dir):
         [ColumnSpec("pk", "bigint", primary_key=True), ColumnSpec("etype", "string")],
     )
     table = TableConfig("events", "ks", "raw_table", parse_mapping("pk=key, etype=value"))
-    routed = run_sink_pipeline(records, table, schema)
+    routed = _sink(records, table, schema)
     return routed.select("pk", "etype")
 
 
@@ -588,7 +607,7 @@ def sink_now_timeuuid(spark, sf_dir):
         "events", "ks", "pk_value_with_timeuuid",
         parse_mapping("my_pk=key, loaded_at=now(), loaded_at2=now()"),
     )
-    routed = run_sink_pipeline(records, table, schema, value_schema=V_SCHEMA_K)
+    routed = _sink(records, table, schema, value_schema=V_SCHEMA_K)
     return routed.select("my_pk", "loaded_at", "loaded_at2")
 
 
@@ -699,5 +718,5 @@ def sink_codec_locale(spark, sf_dir):
         codec=CodecConfig(locale="fr_FR"),
     )
     vschema = StructType([StructField("v", StringType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vschema)
+    routed = _sink(records, table, schema, value_schema=vschema)
     return routed.select("pk", "parsed")

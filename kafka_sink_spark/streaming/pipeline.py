@@ -47,12 +47,13 @@ from the cache; under ignoreErrors=None/Driver the batch raises after the
 counts and before any write; the cache is released when the batch ends, on
 success or raise.
 
+With no writer, ``process_micro_batch`` returns each table's routed frame;
+the catalog's ``sink_*`` queries build their frames that way, so the
+oracle checks the stream's own per-batch body.
+
 Scale design: foreachBatch receives a distributed DataFrame; every stage here
-is declarative — the Column builders batch mode's ``decode_records`` /
-``compile_mapping`` / ``add_ttl_writetime`` / ``route_writes`` apply, so
-batch and stream share one definition — and a 1000-executor cluster runs
-the micro-batch exactly like a batch job: no driver-side loops, no collect
-of record data.
+is declarative, and a 1000-executor cluster runs the micro-batch exactly
+like a batch job: no driver-side loops, no collect of record data.
 """
 
 from __future__ import annotations

@@ -17,8 +17,8 @@ from kafka_sink_spark.operators.cassandra_writer import (
     statement_texts,
     write_routed,
 )
-from kafka_sink_spark.operators.writes import run_sink_pipeline
 from kafka_sink_spark.session import load_tables
+from kafka_sink_spark.streaming.pipeline import process_micro_batch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -74,6 +74,16 @@ def _read_log(log_dir):
     return lines
 
 
+def _sink(records, table, schema, vs):
+    """The routed frame of ``table``: one micro-batch of ``records`` through
+    ``process_micro_batch`` with no writer."""
+    out = process_micro_batch(
+        records, SinkConfig([table]), {(table.keyspace, table.table): schema},
+        value_schemas={table.topic: vs},
+    )
+    return out[f"{table.keyspace}.{table.table}"]
+
+
 def _routed(spark, null_every=None, deletes_enabled=True):
     events = load_tables(spark, SF_DIR, ("events",))["events"]
     value = F.concat(
@@ -99,7 +109,7 @@ def _routed(spark, null_every=None, deletes_enabled=True):
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     vs = StructType([StructField("k", IntegerType())])
-    return run_sink_pipeline(records, table, schema, value_schema=vs), table, schema
+    return _sink(records, table, schema, vs), table, schema
 
 
 def test_statement_texts_match_reference_shapes():
@@ -197,7 +207,7 @@ def test_writer_agrees_with_cql_statement_row_by_row(spark, tmp_path):
     for n, (table, schema) in enumerate(cases):
         log_dir = str(tmp_path / f"log{n}")
         os.makedirs(log_dir)
-        routed = run_sink_pipeline(records, table, schema, value_schema=vs)
+        routed = _sink(records, table, schema, vs)
         expected = Counter(
             r[0] for r in routed.select(cql_statement(table, schema)).collect()
         )
@@ -419,7 +429,7 @@ def test_provided_query_without_partition_key_columns(spark, tmp_path):
         query="INSERT INTO ks.t (a, b) VALUES (:x, :y)", deletes_enabled=False,
     )
     vs = StructType([StructField("f", IntegerType())])
-    routed = run_sink_pipeline(records, table, schema, value_schema=vs)
+    routed = _sink(records, table, schema, vs)
     cfg = SinkConfig(tables=[table], max_number_of_records_in_batch=32)
     stats = write_routed(routed, table, schema, cfg, _factory_for(log_dir))
 

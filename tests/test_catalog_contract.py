@@ -16,6 +16,7 @@ from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from kafka_sink_spark.plans import DRIVER_PRIORITY, ORACLES, QUERIES
 from kafka_sink_spark.session import load_tables
+from kafka_sink_spark.streaming.pipeline import SinkPlan
 
 DRIVER_WINDOW = 50  # rows the verify driver checks per round, in catalog order
 
@@ -41,6 +42,46 @@ def test_every_query_has_oracle_or_documented_exemption():
     exempt = {"sink_now_timeuuid"}
     no_oracle = set(QUERIES) - set(ORACLES) - exempt
     assert not no_oracle, f"queries without oracle_sql: {sorted(no_oracle)}"
+
+
+# sink_* queries that map no records: each certifies a codec, the Avro
+# decoder, the topic filter or the config parse alone.
+MAPS_NO_RECORDS = {
+    "sink_codec_temporals",
+    "sink_decimal_base64",
+    "sink_consistency_level",
+    "sink_topic_routing",
+    "sink_avro_union_decode",
+}
+
+
+class _SinkCalled(Exception):
+    pass
+
+
+def test_sink_queries_map_records_through_the_sink_plan(spark, sf_dir, monkeypatch):
+    """Every sink_* query that maps records builds its frames with the
+    stream's own per-batch body (``SinkPlan.run``), so the oracle certifies
+    the path a stream runs, not a second one. A stub that raises at the
+    first sink call stops each builder before its own jobs run; the
+    exempted queries must build without a sink call."""
+
+    def stub(self, *args, **kwargs):
+        raise _SinkCalled
+
+    monkeypatch.setattr(SinkPlan, "run", stub)
+    sink_queries = [q for q in QUERIES if q.startswith("sink_")]
+    assert MAPS_NO_RECORDS <= set(sink_queries)
+    wrong = []
+    for name in sink_queries:
+        try:
+            QUERIES[name](spark, sf_dir)
+            calls_sink = False
+        except _SinkCalled:
+            calls_sink = True
+        if calls_sink == (name in MAPS_NO_RECORDS):
+            wrong.append(name)
+    assert not wrong, f"sink queries off the sink path (or wrongly exempt): {wrong}"
 
 
 def test_load_tables_timestamps_are_ltz(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Unit tests for the codec layer (SURVEY §2.4) and remaining config surface:
-temporal patterns (C4), epoch units (C5), packed time (C6), collections
-(C8-C10), UDT construction and strict arity (C11-C13), decimal BASE64 sign
+temporal patterns (C4), epoch units (C5), packed time (C6), sets (C9),
+tuple construction and strict arity (C12/C13), decimal BASE64 sign
 handling (C16), defaults (C17), and global write-tuning keys (W9-W11)."""
 
 import datetime
@@ -83,16 +83,8 @@ def test_hhmmss_packed_time(spark):
     assert s == "17:12:32.584"
 
 
-def test_number_to_boolean(spark):
-    assert _one(spark, codecs.number_to_boolean(F.lit(37))) is True
-    assert _one(spark, codecs.number_to_boolean(F.lit(0))) is False
-    assert _one(spark, codecs.number_to_boolean(F.lit(None).cast("int"))) is None
-
-
 def test_collections(spark):
-    """C8/C9: JSON array string → list; array → sorted distinct set."""
-    arr = codecs.json_array_to_list(F.lit("[42, 37]"), "int")
-    assert _one(spark, arr) == [42, 37]
+    """C9: array → sorted distinct set, also nested."""
     assert _one(spark, codecs.array_to_set(F.array(F.lit(3), F.lit(1), F.lit(3)))) == [1, 3]
     nested = codecs.nested_array_to_set(
         F.array(F.array(F.lit(2), F.lit(2)), F.array(F.lit(5)))
@@ -101,10 +93,7 @@ def test_collections(spark):
 
 
 def test_udt_construction(spark):
-    """C11/C12/C14: map→UDT by name, list→tuple by position, coercion."""
-    m = F.create_map(F.lit("a"), F.lit(47), F.lit("b"), F.lit(90))
-    udt = _one(spark, codecs.map_to_udt(m, ["a", "b"], ["int", "string"]))
-    assert (udt["a"], udt["b"]) == (47, "90")  # int → text member coercion
+    """C12: list→tuple by position, with per-slot coercion."""
     tup = _one(
         spark,
         codecs.list_to_udt(

@@ -166,3 +166,51 @@ def test_codec_time_zone(spark):
     }
     assert got["UTC"] == {1: ("2018-03-09 17:12:32",), 2: ("2018-03-09 17:12:32",)}
     assert got["Europe/Paris"] == {1: ("2018-03-09 16:12:32",), 2: ("2018-03-09 17:12:32",)}
+
+
+A_VALUES = ['{"id": 1, "a": "[1,2,3]"}', '{"id": 2, "a": "nope"}']
+A_ARGS = ("id=value.id, arr=value.a", [ColumnSpec("arr", "array<int>")],
+          _value_schema(id=LongType(), a=StringType()))
+
+
+@pytest.mark.parametrize("policy", ["All", "None"])
+def test_json_array_string_onto_list(spark, policy):
+    """C8 (RawDataEndToEndCCMIT.java:150-162): a JSON array string maps onto
+    a list<int> column; text that is not a JSON array is a mapping error,
+    dead-lettered under All and raised before any write under None."""
+    if policy == "None":
+        calls = []
+        with pytest.raises(RuntimeError, match=f"1 record\\(s\\) failed mapping for {KEY}"):
+            _run(spark, A_VALUES, *A_ARGS, policy=policy, calls=calls)
+        assert calls == []
+        return
+    written, dead, metrics = _run(spark, A_VALUES, *A_ARGS, policy=policy)
+    assert written == {1: ([1, 2, 3],)}
+    assert dead == [1]
+    assert metrics.failed_record_count == {KEY: 1}
+
+
+def test_json_object_string_onto_udt_by_field_name(spark):
+    """C11/C14: a JSON object string maps onto a UDT by field name, each
+    member coerced to its type (int payload → text member,
+    StructEndToEndCCMIT.java:240-247); text that is not a JSON object of
+    that shape is a mapping error."""
+    values = ['{"id": 1, "u": "{\\"b\\": 90, \\"a\\": 47}"}', '{"id": 2, "u": "{\\"a\\": \\"x\\"}"}']
+    written, dead, _ = _run(
+        spark, values, "id=value.id, u=value.u", [ColumnSpec("u", "struct<a:int,b:string>")],
+        _value_schema(id=LongType(), u=StringType()), policy="All",
+    )
+    assert {k: tuple(v[0]) for k, v in written.items()} == {1: (47, "90")}
+    assert dead == [1]
+
+
+def test_number_onto_boolean_reads_nonzero_as_true(spark):
+    """A number mapped onto a boolean column: nonzero → true
+    (StructEndToEndCCMIT.java:234-238)."""
+    values = ['{"id": 1, "n": 37}', '{"id": 2, "n": 0}', '{"id": 3, "n": null}']
+    written, dead, _ = _run(
+        spark, values, "id=value.id, b=value.n", [ColumnSpec("b", "boolean")],
+        _value_schema(id=LongType(), n=LongType()),
+    )
+    assert written == {1: (True,), 2: (False,), 3: (None,)}
+    assert dead == []

@@ -23,7 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kafka_sink_spark.config import ColumnSpec, ConfigError, SinkConfig, TableConfig, TableSchema
 from kafka_sink_spark.mapping.compiler import compile_mapping
 from kafka_sink_spark.mapping.parser import parse_mapping
-from kafka_sink_spark.operators.writes import add_ttl_writetime, route_writes, run_sink_pipeline
+from kafka_sink_spark.operators.records import decode_records
+from kafka_sink_spark.operators.writes import add_ttl_writetime, route_writes
 from kafka_sink_spark.sources.avro import decode_avro_records
 from kafka_sink_spark.sources.avro_python import encode
 from kafka_sink_spark.streaming.pipeline import (
@@ -393,14 +394,15 @@ def _case(spark, name):
 def _wrapped(records, table, schema, vs, policy):
     """The same batch through the DataFrame wrappers."""
     if not isinstance(vs, str):
-        return run_sink_pipeline(records, table, schema, value_schema=vs)
-    permissive = policy == "All"
-    decoded = decode_avro_records(
-        records, vs,
-        options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
-        corrupt_col=AVRO_CORRUPT if permissive else None,
-    )
-    good, _bad = split_mapping_errors(decoded, table)
+        decoded = decode_records(records, value_schema=vs)
+    else:
+        permissive = policy == "All"
+        decoded = decode_avro_records(
+            records, vs,
+            options={"mode": "PERMISSIVE" if permissive else "FAILFAST"},
+            corrupt_col=AVRO_CORRUPT if permissive else None,
+        )
+    good, _bad = split_mapping_errors(decoded, table, schema)
     mapped = compile_mapping(good, table, schema)
     return route_writes(add_ttl_writetime(mapped, table), table, schema)
 

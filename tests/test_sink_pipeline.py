@@ -14,23 +14,27 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kafka_sink_spark.config import ColumnSpec, ConfigError, TableConfig, TableSchema, parse_sink_config
+from kafka_sink_spark.config import (
+    ColumnSpec,
+    ConfigError,
+    SinkConfig,
+    TableConfig,
+    TableSchema,
+    parse_sink_config,
+)
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.operators.records import decode_records
-from kafka_sink_spark.mapping.compiler import compile_mapping
 from kafka_sink_spark.operators.writes import (
     ROUTE_COL,
     ROUTE_DELETE,
     ROUTE_INSERT,
     TTL_COL,
     WRITETIME_COL,
-    add_ttl_writetime,
     cql_statement,
     partition_key_batches,
     replay_final_state,
-    route_writes,
-    run_sink_pipeline,
 )
+from kafka_sink_spark.streaming.pipeline import process_micro_batch
 
 TS = datetime.datetime(2024, 1, 1, 0, 0, 0, tzinfo=datetime.timezone.utc)
 
@@ -48,6 +52,16 @@ RECORD_SCHEMA = StructType(
 
 def records_df(spark, rows):
     return spark.createDataFrame(rows, RECORD_SCHEMA)
+
+
+def routed_frame(records, table, schema, value_schema=None):
+    """The frame the sink's writer gets for ``table``: one micro-batch
+    through ``process_micro_batch`` with no writer."""
+    out = process_micro_batch(
+        records, SinkConfig([table]), {(table.keyspace, table.table): schema},
+        value_schemas={table.topic: value_schema},
+    )
+    return out[f"{table.keyspace}.{table.table}"]
 
 
 SMALL_SIMPLE = TableSchema(
@@ -86,7 +100,7 @@ def test_json_value_mapping(spark):
             ("mytopic", 0, 1234, TS, "k1", '{"bigint": 1234567, "boolean": "true", "int": 42}'),
         ],
     )
-    out = run_sink_pipeline(df, table, SMALL_SIMPLE, value_schema=VALUE_SCHEMA)
+    out = routed_frame(df, table, SMALL_SIMPLE, value_schema=VALUE_SCHEMA)
     row = out.collect()[0]
     assert row["bigintcol"] == 1234567
     assert row["booleancol"] is True
@@ -139,7 +153,7 @@ def test_raw_value_mapping(spark):
         ],
     )
     df = records_df(spark, [("t", 0, 1, TS, "5725368", "true")])
-    out = run_sink_pipeline(df, table, schema)
+    out = routed_frame(df, table, schema)
     row = out.collect()[0]
     assert row["my_pk"] == 5725368
     assert row["my_value"] is True
@@ -166,7 +180,7 @@ def test_delete_on_null(spark):
         ],
     )
     table = TableConfig(topic="t", keyspace="ks", table="pk_value", mapping=parse_mapping(mapping))
-    out = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    out = routed_frame(df, table, schema, value_schema=vschema)
     routes = {r["my_pk"]: r[ROUTE_COL] for r in out.collect()}
     assert routes == {1: ROUTE_DELETE, 2: ROUTE_INSERT}
 
@@ -174,7 +188,7 @@ def test_delete_on_null(spark):
         topic="t", keyspace="ks", table="pk_value",
         mapping=parse_mapping(mapping), deletes_enabled=False,
     )
-    out2 = run_sink_pipeline(df, table_nodel, schema, value_schema=vschema)
+    out2 = routed_frame(df, table_nodel, schema, value_schema=vschema)
     routes2 = {r["my_pk"]: r[ROUTE_COL] for r in out2.collect()}
     assert routes2 == {1: ROUTE_INSERT, 2: ROUTE_INSERT}
 
@@ -195,7 +209,7 @@ def test_partial_mapping_never_deletes(spark):
         topic="t", keyspace="ks", table="t3", mapping=parse_mapping("pk=key, a=value.a")
     )
     df = records_df(spark, [("t", 0, 1, TS, "1", '{"a": null}')])
-    out = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    out = routed_frame(df, table, schema, value_schema=vschema)
     assert out.collect()[0][ROUTE_COL] == ROUTE_INSERT
 
 
@@ -224,7 +238,7 @@ def test_ttl_units_and_negative(spark):
             ("t", 0, 2, TS, "2", '{"v": 2, "ttlcol": -1000}'),
         ],
     )
-    out = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    out = routed_frame(df, table, schema, value_schema=vschema)
     ttls = {r["pk"]: r[TTL_COL] for r in out.collect()}
     assert ttls == {1: 1000, 2: 0}
 
@@ -248,7 +262,7 @@ def test_timestamp_unit_negative_passthrough(spark):
         timestamp_time_unit="MILLISECONDS",
     )
     df = records_df(spark, [("t", 0, 1, TS, "1", '{"v": 1, "tscol": -1000}')])
-    out = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    out = routed_frame(df, table, schema, value_schema=vschema)
     assert out.collect()[0][WRITETIME_COL] == -1_000_000
 
 
@@ -265,7 +279,7 @@ def test_static_table_ttl(spark):
         mapping=parse_mapping("pk=key, v=value.v"), ttl=100,
     )
     df = records_df(spark, [("t", 0, 1, TS, "1", '{"v": 1}')])
-    out = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    out = routed_frame(df, table, schema, value_schema=vschema)
     assert out.collect()[0][TTL_COL] == 100
 
 
@@ -300,7 +314,7 @@ def test_counter_replay(spark):
     df = records_df(
         spark, [("t", 0, 1, TS, None, payload), ("t", 0, 2, TS, None, payload)]
     )
-    routed = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    routed = routed_frame(df, table, schema, value_schema=vschema)
     assert routed.collect()[0][ROUTE_COL] == "UPDATE_COUNTER"
     final = replay_final_state(routed, schema)
     row = final.collect()[0]
@@ -334,7 +348,7 @@ def test_upsert_last_write_wins(spark):
             ("t", 0, 4, t1, "2", '{"v": null}'),     # later delete removes
         ],
     )
-    routed = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    routed = routed_frame(df, table, schema, value_schema=vschema)
     final = replay_final_state(routed, schema)
     rows = {r["my_pk"]: r["my_value"] for r in final.collect()}
     assert rows == {1: True}
@@ -359,7 +373,7 @@ def test_cql_statement_shapes(spark):
             ("t", 0, 2, TS, "2", '{"boolean": null, "int": null}'),
         ],
     )
-    routed = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    routed = routed_frame(df, table, schema, value_schema=vschema)
     stmts = {
         r["bigintcol"]: r["cql"]
         for r in routed.withColumn("cql", cql_statement(table, schema)).collect()
@@ -385,7 +399,7 @@ def test_partition_key_batching(spark):
     )
     rows = [("t", 0, i, TS, str(i % 3), '{"v": 1}') for i in range(100)]
     df = records_df(spark, rows)
-    routed = run_sink_pipeline(df, table, schema, value_schema=vschema)
+    routed = routed_frame(df, table, schema, value_schema=vschema)
     batches = partition_key_batches(routed, schema, max_batch=32)
     got = {r["routing_key"]: (r["n_statements"], r["n_frames"]) for r in batches.collect()}
     # keys 0,1: 34 and 33 statements → 2 frames; key 2: 33 → 2 frames
@@ -410,7 +424,7 @@ def test_now_function_distinct_per_column(spark):
         mapping=parse_mapping("my_pk=key, loaded_at=now(), loaded_at2=now()"),
     )
     df = records_df(spark, [("t", 0, 1, TS, "1", "x")])
-    out = run_sink_pipeline(df, table, schema)
+    out = routed_frame(df, table, schema)
     row = out.collect()[0]
     import re
 
@@ -442,7 +456,7 @@ def test_now_function_timestamps_in_window(spark):
     )
     df = records_df(spark, [("t", 0, i, TS, str(i), "x") for i in range(50)])
     t0 = uuid_mod.uuid1().time
-    rows = run_sink_pipeline(df, table, schema).collect()
+    rows = routed_frame(df, table, schema).collect()
     t1 = uuid_mod.uuid1().time
     vals = [r["loaded_at"] for r in rows] + [r["loaded_at2"] for r in rows]
     assert len(set(vals)) == 2 * len(rows)
