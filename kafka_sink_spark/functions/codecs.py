@@ -17,6 +17,7 @@ import functools
 import re
 from decimal import Decimal as PyDecimal
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,7 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from kafka_sink_spark.config import LOCALE_SEPS
+from kafka_sink_spark.config import LOCALE_SEPS, ConfigError
 
 # --- the one conversion entry point ----------------------------------------
 
@@ -68,11 +69,13 @@ def convert(source: Column, source_type: DataType, target_type: str, codec) -> C
       pattern, zone-less text read in ``codec.timeZone`` (C4);
     - string → number: ``codec.locale`` separators (C3);
     - string → array / map / struct: the text read as JSON (C8/C10/C11);
+    - struct → struct (UDT): each target field by name, converted from the
+      source field of that name; a field the source lacks is null (C11/C14);
     - geo / daterange: validated passthrough (C15);
-    - anything else: ``try_cast`` (C1/C2; a struct onto a struct column is
-      Spark's struct cast — field by field in order, each coerced, C11/C14).
+    - anything else: ``try_cast`` (C1/C2).
 
-    A value the conversion cannot read comes out null.
+    A value the conversion cannot read comes out null. A pair of types that
+    no conversion reads (one Spark cannot cast) raises ``ConfigError``.
     """
     name = target_type.strip().lower()
     if name == DATERANGE_TARGET:
@@ -91,7 +94,40 @@ def convert(source: Column, source_type: DataType, target_type: str, codec) -> C
             return parse_number_locale(source, codec.locale, target_type)
         if isinstance(target, (ArrayType, MapType, StructType)):
             return _parse_json(source, target)
+    if isinstance(source_type, StructType) and isinstance(target, StructType):
+        return _struct_by_name(source, source_type, target, codec)
+    if not _can_try_cast(source_type, target):
+        raise ConfigError(f"no conversion from {source_type.simpleString()} to {target_type}")
     return source.try_cast(target_type)
+
+
+def _struct_by_name(source: Column, source_type: StructType, target: StructType, codec) -> Column:
+    """A struct onto a struct (UDT) type, field by field by name: each
+    target field from the source field of that name through :func:`convert`
+    (as is when its type already matches), null when the source has no such
+    field; a null source stays null. Spark's own struct cast pairs fields by
+    position."""
+    have = {f.name: f.dataType for f in source_type.fields}
+    fields = []
+    for field in target.fields:
+        ddl = field.dataType.simpleString()
+        if field.name not in have:
+            value = F.lit(None).cast(field.dataType)
+        elif same_type(have[field.name], ddl):
+            value = source.getField(field.name)
+        else:
+            value = convert(source.getField(field.name), have[field.name], ddl, codec)
+        fields.append(value.alias(field.name))
+    return F.when(source.isNotNull(), F.struct(*fields))
+
+
+def _can_try_cast(source_type: DataType, target: DataType) -> bool:
+    """Whether Spark's ``try_cast`` accepts ``source_type`` → ``target``,
+    asked of Spark's own cast rules (the analyzer rejects the rest)."""
+    jvm = SparkContext._jvm
+    to_jvm = jvm.org.apache.spark.sql.types.DataType.fromJson
+    cast = jvm.org.apache.spark.sql.catalyst.expressions.Cast
+    return cast.canTryCast(to_jvm(source_type.json()), to_jvm(target.json()))
 
 
 # --- C1/C2: numeric width / boolean / string casts -------------------------

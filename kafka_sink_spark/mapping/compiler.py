@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StringType, StructType
 
-from kafka_sink_spark.config import TableConfig, TableSchema
+from kafka_sink_spark.config import ConfigError, TableConfig, TableSchema
 from kafka_sink_spark.functions import codecs
 from kafka_sink_spark.functions.timeuuid import now_timeuuid
 from kafka_sink_spark.mapping.parser import (
@@ -74,13 +74,14 @@ def _source(
     return F.col(parsed).getField(entry.path), field.dataType
 
 
-def _conversions(
+def conversions(
     record_schema: StructType, table: TableConfig, schema: TableSchema | None
-) -> list[tuple[Column, Column | None]]:
-    """Per mapping entry: its output column, converted to its target type by
-    ``codecs.convert`` under the table's codec settings, and the flag of a
-    failed conversion — source not null, result null — or None when the
-    source already has the target type (nothing can fail)."""
+) -> list[tuple[str, Column, Column | None]]:
+    """Per mapping entry: its output column, its source value, and that value
+    converted to its target type by ``codecs.convert`` under the table's
+    codec settings — None when the source already has the target type
+    (nothing to convert, so nothing can fail). A pair that no conversion
+    can read is a ``ConfigError`` naming the entry."""
     types = {f.name: f.dataType for f in record_schema.fields}
     out = []
     for entry in table.mapping:
@@ -92,10 +93,16 @@ def _conversions(
             target = None if col_spec is None else col_spec.spark_type
         source, source_type = _source(types, entry, target)
         if target is None or codecs.same_type(source_type, target):
-            out.append((source.alias(name), None))
+            out.append((name, source, None))
             continue
-        value = codecs.convert(source, source_type, target, table.codec)
-        out.append((value.alias(name), source.isNotNull() & value.isNull()))
+        try:
+            value = codecs.convert(source, source_type, target, table.codec)
+        except ConfigError as e:
+            raise ConfigError(
+                f"{table.keyspace}.{table.table}: column {entry.column} ({target}) cannot "
+                f"take {entry.source_name} ({source_type.simpleString()}): {e}"
+            ) from None
+        out.append((name, source, value))
     return out
 
 
@@ -123,25 +130,25 @@ def mapping_columns(
     each value whose type differs from its table column's converts through
     ``codecs.convert`` with the table's ``codec.*`` settings (SURVEY §2.4
     C1–C5, C15); a value the conversion cannot read comes out null, and
-    :func:`conversion_errors` flags that record as a mapping error. Special
+    the sink flags that record as a mapping error. Special
     targets ``__ttl`` / ``__timestamp`` come out as ``_mapped_ttl`` /
     ``_mapped_timestamp`` doubles, converted the same way (the unit
-    conversion happens in operators.writes). Record metadata columns ride
-    along as ``_kafka_*`` for the write stage (routing, record-timestamp
-    writetime).
+    conversion happens in operators.writes).
     """
-    select = [value for value, _ in _conversions(record_schema, table, schema)]
+    values = conversions(record_schema, table, schema)
+    return select_list(
+        record_schema, [(name, src if v is None else v) for name, src, v in values]
+    )
+
+
+def select_list(record_schema: StructType, values: list[tuple[str, Column]]) -> list[Column]:
+    """The mapping's select list over a frame of ``record_schema``: each
+    ``(name, value)`` as its output column, then the record metadata columns
+    as ``_kafka_*`` for the write stage (routing, record-timestamp
+    writetime)."""
+    select = [value.alias(name) for name, value in values]
     cols = set(record_schema.fieldNames())
     for meta in ("topic", "partition", "offset", "timestamp"):
         if meta in cols:
             select.append(F.col(meta).alias(f"_kafka_{meta}"))
     return select
-
-
-def conversion_errors(
-    record_schema: StructType, table: TableConfig, schema: TableSchema | None
-) -> list[Column]:
-    """The failed-conversion flag of each entry of :func:`mapping_columns`
-    whose conversion can fail, over the same decoded record frame."""
-    flags = [failed for _, failed in _conversions(record_schema, table, schema)]
-    return [failed for failed in flags if failed is not None]

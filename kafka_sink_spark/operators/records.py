@@ -84,6 +84,7 @@ def decode_stages(
     parse, then the parsed/literal namespace columns."""
     types = {f.name: f.dataType for f in schema.fields}
     parse: dict[str, Column] = {}
+    staged: list[StructField] = []  # the columns ``parse`` adds
     derive: dict[str, Column] = {}
     for col_name, side_schema, parsed_name, literal_name in (
         ("key", key_schema, KEY_PARSED, KEY_LITERAL),
@@ -102,6 +103,7 @@ def decode_stages(
             )
             raw_name = f"_{col_name}_parsed_raw"
             # Stage 1: parse once.
+            staged.append(StructField(raw_name, schema_with_corrupt))
             parse[raw_name] = F.from_json(
                 source.cast("string"),
                 schema_with_corrupt,
@@ -117,8 +119,12 @@ def decode_stages(
                 source.isNotNull() & is_corrupt, source.cast("string")
             ).otherwise(F.lit(None))
         # Raw mode: no namespace columns; the compiler reads the bare column.
-    stages = [project(schema, parse)] if parse else []
-    return stages + ([project(schema, derive)] if derive else [])
+    if not parse:
+        return [project(schema, derive)] if derive else []
+    # Stage 2 drops the staged parse: nothing downstream reads it, and a
+    # persisted decoded frame would otherwise hold each payload twice.
+    parsed = StructType(list(schema.fields) + staged)
+    return [project(schema, parse), project(parsed, derive, drop=tuple(parse))]
 
 
 def decode_records(

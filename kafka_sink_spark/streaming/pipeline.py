@@ -20,32 +20,29 @@ Reference semantics mapped (SURVEY §2.8):
 - fail-fast startup: mappings validated against table schemas BEFORE the
   stream starts (reference: SimpleEndToEndSimulacronIT.java:286-315).
 
-Compiled once per stream (``SinkPlan``): a stream's record schema is fixed
-for the life of its query, so ``start_sink_stream`` builds the whole
-per-batch chain once, from the config, the table schemas, the value/key
-schemas and the stream's record schema — each topic's decode projections,
-each table's mapping-error condition and its mapping → ttl/writetime →
-route select lists, the unknown-topic count and each topic's aggregate
-— and validates every mapping. A trigger then only applies these
-name-based Column lists; it builds no Column, probes no stage schema and
-validates nothing. ``process_micro_batch`` is the same body behind a
-compile of its own.
+Compiled once per stream (``SinkPlan``): ``start_sink_stream`` builds the
+whole per-batch chain once, from the config, the table schemas, the
+value/key schemas and the stream's record schema, and validates every
+mapping; a trigger only applies its name-based Column lists.
+``process_micro_batch`` is the same body behind a compile of its own.
 
 Single pass per micro-batch: each trigger runs an incrementalized batch
-job, so every Spark job and every re-scan of the batch is paid per trigger.
-The batch therefore decodes each topic once, whatever the number of tables
-fanned out from it:
+job, so every Spark job, every re-scan of the batch and every per-row
+expression evaluated twice is paid per trigger. Per topic:
 
-    (compile once) → decode per topic → persist → one count job
-    → dead letters → writes → release
+    (compile once) → decode → converted values → mapping-error flags
+    → persist → one count job → dead letters → writes → release
 
-One aggregate per topic counts its rows and every table's mapping errors
-and fills the cache; its scan of the batch also counts the unknown-topic
-records, through an ``Observation`` on the batch frame, so no other job
-reads the batch. The dead-letter sink and the writer read decoded rows
-from the cache; under ignoreErrors=None/Driver the batch raises after the
-counts and before any write; the cache is released when the batch ends, on
-success or raise.
+A topic's cache holds its decoded rows, every table's converted values and
+every table's mapping-error flag, each computed once per row. One
+aggregate per topic counts its rows and each table's flag and fills the
+cache; its scan of the batch also counts the unknown-topic records,
+through an ``Observation`` on the batch frame, so no other job reads the
+batch. The dead-letter sink and the writer read the cache: the filters
+read a table's flag and its mapping reads its converted values by name.
+Under ignoreErrors=None/Driver the batch raises after the counts and
+before any write; the cache is released when the batch ends, on success
+or raise.
 
 With no writer, ``process_micro_batch`` returns each table's routed frame;
 the catalog's ``sink_*`` queries build their frames that way, so the
@@ -68,12 +65,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kafka_sink_spark.config import ConfigError, SinkConfig, TableConfig, TableSchema
-from kafka_sink_spark.mapping.compiler import conversion_errors, mapping_columns
+from kafka_sink_spark.mapping.compiler import conversions, select_list
 from kafka_sink_spark.operators.records import (
     KEY_LITERAL,
     RAW_FIELD,
     VALUE_LITERAL,
     apply_stages,
+    column,
     decode_stages,
     project,
 )
@@ -91,11 +89,10 @@ def mapping_error_column(
     """The one definition of a mapping error, over a decoded record frame of
     ``decoded_schema``: a record whose key or value failed the typed decode,
     or, given the table's ``schema``, one with a mapped value that failed its
-    conversion to the column type (``mapping_columns`` →
-    ``codecs.convert``: source not null, result null) — the reference's
-    per-record mapping error (CassandraSinkTask.java:128-141: rewound under
-    None/Driver, skipped and counted under All). ``None`` when ``table``
-    cannot hit one.
+    conversion to the column type (``conversions`` → ``codecs.convert``:
+    source not null, result null) — the reference's per-record mapping error
+    (CassandraSinkTask.java:128-141: rewound under None/Driver, skipped and
+    counted under All). ``None`` when ``table`` cannot hit one.
 
     A record errors on a side (key/value) only when the mapping addresses
     typed ``<side>.<field>`` paths AND has no whole-``<side>`` entry AND that
@@ -106,31 +103,36 @@ def mapping_error_column(
     (MetadataCreatorTest.java:104-116). A permissive Avro decode's corrupt
     flag (``AVRO_CORRUPT``) is a mapping error for every table on the topic.
     """
+    return _mapped(decoded_schema, table, schema)[0]
+
+
+def _mapped(
+    decoded_schema: StructType,
+    table: TableConfig,
+    schema: TableSchema | None,
+    cache: dict[str, Column] | None = None,
+    tag: int = 0,
+) -> tuple[Column | None, list[tuple[str, Column]]]:
+    """A table's :func:`mapping_error_column` and its ``(name, value)``
+    mapping entries, from one walk of its ``conversions``. Given ``cache``,
+    each converted value goes into it as ``_conv<tag>_<i>``, and the
+    condition and the entries read it from there by name."""
     columns = set(decoded_schema.fieldNames())
-
-    def errors_on(ns: str, literal_col: str):
-        typed = any(
-            e.namespace == ns and e.path not in (None, RAW_FIELD)
-            for e in table.mapping
-        )
-        whole = any(
-            e.namespace == ns and e.path in (None, RAW_FIELD)
-            for e in table.mapping
-        )
-        if typed and not whole and literal_col in columns:
-            return F.col(literal_col).isNotNull()
-        return None
-
-    conds = [
-        c
-        for c in (
-            F.col(AVRO_CORRUPT) if AVRO_CORRUPT in columns else None,
-            errors_on("value", VALUE_LITERAL),
-            errors_on("key", KEY_LITERAL),
-        )
-        if c is not None
-    ] + conversion_errors(decoded_schema, table, schema)
-    return functools.reduce(operator.or_, conds) if conds else None
+    conds = [F.col(AVRO_CORRUPT)] if AVRO_CORRUPT in columns else []
+    for ns, literal_col in (("value", VALUE_LITERAL), ("key", KEY_LITERAL)):
+        whole = [e.path in (None, RAW_FIELD) for e in table.mapping if e.namespace == ns]
+        # Typed paths only: a whole-side entry accepts the literal fallback.
+        if whole and not any(whole) and literal_col in columns:
+            conds.append(F.col(literal_col).isNotNull())
+    entries = []
+    for i, (name, source, value) in enumerate(conversions(decoded_schema, table, schema)):
+        if value is not None:
+            if cache is not None:
+                cache[f"_conv{tag}_{i}"] = value
+                value = F.col(f"_conv{tag}_{i}")
+            conds.append(source.isNotNull() & value.isNull())  # a failed conversion
+        entries.append((name, source if value is None else value))
+    return (functools.reduce(operator.or_, conds) if conds else None), entries
 
 
 def split_mapping_errors(
@@ -165,24 +167,23 @@ def _decode_stages(spark: SparkSession, schema: StructType, vs: object, ks: obje
 
 @dataclass(frozen=True)
 class _TablePlan:
-    """One table's compiled stages over its topic's decoded frame."""
+    """One table's compiled stages over its topic's cached frame."""
 
     table: TableConfig
     schema: TableSchema
     key: str  # metric key, 'topic|ks.table'
     name: str  # 'ks.table'
-    errors: Column | None  # mapping_error_column; None: cannot error
-    good: Column | None  # its negation
-    dead: list[Column] | None  # drops the AVRO_CORRUPT flag, when there is one
-    mapping: list[Column]  # mapping_columns
+    flag: str  # its mapping-error flag column in the cache
+    dead: list[Column]  # the decoded columns, without AVRO_CORRUPT
+    mapping: list[Column]  # select_list over the cache
     route: list[Column]  # ttl_route_columns over the mapped frame
 
 
 @dataclass(frozen=True)
 class _TopicPlan:
-    """One topic's compiled stages: its records, their decode, its tables'
-    plans, and the one aggregate over the decoded rows (row count, then
-    each table's mapping-error count)."""
+    """One topic's compiled stages: its records, their decode and cached
+    conversions, its tables' plans, and the one aggregate over the cached
+    rows (row count, then each table's mapping-error count)."""
 
     records: Column
     decode: list
@@ -195,13 +196,19 @@ class SinkPlan:
 
     A stream's record schema is fixed for the life of the query, so the
     decode → mapping → ttl/writetime → route chain, the mapping-error
-    conditions, the unknown-topic metric and every topic's aggregate are
-    built once, as name-based Column lists, when the plan is made — the
-    reference compiles each table's RecordMapper once at task start
-    (SURVEY §3.3). :meth:`run` then only applies them: per topic a filter,
-    the decode projections, a persist and one aggregate; per table a filter
-    and two projections. Building the same chain per batch cost ~2,000 py4j
-    round trips on a two-table fan-out.
+    flags, the unknown-topic metric and every topic's aggregate are built
+    once, as name-based Column lists, when the plan is made — the reference
+    compiles each table's RecordMapper once at task start (SURVEY §3.3).
+    :meth:`run` then only applies them: per topic a filter, the decode
+    projections, a persist and one aggregate; per table a filter and two
+    projections. Building the same chain per batch cost ~2,000 py4j round
+    trips on a two-table fan-out.
+
+    Each conversion is built once and evaluated once per row: the stages a
+    topic persists end with every table's converted values, then each
+    table's mapping-error flag over them by name. The aggregate counts the
+    flags, the good-row and dead-letter filters read them, and a mapping
+    reads its converted values from the cache.
 
     :meth:`run` is the one place that applies ``ignoreErrors``; the stages
     it applies are the same under every policy.
@@ -247,33 +254,30 @@ class SinkPlan:
                 spark, record_schema, self.value_schemas.get(topic), self.key_schemas.get(topic)
             )
             decoded = apply_stages(empty, stages)
-            plans = [self._table_plan(t, decoded) for t in tables]
-            counts = [F.count(F.lit(1))] + [
-                F.count_if(F.lit(False) if p.errors is None else p.errors) for p in plans
+            values: dict[str, Column] = {}
+            flags, mappings = {}, []
+            for t, table in enumerate(tables):
+                schema = self.schemas[(table.keyspace, table.table)]
+                flag, entries = _mapped(decoded.schema, table, schema, values, t)
+                flags[f"_error{t}"] = F.lit(False) if flag is None else flag
+                mappings.append(select_list(decoded.schema, entries))
+            # The values in one projection, the flags over them by name in
+            # the next: Spark does not merge two projections when that would
+            # repeat a value, so each conversion runs once per row.
+            cache = ([project(decoded.schema, values)] if values else []) + [
+                project(decoded.schema, flags)
             ]
-            self.topics.append(_TopicPlan(F.col("topic") == topic, stages, plans, counts))
-
-    def _table_plan(self, table: TableConfig, decoded: DataFrame) -> _TablePlan:
-        """One table's stages over its topic's (empty, analyzed) decoded frame."""
-        schema = self.schemas[(table.keyspace, table.table)]
-        errors = mapping_error_column(decoded.schema, table, schema)
-        mapping = mapping_columns(decoded.schema, table, schema)
-        name = f"{table.keyspace}.{table.table}"
-        return _TablePlan(
-            table=table,
-            schema=schema,
-            key=metric_key(table.topic, name),
-            name=name,
-            errors=errors,
-            good=None if errors is None else ~errors,
-            dead=(
-                project(decoded.schema, drop=(AVRO_CORRUPT,))
-                if AVRO_CORRUPT in decoded.columns
-                else None
-            ),
-            mapping=mapping,
-            route=ttl_route_columns(decoded.select(*mapping).schema, table, schema),
-        )
+            cached = apply_stages(decoded, cache)
+            dead = [column(c) for c in decoded.columns if c != AVRO_CORRUPT]
+            plans = []
+            for flag, table, mapping in zip(flags, tables, mappings):
+                schema = self.schemas[(table.keyspace, table.table)]
+                name = f"{table.keyspace}.{table.table}"
+                route = ttl_route_columns(cached.select(*mapping).schema, table, schema)
+                key = metric_key(table.topic, name)
+                plans.append(_TablePlan(table, schema, key, name, flag, dead, mapping, route))
+            counts = [F.count(F.lit(1))] + [F.count_if(F.col(flag)) for flag in flags]
+            self.topics.append(_TopicPlan(F.col("topic") == topic, stages + cache, plans, counts))
 
     def run(
         self,
@@ -318,12 +322,11 @@ class SinkPlan:
                     )
                 metrics.bump(plan.key, n_bad, failed=True)
                 if error_sink is not None:
-                    bad = decoded.filter(plan.errors)
-                    error_sink(bad if plan.dead is None else bad.select(*plan.dead), plan.table)
+                    error_sink(decoded.filter(plan.flag).select(*plan.dead), plan.table)
 
             out: dict[str, DataFrame] = {}
-            for plan, decoded, n_good, _n_bad in splits:
-                good = decoded if plan.good is None else decoded.filter(plan.good)
+            for plan, decoded, n_good, n_bad in splits:
+                good = decoded.filter(f"NOT {plan.flag}") if n_bad else decoded
                 routed = good.select(*plan.mapping).select(*plan.route)
                 # S3 fan-in: several topics may map into one table, each with
                 # its own mapping, so their column sets may differ.
@@ -383,12 +386,12 @@ def process_micro_batch(
 
     1. decode per topic: tables on one topic share its value/key schema, so
        they share one decoded frame;
-    2. persist each topic's decoded frame;
+    2. persist it with every table's converted values and mapping-error
+       flag (:func:`mapping_error_column`: decode failures and failed value
+       conversions);
     3. one count job per topic: a single aggregate computes the topic's row
-       count and every table's mapping-error count
-       (:func:`mapping_error_column`: decode failures and failed value
-       conversions) and fills the cache; the first one
-       also counts the unknown-topic records, which are never written
+       count and every table's mapping-error count and fills the cache; the
+       first one also counts the unknown-topic records, which are never written
        (SimpleEndToEndSimulacronIT.java:740-755). Under
        ignoreErrors=None/Driver any mapping error raises here, before any
        table is written, so Spark's retry rewinds the offsets with nothing

@@ -8,17 +8,22 @@ import datetime
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
 
 from kafka_sink_spark.config import (
     CodecConfig,
     ColumnSpec,
+    ConfigError,
     SinkConfig,
     TableConfig,
     TableSchema,
 )
 from kafka_sink_spark.mapping.parser import parse_mapping
-from kafka_sink_spark.streaming.pipeline import SinkMetrics, process_micro_batch
+from kafka_sink_spark.streaming.pipeline import (
+    SinkMetrics,
+    process_micro_batch,
+    start_sink_stream,
+)
 
 RECORD_DDL = (
     "topic string, partition int, offset long, timestamp timestamp, key string, "
@@ -202,6 +207,51 @@ def test_json_object_string_onto_udt_by_field_name(spark):
     )
     assert {k: tuple(v[0]) for k, v in written.items()} == {1: (47, "90")}
     assert dead == [1]
+
+
+def test_struct_onto_udt_by_field_name(spark):
+    """C11: a decoded struct maps onto a UDT by field name, each member
+    converted to its type (int → text member); a member the struct lacks is
+    null, and a null struct stays null. Spark's own struct cast pairs
+    fields by position: it reads ``{"b": 90, "a": 47}`` as a=90, b='47'."""
+    values = ['{"id": 1, "u": {"b": 90, "a": 47}}', '{"id": 2, "u": {"b": 5}}',
+              '{"id": 3, "u": null}']
+    u_type = StructType([StructField("b", LongType()), StructField("a", LongType())])
+    written, dead, metrics = _run(
+        spark, values, "id=value.id, u=value.u",
+        [ColumnSpec("u", "struct<a:int,b:string,c:date>")],
+        _value_schema(id=LongType(), u=u_type), policy="All",
+    )
+    assert {k: v[0] and tuple(v[0]) for k, v in written.items()} == {
+        1: (47, "90", None), 2: (None, "5", None), 3: None,
+    }
+    assert dead == []
+    assert metrics.failed_record_count == {}
+
+
+def test_unconvertible_pair_fails_before_stream_starts(spark, tmp_path):
+    """A mapped value of a type no conversion reads (a map onto a UDT) is
+    refused when the stream's plan is compiled: ``ConfigError`` from
+    ``start_sink_stream`` itself, naming the table, the column and both
+    types, and no query starts."""
+    src = tmp_path / "records"
+    src.mkdir()
+    table = TableConfig("t1", "ks", "t", parse_mapping("id=value.id, u=value.m"))
+    schema = TableSchema(
+        "ks", "t",
+        [ColumnSpec("id", "bigint", primary_key=True), ColumnSpec("u", "struct<a:int,b:string>")],
+    )
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(
+        ConfigError, match=r"ks\.t: column u \(struct<a:int,b:string>\).*map<string,bigint>"
+    ):
+        start_sink_stream(
+            spark, spark.readStream.schema(RECORD_DDL).parquet(str(src)),
+            SinkConfig(tables=[table]), {("ks", "t"): schema}, str(tmp_path / "ckpt"),
+            lambda *a: None,
+            value_schemas=_value_schema(id=LongType(), m=MapType(StringType(), LongType())),
+        )
+    assert {q.id for q in spark.streams.active} == active
 
 
 def test_number_onto_boolean_reads_nonzero_as_true(spark):

@@ -16,11 +16,18 @@ from collections import Counter
 import pytest
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_sink_spark.config import ColumnSpec, ConfigError, SinkConfig, TableConfig, TableSchema
+from kafka_sink_spark.config import (
+    CodecConfig,
+    ColumnSpec,
+    ConfigError,
+    SinkConfig,
+    TableConfig,
+    TableSchema,
+)
 from kafka_sink_spark.mapping.compiler import compile_mapping
 from kafka_sink_spark.mapping.parser import parse_mapping
 from kafka_sink_spark.operators.records import decode_records
@@ -369,6 +376,23 @@ def _case(spark, name):
             ),
             PK_KCOL, vs, "None",
         )
+    if name == "locale_temporal":
+        values = [f'{{"k": {i}, "amount": "1 23{i},5", "at": "2024-01-0{i + 1}T03:04:05"}}'
+                  for i in range(6)]
+        vs = StructType(
+            [StructField("k", IntegerType()), StructField("amount", StringType()),
+             StructField("at", StringType())]
+        )
+        return (
+            spark.createDataFrame(_json_rows(values), RECORD_DDL),
+            TableConfig(
+                "t", "ks", "tbl", parse_mapping("pk=key, kcol=value.k, amount=value.amount, "
+                                                "at=value.at"),
+                codec=CodecConfig(locale="fr_FR"),
+            ),
+            PK_KCOL + [ColumnSpec("amount", "double"), ColumnSpec("at", "timestamp")],
+            vs, "None",
+        )
     if name == "provided":
         return (
             spark.createDataFrame(_json_rows(k), RECORD_DDL),
@@ -410,7 +434,7 @@ def _wrapped(records, table, schema, vs, policy):
 @pytest.mark.parametrize(
     "name",
     ["json_literal", "raw", "avro_permissive", "avro_failfast", "header", "now",
-     "ttl_timestamp", "provided"],
+     "ttl_timestamp", "locale_temporal", "provided"],
 )
 def test_compiled_plan_matches_dataframe_wrappers(spark, name):
     """The frame a stream's compiled plan hands the writer has the columns
@@ -445,6 +469,107 @@ def test_compiled_plan_matches_dataframe_wrappers(spark, name):
         v1 = r"^[0-9a-f]{8}-[0-9a-f]{4}-1[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$"
         assert all(re.match(v1, r["id"]) for r in seen["rows"])
     assert seen["plan"].count("from_json") == (0 if vs is None or isinstance(vs, str) else 1)
+
+
+FR_VALUES = [
+    '{"a": "1 234,5", "b": "2,5", "at": "2024-01-02T03:04:05Z"}',
+    '{"a": "abc", "b": "1", "at": "2024-01-02 03:04:05"}',
+    '{"a": "3", "b": "zz", "at": "2024-01-02"}',
+    '{"a": "x", "b": "7", "at": "not a time"}',
+    '{"a": null, "b": null, "at": null}',
+    '{"a": "-0,25", "b": "1 000", "at": "2024-02-29T12:00:00+01:00"}',
+]
+
+
+def _fr_fanout(spark):
+    """(records, plan) of one fr_FR topic fanned out to two tables under
+    All, each with a conversion that fails on some records: ``ks.amounts``
+    maps the comma decimal ``a``; ``ks.events`` the comma decimal ``b`` and
+    the ISO timestamp ``at``. The text key maps onto a text column."""
+    fr = CodecConfig(locale="fr_FR")
+    amounts = TableConfig("fr", "ks", "amounts", parse_mapping("pk=key, a=value.a"), codec=fr)
+    events = TableConfig(
+        "fr", "ks", "events", parse_mapping("pk=key, b=value.b, at=value.at"), codec=fr
+    )
+    pk = ColumnSpec("pk", "string", primary_key=True)
+    schemas = {
+        ("ks", "amounts"): TableSchema("ks", "amounts", [pk, ColumnSpec("a", "double")]),
+        ("ks", "events"): TableSchema(
+            "ks", "events", [pk, ColumnSpec("b", "double"), ColumnSpec("at", "timestamp")]
+        ),
+    }
+    records = spark.createDataFrame(
+        [("fr", 0, i, TS, str(i), v) for i, v in enumerate(FR_VALUES)], RECORD_DDL
+    )
+    vs = StructType([StructField(n, StringType()) for n in ("a", "b", "at")])
+    plan = SinkPlan(
+        spark, records.schema, SinkConfig(tables=[amounts, events], ignore_errors="All"),
+        schemas, value_schemas={"fr": vs},
+    )
+    return records, plan
+
+
+def test_two_tables_with_failing_conversions_on_one_topic(spark):
+    """Under All, each table on the topic counts, dead-letters and drops
+    its own failed conversions (record 3 fails both), and writes the rest;
+    a dead letter carries the decoded columns, without the staged JSON
+    parse or the cache's converted values and flags."""
+    records, plan = _fr_fanout(spark)
+    routed, dead = {}, {}
+
+    def writer(frame, table, schema):
+        mapped = [c.name for c in schema.columns] + ["_route"]
+        routed[table.table] = sorted(tuple(r) for r in frame.select(*mapped).collect())
+
+    def error_sink(bad, table):
+        dead[table.table] = (bad.columns, sorted(r["offset"] for r in bad.collect()))
+
+    metrics = SinkMetrics()
+    plan.run(records, writer=writer, metrics=metrics, error_sink=error_sink)
+    assert metrics.record_count == {"fr|ks.amounts": 4, "fr|ks.events": 4}
+    assert metrics.failed_record_count == {"fr|ks.amounts": 2, "fr|ks.events": 2}
+    columns = ["topic", "partition", "offset", "timestamp", "key", "value",
+               "_value_parsed", "_value_literal"]
+    assert dead == {"amounts": (columns, [1, 3]), "events": (columns, [2, 3])}
+    at = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    assert routed == {
+        "amounts": [("0", 1234.5, "INSERT"), ("2", 3.0, "INSERT"), ("4", None, "DELETE"),
+                    ("5", -0.25, "INSERT")],
+        "events": [("0", 2.5, at, "INSERT"), ("1", 1.0, at, "INSERT"),
+                   ("4", None, None, "DELETE"),
+                   ("5", 1000.0, datetime.datetime(2024, 2, 29, 11, 0), "INSERT")],
+    }
+
+
+def test_each_conversion_runs_once_in_the_cache(spark):
+    """Every job of a batch (the topic aggregate, each table's dead-letter
+    count and write) shows each converting entry's conversion once, in the
+    projection its topic persists: never in the filters or the mapping
+    above the cache, where it would run again for every row it reads."""
+    records, plan = _fr_fanout(spark)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    marker = "test-each-conversion-runs-once"
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    sc.setJobDescription(marker)
+    try:
+        plan.run(records, writer=_noop_writer([]), error_sink=_counting_error_sink([]))
+    finally:
+        sc.setJobDescription(None)
+        spark.conf.unset("spark.sql.ui.explainMode")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = store.executionsCount()
+    executions = store.executionsList(max(0, n - 20), 20)
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+        if executions.apply(i).description() == marker
+    ]
+    assert len(plans) == 5  # aggregate, two dead-letter counts, two writes
+    for text in plans:
+        final = text.split("== Initial Plan ==")[0]  # AQE prints both
+        assert final.count("translate(") == 2, final
+        assert "translate(" not in final.split("InMemoryRelation")[0], final
 
 
 def test_batch_of_another_schema_recompiles_the_plan(spark):
